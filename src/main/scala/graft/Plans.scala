@@ -1,7 +1,20 @@
 package graft
-import java.nio.file.{Files, Paths}
-/** Diagnostic main: dumps `explain("formatted")` for the headline
-  * queries to target/plans.txt — the plan-audit loop behind BASELINE.md.
+import java.nio.file.{Files, Path, Paths}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.FormattedMode
+
+/** Diagnostic main: dumps `explain("formatted")` plans — the plan-audit
+  * loop behind BASELINE.md and the per-round evidence files under
+  * `plans/`.
+  *
+  *   runMain graft.Plans
+  *     → target/plans.txt: the headline queries over sf0.01
+  *   runMain graft.Plans <dataDir> <outDir> <tag> <q1> [q2 ...]
+  *     → <outDir>/<q1>_<tag>.txt ...: one file per named query
+  *
+  * Every query runs before its plan is dumped, so the formatted explain
+  * of the adaptive plan prints the FINAL plan (isFinalPlan=true, reused
+  * exchanges visible) followed by the initial one.
   */
 object Plans {
   def main(args: Array[String]): Unit = {
@@ -32,17 +45,32 @@ object Plans {
       // round-16 tiered oracle twins
       "q_scd_latest_tiered", "q_scd_latest_keys", "q_cdc_sync_tiered",
       "q_dedup_minhash_tiered", "q_hll_tiered")
-    val sb = new StringBuilder
-    names.foreach { n =>
-      sb.append(s"\n========== $n ==========\n")
+    def plan(dataDir: String, name: String): String =
       try {
-        val df = SparkEntry.queries(n)(spark, d)
-        sb.append(df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-      } catch { case e: Throwable => sb.append("ERROR " + e) }
+        val df = SparkEntry.queries(name)(spark, dataDir)
+        spark.sparkContext.runJob(df.queryExecution.toRdd,
+          (it: Iterator[InternalRow]) => it.size)
+        df.queryExecution.explainString(FormattedMode)
+      } catch { case e: Throwable =>
+        System.err.println(s"ERROR $name: $e")
+        s"ERROR $e"
+      }
+    def write(out: Path, text: String): Unit = {
+      Files.writeString(out, text)
+      println(s"WROTE $out")
     }
-    Files.writeString(Paths.get("target/plans.txt"), sb.toString)
-    println("WROTE target/plans.txt")
+    args.toSeq match {
+      case Seq() =>
+        write(Paths.get("target/plans.txt"),
+          names.map(n => s"\n========== $n ==========\n" + plan(d, n)).mkString)
+      case Seq(dataDir, outDir, tag, queries @ _*) if queries.nonEmpty =>
+        val out = Files.createDirectories(Paths.get(outDir))
+        queries.foreach(n => write(out.resolve(s"${n}_$tag.txt"), plan(dataDir, n)))
+      case _ =>
+        System.err.println(
+          "usage: graft.Plans [<dataDir> <outDir> <tag> <query> [query ...]]")
+        sys.exit(2)
+    }
     spark.stop()
   }
 }

@@ -1082,20 +1082,11 @@ object Dedup {
     * Returns (id, lbl) for every node that appears in a pair, where
     * `lbl` is the component's minimum id. Throws `IllegalStateException`
     * if `maxIters` rounds pass without convergence rather than returning
-    * wrong labels.
+    * wrong labels. Below [[LocalGraph.MaxEdges]] edges the components
+    * come from a driver union-find instead (see [[LocalGraph]]).
     */
-  /** Edge-count ceiling for the driver-local union-find tier of
-    * [[connectedComponents]] — 200 k edges ≈ a few MB collected, far
-    * inside driver headroom; env-tunable for A/B (`GRAFT_CC_LOCAL_MAX`,
-    * 0 disables the local tier entirely).
-    */
-  private[graft] val LocalCcMaxEdges: Long =
-    sys.env.get("GRAFT_CC_LOCAL_MAX")
-      .flatMap(s => scala.util.Try(s.trim.toLong).toOption)
-      .getOrElse(200000L)
-
   def connectedComponents(pairs: DataFrame, maxIters: Int = 50): DataFrame =
-    connectedComponentsWith(pairs, maxIters, LocalCcMaxEdges)
+    connectedComponentsWith(pairs, maxIters, LocalGraph.MaxEdges)
 
   /** [[connectedComponents]] with an explicit local-tier ceiling —
     * test seam for the local-vs-distributed equivalence gate (DedupSpec)
@@ -1115,32 +1106,17 @@ object Dedup {
     var edges = cutLineage(
       pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
         .filter(col("src") =!= col("dst")).distinct())
-    var localEdges: Array[org.apache.spark.sql.Row] = null
     var prevSig = sigOf(edges)
     if (prevSig._1 == 0L) { // no edges at all — nothing to cluster
       checkpointRdd(edges).foreach(_.unpersist(false))
       return pairs.limit(0).select(col("id_a").as("id"), col("id_b").as("lbl"))
     }
-    // SCALE-ADAPTIVE local tier (r17): below `LocalCcMaxEdges` the edge
-    // set is metadata-scale (the count is already on hand from the
-    // sig probe) and each large-star/small-star round costs a fixed
-    // ~2 Spark jobs regardless of size — at bench SF the rounds, not
-    // the data, were the wall. A driver union-find over the collected
-    // edges produces the IDENTICAL (id, component-min) label set in one
-    // collect; the distributed loop is untouched above the threshold,
-    // where it remains the only shape that scales. Long ids only (every
-    // gate's ids are BIGINT); any other type keeps the distributed path.
-    if (prevSig._1 <= localMaxEdges &&
-        edges.schema.fields.forall(_.dataType ==
-          org.apache.spark.sql.types.LongType) &&
-        { val c = edges.collect()
-          // Null ids keep the distributed path (its join/group-key null
-          // semantics, never a local NPE); non-null is the normal case —
-          // every gate's pair ids are non-null by construction.
-          if (c.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) {
-            localEdges = c; true
-          } else false }) {
-      val collected = localEdges
+    // Driver-local tier ([[LocalGraph]]; the count is already on hand
+    // from the sig probe): a union-find over the collected edges produces
+    // the IDENTICAL (id, component-min) label set in one collect.
+    val local = LocalGraph.collect(edges, localMaxEdges, Some(prevSig._1))
+    if (local.isDefined) {
+      val collected = local.get
       checkpointRdd(edges).foreach(_.unpersist(false))
       val parent = new java.util.HashMap[Long, Long]()
       def find(x: Long): Long = {
@@ -1160,18 +1136,8 @@ object Dedup {
       // points the larger root at the smaller, so each tree's root is
       // its component's minimum id).
       val nodes = collected.flatMap(r => Seq(r.getLong(0), r.getLong(1))).distinct
-      val spark = pairs.sparkSession
-      import scala.jdk.CollectionConverters._
-      // Nullability mirrors the distributed path's output (join/union of
-      // nullable-sourced columns) so downstream gate schemas are
-      // bit-identical on either tier.
-      return spark.createDataFrame(
-        nodes.map(n => org.apache.spark.sql.Row(n, find(n))).toSeq.asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("id",
-            org.apache.spark.sql.types.LongType, nullable = true),
-          org.apache.spark.sql.types.StructField("lbl",
-            org.apache.spark.sql.types.LongType, nullable = true))))
+      return LocalGraph.frame(pairs.sparkSession,
+        nodes.map(n => (n, find(n))).toSeq, "id", "lbl")
     }
     var converged = false
     var i = 0

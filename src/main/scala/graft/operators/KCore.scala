@@ -34,7 +34,7 @@ object KCore {
 
   def coreMembers(edges: DataFrame, srcCol: String, dstCol: String,
                   k: Int, iters: Int): DataFrame =
-    coreMembersWith(edges, srcCol, dstCol, k, iters, Dedup.LocalCcMaxEdges)
+    coreMembersWith(edges, srcCol, dstCol, k, iters, LocalGraph.MaxEdges)
 
   /** [[coreMembers]] with an explicit local-tier ceiling — the
     * [[Dedup.connectedComponentsWith]] test-seam convention.
@@ -58,42 +58,29 @@ object KCore {
     // results are unchanged by construction). The count is a cheap job
     // over the just-materialized checkpoint blocks.
     var nEdges = e.count()
-    // DRIVER-LOCAL TIER (r17, the Dedup.connectedComponents pattern):
-    // below the edge ceiling every peel round costs ~2 fixed Spark jobs
-    // over a metadata-scale edge set — the rounds, not the data, are
-    // the wall. The local peel is the IDENTICAL synchronous computation
-    // (all deg<k nodes removed simultaneously per round, early exit on
-    // a stable round), so the surviving (node, degree) set is
-    // bit-identical to the distributed loop's by construction. Long ids
-    // and non-null endpoints only; anything else keeps the distributed
-    // path, which remains the shape that scales.
-    if (nEdges <= localMaxEdges &&
-        e.schema.fields.forall(_.dataType ==
-          org.apache.spark.sql.types.LongType)) {
-      val rows = e.collect()
-      if (rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) {
-        var el = rows.map(r => (r.getLong(0), r.getLong(1)))
-        var stable = false
-        for (_ <- 1 to iters if !stable) {
-          val deg = new java.util.HashMap[Long, Long]()
-          el.foreach(t => deg.merge(t._1, 1L, _ + _))
-          val next = el.filter(t =>
-            deg.getOrDefault(t._1, 0L) >= k && deg.getOrDefault(t._2, 0L) >= k)
-          stable = next.length == el.length
-          el = next
-        }
-        val outDeg = new java.util.HashMap[Long, Long]()
-        el.foreach(t => outDeg.merge(t._1, 1L, _ + _))
-        import scala.jdk.CollectionConverters._
-        val out = outDeg.asScala.toSeq.filter(_._2 >= k)
-          .map { case (n, d) => org.apache.spark.sql.Row(n, d) }
-        return e.sparkSession.createDataFrame(out.asJava,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("node",
-              org.apache.spark.sql.types.LongType, nullable = true),
-            org.apache.spark.sql.types.StructField("degree",
-              org.apache.spark.sql.types.LongType, nullable = false))))
+    // DRIVER-LOCAL TIER ([[LocalGraph]], reusing the count above): the
+    // local peel is the IDENTICAL synchronous computation (all deg<k
+    // nodes removed simultaneously per round, early exit on a stable
+    // round), so the surviving (node, degree) set is bit-identical to the
+    // distributed loop's by construction.
+    val local = LocalGraph.collect(e, localMaxEdges, Some(nEdges))
+    if (local.isDefined) {
+      var el = local.get.map(r => (r.getLong(0), r.getLong(1)))
+      var stable = false
+      for (_ <- 1 to iters if !stable) {
+        val deg = new java.util.HashMap[Long, Long]()
+        el.foreach(t => deg.merge(t._1, 1L, _ + _))
+        val next = el.filter(t =>
+          deg.getOrDefault(t._1, 0L) >= k && deg.getOrDefault(t._2, 0L) >= k)
+        stable = next.length == el.length
+        el = next
       }
+      val outDeg = new java.util.HashMap[Long, Long]()
+      el.foreach(t => outDeg.merge(t._1, 1L, _ + _))
+      import scala.jdk.CollectionConverters._
+      return LocalGraph.frame(e.sparkSession,
+        outDeg.asScala.toSeq.filter(_._2 >= k), "node", "degree",
+        bNullable = false)
     }
     var stable = false
     for (_ <- 1 to iters if !stable) {

@@ -36,7 +36,7 @@ object LabelProp {
   def communities(edges: DataFrame, srcCol: String, dstCol: String,
                   weightCol: String, iters: Int): DataFrame =
     communitiesWith(edges, srcCol, dstCol, weightCol, iters,
-      Dedup.LocalCcMaxEdges)
+      LocalGraph.MaxEdges)
 
   /** [[communities]] with an explicit local-tier ceiling — the
     * [[Dedup.connectedComponentsWith]] test-seam convention.
@@ -48,43 +48,30 @@ object LabelProp {
     require(iters >= 0, s"labelProp: bad iters=$iters")
     val e = edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst"),
       col(weightCol).cast("long").as("_w")).localCheckpoint()
-    // DRIVER-LOCAL TIER (r17, the Dedup.connectedComponents pattern):
-    // below the edge ceiling each synchronous round is ~2 fixed Spark
-    // jobs over a metadata-scale edge set. The local rounds replicate
-    // the EXACT update rule — integer weight sums over the previous
-    // round's labels, argmax with the smallest-label tie-break, no-in-
-    // neighbor nodes keep their label — so the final (node, community)
-    // set is bit-identical by construction (integer arithmetic, total
-    // order). Long ids / non-null rows only; else the distributed loop.
-    if (e.schema.fields.forall(_.dataType ==
-        org.apache.spark.sql.types.LongType) &&
-        e.count() <= localMaxEdges) {
-      val rows = e.collect()
-      if (rows.forall(r => (0 to 2).forall(i => !r.isNullAt(i)))) {
-        val el = rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        val nodesL = (el.map(_._1) ++ el.map(_._2)).distinct.sorted
-        var lbl = nodesL.map(n => n -> n).toMap
-        for (_ <- 1 to iters) {
-          val sums = new java.util.HashMap[(Long, Long), Long]()
-          el.foreach { case (s, d, w) => sums.merge((d, lbl(s)), w, _ + _) }
-          import scala.jdk.CollectionConverters._
-          val winners = sums.asScala.toSeq
-            .map { case ((d, l), w) => (d, l, w) }
-            .groupBy(_._1)
-            .map { case (d, cands) =>
-              d -> cands.minBy { case (_, l, w) => (-w, l) }._2
-            }
-          lbl = nodesL.map(n => n -> winners.getOrElse(n, lbl(n))).toMap
-        }
+    // DRIVER-LOCAL TIER ([[LocalGraph]]): the local rounds replicate the
+    // EXACT update rule — integer weight sums over the previous round's
+    // labels, argmax with the smallest-label tie-break, no-in-neighbor
+    // nodes keep their label — so the final (node, community) set is
+    // bit-identical by construction (integer arithmetic, total order).
+    val local = LocalGraph.collect(e, localMaxEdges)
+    if (local.isDefined) {
+      val el = local.get.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      val nodesL = (el.map(_._1) ++ el.map(_._2)).distinct.sorted
+      var lbl = nodesL.map(n => n -> n).toMap
+      for (_ <- 1 to iters) {
+        val sums = new java.util.HashMap[(Long, Long), Long]()
+        el.foreach { case (s, d, w) => sums.merge((d, lbl(s)), w, _ + _) }
         import scala.jdk.CollectionConverters._
-        return e.sparkSession.createDataFrame(
-          nodesL.map(n => org.apache.spark.sql.Row(n, lbl(n))).toSeq.asJava,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("node",
-              org.apache.spark.sql.types.LongType, nullable = true),
-            org.apache.spark.sql.types.StructField("community",
-              org.apache.spark.sql.types.LongType, nullable = true))))
+        val winners = sums.asScala.toSeq
+          .map { case ((d, l), w) => (d, l, w) }
+          .groupBy(_._1)
+          .map { case (d, cands) =>
+            d -> cands.minBy { case (_, l, w) => (-w, l) }._2
+          }
+        lbl = nodesL.map(n => n -> winners.getOrElse(n, lbl(n))).toMap
       }
+      return LocalGraph.frame(e.sparkSession,
+        nodesL.map(n => (n, lbl(n))).toSeq, "node", "community")
     }
     val nodes = e.select(col("_src").as("node"))
       .union(e.select(col("_dst").as("node"))).distinct().localCheckpoint()

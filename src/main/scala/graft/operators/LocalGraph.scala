@@ -1,0 +1,57 @@
+package graft.operators
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+
+/** The driver-local tier of the iterative graph operators: connected
+  * components ([[Dedup.connectedComponents]]), [[KCore]], [[PageRank]]
+  * (global and personalized) and [[LabelProp]].
+  *
+  * Each distributed round of those loops costs a fixed ~2 Spark jobs
+  * whatever the edge count, so on a metadata-scale graph the rounds, not
+  * the data, are the wall. Below [[MaxEdges]] each operator collects its
+  * edge set once and runs the IDENTICAL computation on the driver, so the
+  * results are bit-identical by construction (one local-vs-distributed
+  * equivalence spec per operator). Above the ceiling, or on any input the
+  * local code cannot hold exactly (a non-long column, a null), the
+  * operator keeps its distributed loop, the shape that scales.
+  */
+private[graft] object LocalGraph {
+
+  /** Edge-count ceiling of the local tier: 200 k rows of longs are a few
+    * MB on the driver, far inside its headroom.
+    */
+  val MaxEdges: Long = 200000L
+
+  /** The rows of `df` when the local tier applies — every column long,
+    * at most `ceiling` rows, no null anywhere — else `None`.
+    *
+    * `knownCount` is a row count the caller already holds (connected
+    * components' signature probe, KCore's edge count), so no job counts
+    * again. Without one the gate collects at most `ceiling + 1` rows in
+    * ONE job: `coalesce(1)` makes the limit scan a single partition,
+    * where a multi-partition limit scales up over several jobs.
+    */
+  def collect(df: DataFrame, ceiling: Long,
+              knownCount: Option[Long] = None): Option[Array[Row]] = {
+    if (knownCount.exists(_ > ceiling) ||
+        !df.schema.fields.forall(_.dataType == LongType)) return None
+    val rows =
+      if (knownCount.isDefined) df.collect()
+      else df.coalesce(1).limit(math.min(ceiling, Int.MaxValue - 1L).toInt + 1).collect()
+    if (rows.length > ceiling || rows.exists(_.anyNull)) None
+    else Some(rows)
+  }
+
+  /** A local tier's (a, b) result frame of two long columns. `a` is
+    * nullable and `b` is `bNullable`, mirroring the distributed loop's
+    * output so the gate's schema is the same on either tier.
+    */
+  def frame(spark: SparkSession, rows: Seq[(Long, Long)], a: String, b: String,
+            bNullable: Boolean = true): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.map { case (x, y) => Row(x, y) }.asJava,
+      StructType(Seq(StructField(a, LongType, nullable = true),
+        StructField(b, LongType, bNullable))))
+  }
+}

@@ -26,10 +26,10 @@ import org.apache.spark.sql.functions._
   * partial-agg order irrelevant; means/variances/covariance and the
   * per-row d² are doubles in one mirrored expression; the top-k order
   * key is the µ-quantized d² with the id as tie-break. Since r14 the
-  * exact sums are salted long LIMB sums (see [[mahalanobis2]]) — the
+  * exact sums are salted long LIMB sums (see [[momentSums]]) — the
   * same integers the previous decimal(38,0) formulation produced
-  * (RehearseMahalanobis pins the equality bitwise), with zero per-row
-  * Decimal work.
+  * (OutliersSpec pins the equality exactly near the capacity bound),
+  * with zero per-row Decimal work.
   *
   * Scale shape: ONE map-side-combinable moment aggregate (partition-
   * local salt groups of ≤ 2^24 rows each, then a 6-number decimal
@@ -67,12 +67,46 @@ object Outliers {
     // repo-wide measure-zero tie assumption) and skips Spark round()'s
     // per-row BigDecimal — measured 5x cheaper on the 600k-row scan;
     // the oracle uses the IDENTICAL floor form.
-    //
+    def mu(c: String) =
+      floor(col(c).cast("double") * 1e6 + 0.5).cast("long")
+    val base = df.select(col(idCol).cast("long").as("_id"),
+      mu(xCol).as("_x"), mu(yCol).as("_y"))
+    def d(c: org.apache.spark.sql.Column) = c.cast("double")
+    val scored = base.crossJoin(broadcast(momentSums(base)))
+    val nD = d(col("_n"))
+    // population covariance in µ² units; d² is scale-invariant, so the
+    // µ scale cancels and no unit back-conversion is needed
+    val mx = d(col("_sx")) / nD
+    val my = d(col("_sy")) / nD
+    val vx = d(col("_sxx")) / nD - mx * mx
+    val vy = d(col("_syy")) / nD - my * my
+    val cxy = d(col("_sxy")) / nD - mx * my
+    val det = vx * vy - cxy * cxy
+    val dx = d(col("_x")) - mx
+    val dy = d(col("_y")) - my
+    val md2 = (dx * (vy * dx - cxy * dy) + dy * (vx * dy - cxy * dx)) / det
+    scored
+      .select(col("_id"), col("_x"), col("_y"),
+        when(det <= 0.0, lit(null).cast("long"))
+          .otherwise(floor(md2 * 1e6 + 0.5).cast("long")).as("_m"))
+      .orderBy(col("_m").desc_nulls_last, col("_id").asc)
+      .limit(topK)
+      .select(col("_id").as(idCol),
+        round(d(col("_x")) / 1e6, 6).as(xCol),
+        round(d(col("_y")) / 1e6, 6).as(yCol),
+        round(d(col("_m")) / 1e6, 6).as("md2"))
+  }
+
+  /** The exact moments of [[mahalanobis2]] as one row of `base`'s
+    * µ-quantized long columns `_x`, `_y`: `_n` and the decimal(38,0)
+    * sums `_sx`, `_sy`, `_sxx`, `_syy`, `_sxy`.
+    */
+  private[graft] def momentSums(base: DataFrame): DataFrame = {
     // r14 (VERDICT r13 #2): per-row values stay LONG end-to-end. The
     // previous shape quantized to decimal(38,0) and summed decimals —
     // once Σx² left the compact-long range every partial-agg add ran
     // on boxed BigDecimals, the operator's one interpreted hot loop
-    // (and its sticky-JIT episode surface; RehearseMahalanobis A/B).
+    // (and its sticky-JIT episode surface; BASELINE.md r14).
     // The exact moments now come from SALTED LIMB SUMS: per salt group
     // (mid >> 24 — see GroupShift) eleven long sums of the 2^19-limb
     // products. Capacity (r15, corrected): with |x| < 2^37 the worst
@@ -83,12 +117,8 @@ object Outliers {
     // distribution. Then ONE decimal combine over the group rows
     // (~1 per 16.7M rows, plus one per partition) reconstructs
     // Σx², Σy², Σxy exactly.
-    // RehearseMahalanobis pins the reconstruction bitwise against the
-    // decimal formulation at sf0.1, so the oracle is unchanged.
-    def mu(c: String) =
-      floor(col(c).cast("double") * 1e6 + 0.5).cast("long")
-    val base = df.select(col(idCol).cast("long").as("_id"),
-      mu(xCol).as("_x"), mu(yCol).as("_y"))
+    // OutliersSpec pins the reconstruction exactly against the decimal
+    // formulation near the |x| < 2^37 bound, so the oracle is unchanged.
     val s = LimbShift
     val mask = (1L << s) - 1L
     val grouped = base
@@ -113,36 +143,12 @@ object Outliers {
     val two = lit(2L).cast("decimal(38,0)")
     val sq = lit(1L << (2 * s)).cast("decimal(38,0)")
     val hf = lit(1L << s).cast("decimal(38,0)")
-    val moments = grouped.agg(
+    grouped.agg(
       sum(col("n")).as("_n"),
       sum(dec("sx")).as("_sx"), sum(dec("sy")).as("_sy"),
       sum(dec("xaa") * sq + two * dec("xab") * hf + dec("xbb")).as("_sxx"),
       sum(dec("yaa") * sq + two * dec("yab") * hf + dec("ybb")).as("_syy"),
       sum(dec("paa") * sq + dec("pab") * hf + dec("pbb")).as("_sxy"))
-    def d(c: org.apache.spark.sql.Column) = c.cast("double")
-    val scored = base.crossJoin(broadcast(moments))
-    val nD = d(col("_n"))
-    // population covariance in µ² units; d² is scale-invariant, so the
-    // µ scale cancels and no unit back-conversion is needed
-    val mx = d(col("_sx")) / nD
-    val my = d(col("_sy")) / nD
-    val vx = d(col("_sxx")) / nD - mx * mx
-    val vy = d(col("_syy")) / nD - my * my
-    val cxy = d(col("_sxy")) / nD - mx * my
-    val det = vx * vy - cxy * cxy
-    val dx = d(col("_x")) - mx
-    val dy = d(col("_y")) - my
-    val md2 = (dx * (vy * dx - cxy * dy) + dy * (vx * dy - cxy * dx)) / det
-    scored
-      .select(col("_id"), col("_x"), col("_y"),
-        when(det <= 0.0, lit(null).cast("long"))
-          .otherwise(floor(md2 * 1e6 + 0.5).cast("long")).as("_m"))
-      .orderBy(col("_m").desc_nulls_last, col("_id").asc)
-      .limit(topK)
-      .select(col("_id").as(idCol),
-        round(d(col("_x")) / 1e6, 6).as(xCol),
-        round(d(col("_y")) / 1e6, 6).as(yCol),
-        round(d(col("_m")) / 1e6, 6).as("md2"))
   }
 
   /** GENERAL-d Mahalanobis scoring over a vector column (r16, VERDICT

@@ -48,7 +48,7 @@ object PageRank {
   def ranks(edges: DataFrame, srcCol: String, dstCol: String, iters: Int,
             dampPct: Long = 85L, scale: Long = DefaultScale): DataFrame =
     ranksWith(edges, srcCol, dstCol, iters, dampPct, scale,
-      Dedup.LocalCcMaxEdges)
+      LocalGraph.MaxEdges)
 
   /** [[ranks]] with an explicit local-tier ceiling — the
     * [[Dedup.connectedComponentsWith]] test-seam convention.
@@ -65,41 +65,36 @@ object PageRank {
     // iters× recomputations of whatever subtree produced the edges.
     val e = edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst"))
       .localCheckpoint()
-    // DRIVER-LOCAL TIER (r17, the Dedup.connectedComponents pattern):
-    // the integer iteration replicates exactly — `div` on non-negative
-    // longs is the same truncation, integer sums are order-free — and
-    // the one float step (round(r/scale, 6)) still runs as the SAME
-    // Spark expression over the locally-computed integer ranks, so the
-    // output is bit-identical to the distributed loop's by
-    // construction (PageRankSpec equivalence case). Long non-null ids
-    // only; else the distributed loop below, which remains the shape
-    // that scales.
-    if (e.schema.fields.forall(_.dataType ==
-        org.apache.spark.sql.types.LongType) &&
-        e.count() <= localMaxEdges) {
-      val rows = e.collect()
-      if (rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1))) {
-        val el = rows.map(r => (r.getLong(0), r.getLong(1)))
-        val nodesL = (el.map(_._1) ++ el.map(_._2)).distinct.sorted
-        val n = nodesL.length.toLong
-        val outdeg = new java.util.HashMap[Long, Long]()
-        el.foreach(t => outdeg.merge(t._1, 1L, _ + _))
-        val base = ((scale * (100L - dampPct)) / 100L) / n
-        var r = new java.util.HashMap[Long, Long]()
-        nodesL.foreach(nd => r.put(nd, scale / n))
-        for (_ <- 1 to iters) {
-          val in = new java.util.HashMap[Long, Long]()
-          el.foreach { case (s, d) =>
-            in.merge(d, r.get(s) / outdeg.get(s), _ + _)
-          }
-          val next = new java.util.HashMap[Long, Long]()
-          nodesL.foreach(nd =>
-            next.put(nd, base + (dampPct * in.getOrDefault(nd, 0L)) / 100L))
-          r = next
+    // DRIVER-LOCAL TIER ([[LocalGraph]]): the integer iteration
+    // replicates exactly — `div` on non-negative longs is the same
+    // truncation, integer sums are order-free — and the one float step
+    // (round(r/scale, 6)) still runs as the SAME Spark expression over
+    // the locally-computed integer ranks, so the output is bit-identical
+    // to the distributed loop's by construction (PageRankSpec
+    // equivalence case). An empty edge list has no node to divide the
+    // start mass over; the distributed loop returns it as no rows.
+    val local = LocalGraph.collect(e, localMaxEdges)
+    if (local.exists(_.nonEmpty)) {
+      val el = local.get.map(r => (r.getLong(0), r.getLong(1)))
+      val nodesL = (el.map(_._1) ++ el.map(_._2)).distinct.sorted
+      val n = nodesL.length.toLong
+      val outdeg = new java.util.HashMap[Long, Long]()
+      el.foreach(t => outdeg.merge(t._1, 1L, _ + _))
+      val base = ((scale * (100L - dampPct)) / 100L) / n
+      var r = new java.util.HashMap[Long, Long]()
+      nodesL.foreach(nd => r.put(nd, scale / n))
+      for (_ <- 1 to iters) {
+        val in = new java.util.HashMap[Long, Long]()
+        el.foreach { case (s, d) =>
+          in.merge(d, r.get(s) / outdeg.get(s), _ + _)
         }
-        return localRankFrame(e.sparkSession,
-          nodesL.map(nd => (nd, r.get(nd))), scale)
+        val next = new java.util.HashMap[Long, Long]()
+        nodesL.foreach(nd =>
+          next.put(nd, base + (dampPct * in.getOrDefault(nd, 0L)) / 100L))
+        r = next
       }
+      return localRankFrame(e.sparkSession,
+        nodesL.map(nd => (nd, r.get(nd))), scale)
     }
     val nodes = e.select(col("_src").as("node"))
       .union(e.select(col("_dst").as("node"))).distinct().localCheckpoint()
@@ -138,14 +133,7 @@ object PageRank {
     */
   private def localRankFrame(spark: org.apache.spark.sql.SparkSession,
                              ranks: Seq[(Long, Long)], scale: Long): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(
-      ranks.map { case (n, r) => org.apache.spark.sql.Row(n, r) }.asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node",
-          org.apache.spark.sql.types.LongType, nullable = true),
-        org.apache.spark.sql.types.StructField("_r",
-          org.apache.spark.sql.types.LongType, nullable = true))))
+    LocalGraph.frame(spark, ranks, "node", "_r")
       .select(col("node"),
         round(col("_r").cast("double") / lit(scale.toDouble), 6).as("rank"))
   }
@@ -168,7 +156,7 @@ object PageRank {
                    seeds: DataFrame, seedCol: String, iters: Int,
                    dampPct: Long = 85L, scale: Long = DefaultScale): DataFrame =
     personalizedWith(edges, srcCol, dstCol, seeds, seedCol, iters, dampPct,
-      scale, Dedup.LocalCcMaxEdges)
+      scale, LocalGraph.MaxEdges)
 
   /** [[personalized]] with an explicit local-tier ceiling — the
     * [[Dedup.connectedComponentsWith]] test-seam convention.
@@ -185,40 +173,39 @@ object PageRank {
     // DRIVER-LOCAL TIER — the [[ranksWith]] replica with the seeded
     // teleport: tele(mass) = mass div |seeds∩nodes| on seeds, 0
     // elsewhere; identical integer chain, same Spark round at the end.
-    if (e.schema.fields.forall(_.dataType ==
-        org.apache.spark.sql.types.LongType) &&
-        seeds.schema(seedCol).dataType ==
-          org.apache.spark.sql.types.LongType &&
-        e.count() <= localMaxEdges) {
-      val rows = e.collect()
-      val seedRows = seeds.select(col(seedCol)).distinct().collect()
-      if (rows.forall(r => !r.isNullAt(0) && !r.isNullAt(1)) &&
-          seedRows.forall(r => !r.isNullAt(0))) {
-        val el = rows.map(r => (r.getLong(0), r.getLong(1)))
-        val nodesL = (el.map(_._1) ++ el.map(_._2)).distinct.sorted
-        val nodeSet = nodesL.toSet
-        val seedSet = seedRows.map(_.getLong(0)).toSet.intersect(nodeSet)
-        val ns = math.max(seedSet.size.toLong, 1L) // |seeds|=0 ⇒ all-zero ranks either way
-        val outdeg = new java.util.HashMap[Long, Long]()
-        el.foreach(t => outdeg.merge(t._1, 1L, _ + _))
-        def tele(nd: Long, mass: Long): Long =
-          if (seedSet.contains(nd)) mass / ns else 0L
-        var r = new java.util.HashMap[Long, Long]()
-        nodesL.foreach(nd => r.put(nd, tele(nd, scale)))
-        val dampedBase = (scale * (100L - dampPct)) / 100L
-        for (_ <- 1 to iters) {
-          val in = new java.util.HashMap[Long, Long]()
-          el.foreach { case (s, d) =>
-            in.merge(d, r.get(s) / outdeg.get(s), _ + _)
-          }
-          val next = new java.util.HashMap[Long, Long]()
-          nodesL.foreach(nd => next.put(nd,
-            tele(nd, dampedBase) + (dampPct * in.getOrDefault(nd, 0L)) / 100L))
-          r = next
+    // The distinct seeds pass the same gate as the edges, so a seed set
+    // over the ceiling takes the distributed loop.
+    val local = for {
+      rows <- LocalGraph.collect(e, localMaxEdges)
+      seedRows <- LocalGraph.collect(
+        seeds.select(col(seedCol)).distinct(), localMaxEdges)
+    } yield (rows, seedRows)
+    if (local.isDefined) {
+      val (rows, seedRows) = local.get
+      val el = rows.map(r => (r.getLong(0), r.getLong(1)))
+      val nodesL = (el.map(_._1) ++ el.map(_._2)).distinct.sorted
+      val nodeSet = nodesL.toSet
+      val seedSet = seedRows.map(_.getLong(0)).toSet.intersect(nodeSet)
+      val ns = math.max(seedSet.size.toLong, 1L) // |seeds|=0 ⇒ all-zero ranks either way
+      val outdeg = new java.util.HashMap[Long, Long]()
+      el.foreach(t => outdeg.merge(t._1, 1L, _ + _))
+      def tele(nd: Long, mass: Long): Long =
+        if (seedSet.contains(nd)) mass / ns else 0L
+      var r = new java.util.HashMap[Long, Long]()
+      nodesL.foreach(nd => r.put(nd, tele(nd, scale)))
+      val dampedBase = (scale * (100L - dampPct)) / 100L
+      for (_ <- 1 to iters) {
+        val in = new java.util.HashMap[Long, Long]()
+        el.foreach { case (s, d) =>
+          in.merge(d, r.get(s) / outdeg.get(s), _ + _)
         }
-        return localRankFrame(e.sparkSession,
-          nodesL.map(nd => (nd, r.get(nd))), scale)
+        val next = new java.util.HashMap[Long, Long]()
+        nodesL.foreach(nd => next.put(nd,
+          tele(nd, dampedBase) + (dampPct * in.getOrDefault(nd, 0L)) / 100L))
+        r = next
       }
+      return localRankFrame(e.sparkSession,
+        nodesL.map(nd => (nd, r.get(nd))), scale)
     }
     val nodes = e.select(col("_src").as("node"))
       .union(e.select(col("_dst").as("node"))).distinct()

@@ -264,8 +264,8 @@ object FileSink {
     * either fully old or fully new (the per-leaf staged swap). This is
     * the production shape of streaming-sink maintenance: per-trigger
     * appends fragment exactly these leaves, and per-leaf compaction is
-    * embarrassingly parallel across partitions (sequential here; a
-    * scheduler would fan the leaves out).
+    * embarrassingly parallel across partitions (up to 4 leaves compact
+    * concurrently, each as its own job).
     *
     * Returns one (relative partition path, filesBefore, filesAfter) row
     * per leaf visited.

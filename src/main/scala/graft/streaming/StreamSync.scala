@@ -160,22 +160,6 @@ object StreamSync {
     */
   val SentinelKey: Long = Long.MinValue
 
-  /** Operator-precedence env override for the replay parallelism; when
-    * unset the count is ADAPTIVE per replay (see [[replayPartitions]]).
-    */
-  private val ReplayPartitionsOverride: Option[Int] =
-    sys.env.get("SPARK_GRAFT_REPLAY_PARTITIONS").map { raw =>
-      // Validated parse (r16, ADVICE): a malformed or non-positive
-      // value must fail with a message naming the env var, not
-      // surface as an ExceptionInInitializerError from this object's
-      // static init (or silently zero the shuffle parallelism).
-      val n = scala.util.Try(raw.trim.toInt).getOrElse(
-        throw new IllegalArgumentException(
-          s"SPARK_GRAFT_REPLAY_PARTITIONS must be an integer, got '$raw'"))
-      require(n > 0, s"SPARK_GRAFT_REPLAY_PARTITIONS must be > 0, got $n")
-      n
-    }
-
   /** Exact staged row count from the chunk files' parquet FOOTERS —
     * driver-side metadata reads over a handful of local files, no
     * Spark job (the FixtureProbe.rowCount pattern). The staging write
@@ -225,24 +209,18 @@ object StreamSync {
     * normalization) — per-partition state-store commit overhead
     * dominates harder the smaller the replay. The r13-measured ~1 M-row
     * regime keeps its winner (4).
-    * `SPARK_GRAFT_REPLAY_PARTITIONS` still pins the count for A/B runs.
     */
   private[graft] def replayPartitions(stagedRows: Long): Int =
-    ReplayPartitionsOverride.getOrElse(
-      if (stagedRows >= 4000000L) 16
-      else if (stagedRows >= 1000000L) 4
-      else 2)
+    if (stagedRows >= 4000000L) 16
+    else if (stagedRows >= 1000000L) 4
+    else 2
 
   /** Dedicated session for one replay: isolated conf (shared
     * SparkContext) pinned at the [[replayPartitions]] parallelism
     * chosen from the just-staged input's footer row count, so the
-    * caller's shuffle settings are untouched.
-    * `SPARK_GRAFT_REPLAY_STATESTORE=rocksdb` (or a provider class name)
-    * switches the state-store provider for A/B measurement — the sf10
-    * runs showed the default HEAP store's GC dominating the
-    * sessions/dedup replays at ~10 M state rows (BASELINE.md r15);
-    * RocksDB is the standard production answer for state that outgrows
-    * the heap, and the knob makes that claim measurable here.
+    * caller's shuffle settings are untouched. The state store is the
+    * session's default provider (the HEAP store; BASELINE.md r15/r16
+    * record where RocksDB overtakes it, ~10 M state rows).
     */
   private def replaySession(caller: SparkSession,
                             watchDirs: String*): SparkSession = {
@@ -252,17 +230,6 @@ object StreamSync {
     if (parts != 4)
       System.err.println(s"[stream] replay partitions=$parts (staged rows=$rows)")
     spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    // System property first (runtime-settable, so one rehearsal JVM can
-    // A/B both providers — RehearseStateStore), env second (per-process
-    // pinning for driver runs).
-    sys.props.get("graft.replay.statestore")
-      .orElse(sys.env.get("SPARK_GRAFT_REPLAY_STATESTORE")).foreach { v =>
-      val cls =
-        if (v == "rocksdb")
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-        else v
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass", cls)
-    }
     spark
   }
 

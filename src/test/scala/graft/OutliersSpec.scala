@@ -40,6 +40,33 @@ class OutliersSpec extends AnyFunSuite with SparkTestBase {
     assert(out.map(_._1).toSeq == Seq(1L, 2L, 3L))
   }
 
+  test("mahalanobis2: long-limb moment sums equal decimal(38,0) sums near 2^37") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, count, lit, sum}
+    // µ-quantized values within 2^20 of the ±2^37 capacity bound (every
+    // limb product near its largest, squared sums ~2^85, far past the
+    // long range), some small ones, and the bound's extremes.
+    val cap = (1L << 37) - 1
+    val rnd = new scala.util.Random(37)
+    def near(): Long = (cap - rnd.nextInt(1 << 20)) * (if (rnd.nextBoolean()) 1 else -1)
+    val xy = (0 until 3000).map(i => (near(), if (i % 5 == 0) rnd.nextInt(1000).toLong else near())) ++
+      Seq((cap, -cap), (-cap, cap), (cap, cap), (0L, 0L))
+    val base = xy.toDF("_x", "_y").repartition(7)
+    val got = Outliers.momentSums(base).head()
+    def dec(c: String) = col(c).cast("decimal(38,0)")
+    val ref = base.agg(count(lit(1L)), sum(dec("_x")), sum(dec("_y")),
+      sum(dec("_x") * dec("_x")), sum(dec("_y") * dec("_y")),
+      sum(dec("_x") * dec("_y"))).head()
+    val exact = Seq(BigInt(xy.size), xy.map(t => BigInt(t._1)).sum, xy.map(t => BigInt(t._2)).sum,
+      xy.map(t => BigInt(t._1).pow(2)).sum, xy.map(t => BigInt(t._2).pow(2)).sum,
+      xy.map(t => BigInt(t._1) * t._2).sum)
+    def ints(r: org.apache.spark.sql.Row) = BigInt(r.getLong(0)) +:
+      (1 to 5).map(i => BigInt(r.getDecimal(i).toBigIntegerExact))
+    assert(exact(3) > BigInt(Long.MaxValue))
+    assert(ints(ref) == exact, "the decimal reference itself is off")
+    assert(ints(got) == exact)
+  }
+
   test("mahalanobisD at d=2 matches the closed-form bivariate path within rounding") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{array, col}

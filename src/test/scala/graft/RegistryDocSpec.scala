@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Registry-hygiene guard: every `Entry("q_...")` in Queries.scala must
@@ -8,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * from them) and the round-11 advisor found three gates whose comments
   * had been orphaned by later insertions. This spec makes both failure
   * modes (missing comment, comment absorbed by a neighbor) loud at
-  * test time instead of judge time.
+  * test time instead of judge time. The same source scan keeps the
+  * engine's environment reads to the allowlisted deployment settings.
   */
 class RegistryDocSpec extends AnyFunSuite {
 
@@ -27,6 +30,34 @@ class RegistryDocSpec extends AnyFunSuite {
       s"gates missing a doc comment directly above their Entry: " +
         s"${undocumented.mkString(", ")} — add the rationale block and " +
         "regenerate docs/CATALOG.md (tools/gen_catalog.py)")
+  }
+
+  test("environment and system-property reads are exactly the allowlist") {
+    // Deployment and driver-contract settings only. An A/B switch read
+    // from the process environment fails here: measure in benchmark/,
+    // or give the operator a parameter.
+    val allowed = Set("SPARK_GRAFT_CHECKPOINT_DIR", "SPARK_GRAFT_MASTER",
+      "SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_VERIFY_ONLY",
+      "SPARK_GRAFT_BENCH_ITERS", "SPARK_GRAFT_BENCH_ONLY",
+      "SPARK_GRAFT_BENCH_GC_EVERY", "SPARK_GRAFT_SOLO_BUDGET")
+    // Any read; the name is the string literal of the call, if there is one.
+    val readRx = ("""(?:sys\.(?:env|props)|System\.(?:getenv|getProperty))""" +
+      """(?:\s*\.\s*(?:getOrElse|get|contains|apply))?(?:\s*\(\s*"([^"]*)")?""").r
+    val files = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector
+      finally walk.close()
+    }
+    val reads = files.flatMap { f =>
+      java.nio.file.Files.readString(f).linesIterator.zipWithIndex.flatMap { case (ln, i) =>
+        readRx.findAllMatchIn(ln).map(m =>
+          (Option(m.group(1)).getOrElse("<no literal name>"), s"$f:${i + 1}"))
+      }
+    }
+    val unlisted = reads.filterNot(r => allowed(r._1))
+    assert(unlisted.isEmpty, s"reads outside the allowlist: ${unlisted.mkString(", ")}")
+    val unread = allowed -- reads.map(_._1)
+    assert(unread.isEmpty, s"allowlisted but never read: ${unread.mkString(", ")}")
   }
 
   test("gate names are unique") {

@@ -487,21 +487,15 @@ class StreamSyncSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("adaptive replay partitions: 2/4/16 across the measured tiers (unless env-pinned)") {
-    // The env override (an A/B-only knob) wins when set; the adaptive
-    // default follows the measured regimes: r17's sf0.1 A/B below 1M
+  test("adaptive replay partitions: 2/4/16 across the measured tiers") {
+    // The tiers follow the measured regimes: r17's sf0.1 A/B below 1M
     // staged rows, r13's ~1M-row winner in the middle, r15's sf10
     // winner above 4M.
-    sys.env.get("SPARK_GRAFT_REPLAY_PARTITIONS") match {
-      case Some(pinned) =>
-        assert(StreamSync.replayPartitions(1000L) == pinned.trim.toInt)
-      case None =>
-        assert(StreamSync.replayPartitions(0L) == 2)
-        assert(StreamSync.replayPartitions(999999L) == 2)
-        assert(StreamSync.replayPartitions(1000000L) == 4)
-        assert(StreamSync.replayPartitions(3999999L) == 4)
-        assert(StreamSync.replayPartitions(4000000L) == 16)
-        assert(StreamSync.replayPartitions(100000000L) == 16)
-    }
+    assert(StreamSync.replayPartitions(0L) == 2)
+    assert(StreamSync.replayPartitions(999999L) == 2)
+    assert(StreamSync.replayPartitions(1000000L) == 4)
+    assert(StreamSync.replayPartitions(3999999L) == 4)
+    assert(StreamSync.replayPartitions(4000000L) == 16)
+    assert(StreamSync.replayPartitions(100000000L) == 16)
   }
 }
