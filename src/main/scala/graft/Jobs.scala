@@ -1,0 +1,132 @@
+package graft
+
+import java.util.concurrent.{CompletionException, Executors, TimeoutException}
+import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
+
+import scala.collection.mutable
+
+import org.apache.spark.SparkContext
+import org.apache.spark.graft.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd, SparkListenerTaskStart}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.execution.SQLExecution
+
+/** Concurrent submission of independent Spark jobs from the driver.
+  *
+  * Independent writes (BM25 index relations, replay staging, the sides
+  * of an interval join, partition leaves of a compaction) run as
+  * concurrent jobs so one job's tasks back-fill another's straggler
+  * tail. Every such site goes through [[overlap]], which owns the
+  * thread pool, the job labels and the failure protocol.
+  */
+object Jobs {
+
+  /** Most tasks one [[overlap]] call runs at once. */
+  private val MaxInFlight = 4
+
+  /** Longest wait for the tasks of failed jobs to stop (see [[settled]]). */
+  private val SettleTimeoutMs = 60000L
+
+  private val callSeq = new AtomicLong()
+
+  /** Run `body` with its jobs tagged. If it throws, cancel those jobs
+    * and wait until their tasks have stopped before rethrowing: a failed
+    * or cancelled job ends at once, but its running tasks go on until
+    * they next check for the kill, and may still create files.
+    */
+  private[graft] def settled[T](sc: SparkContext)(body: => T): T = {
+    val tag = s"graft-settle-${callSeq.incrementAndGet()}"
+    val tasks = new RunningTasks(tag)
+    sc.addSparkListener(tasks)
+    sc.addJobTag(tag)
+    try body
+    catch {
+      case t: Throwable =>
+        val deadline = System.currentTimeMillis() + SettleTimeoutMs
+        try ListenerBusAccess.cancelAndDrain(sc, tag, "the caller failed", SettleTimeoutMs)
+        catch { case _: TimeoutException => } // wait on below until the deadline
+        tasks.awaitNone(deadline)
+        throw t
+    } finally {
+      sc.removeJobTag(tag)
+      sc.removeSparkListener(tasks)
+    }
+  }
+
+  /** The running tasks of the jobs tagged `tag`, from listener events. */
+  private final class RunningTasks(tag: String) extends SparkListener {
+    private val stages = mutable.Set[Int]()
+    private val running = mutable.Set[Long]()
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      // SparkContext.SPARK_JOB_TAGS, comma-separated (package-private).
+      val tags = Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+      if (tags.exists(_.split(",").contains(tag))) stages ++= e.stageIds
+    }
+    override def onTaskStart(e: SparkListenerTaskStart): Unit = synchronized {
+      if (stages(e.stageId)) running += e.taskInfo.taskId
+    }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      if (running.remove(e.taskInfo.taskId)) notifyAll()
+    }
+
+    def awaitNone(deadline: Long): Unit = synchronized {
+      while (running.nonEmpty && System.currentTimeMillis() < deadline)
+        wait(math.max(1L, deadline - System.currentTimeMillis()))
+    }
+  }
+
+  /** Run `tasks` concurrently, at most [[MaxInFlight]] at a time, on a
+    * pool owned by this call, and return their results in task order.
+    *
+    * Each task runs with the caller's Spark local properties as they are
+    * at call time (job description, job group, tags, scheduler pool),
+    * plus the job tag `graft:<op>:<step>`; the description is left as
+    * the caller set it. Nested calls do not deadlock: each call has its
+    * own threads.
+    *
+    * On the first failure the call cancels every job its tasks started
+    * (through a tag unique to the call, which nested calls inherit),
+    * starts no queued task, waits for the running tasks and for the Spark
+    * tasks of their jobs to end, and then rethrows that failure with the
+    * other failures attached as suppressed exceptions. No job of the call
+    * is still running when it throws.
+    */
+  def overlap[T](spark: SparkSession, op: String, step: String)(tasks: (() => T)*): Seq[T] = {
+    if (tasks.isEmpty) return Seq.empty
+    val sc = spark.sparkContext
+    val label = s"graft:$op:$step"
+    val callTag = s"graft-overlap-${callSeq.incrementAndGet()}"
+    val first = new AtomicReference[Throwable]()
+    val pool = Executors.newFixedThreadPool(math.min(MaxInFlight, tasks.size))
+    try {
+      val futures = tasks.map { task =>
+        SQLExecution.withThreadLocalCaptured(castToImpl(spark), pool) {
+          if (first.get != null) None
+          else {
+            sc.addJobTags(Set(callTag, label))
+            Some(settled(sc) {
+              try task()
+              catch {
+                case t: Throwable =>
+                  if (first.compareAndSet(null, t))
+                    sc.cancelJobsWithTag(callTag, s"a sibling task of $label failed")
+                  throw t
+              }
+            })
+          }
+        }
+      }
+      val outcomes = futures.map { f =>
+        try Right(f.join())
+        catch { case e: CompletionException => Left(Option(e.getCause).getOrElse(e)) }
+      }
+      Option(first.get).foreach { t =>
+        outcomes.collect { case Left(e) if e ne t => e }.foreach(t.addSuppressed)
+        throw t
+      }
+      outcomes.collect { case Right(Some(r)) => r }
+    } finally pool.shutdown()
+  }
+}

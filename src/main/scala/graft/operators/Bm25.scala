@@ -102,33 +102,26 @@ object Bm25 {
     // back-fill the first's straggler tail instead of waiting for it.
     // (A tokenize-once persist was A/B'd and REVERTED: columnar-caching
     // the token arrays cost more than the second tokenize.)
-    def par(a: => Unit, b: => Unit): Unit = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val fa = Future(a); val fb = Future(b)
-      Await.result(fa, Duration.Inf); Await.result(fb, Duration.Inf)
-    }
-    par(
-      toks.select(col("doc_id"), size(col("_w")).cast("long").as("dl"))
+    val spark = docs.sparkSession
+    graft.Jobs.overlap(spark, "bm25", "build_write")(
+      () => toks.select(col("doc_id"), size(col("_w")).cast("long").as("dl"))
         .write.parquet(s"$dir/doclen"),
       // Term-sorted postings: range partition + in-file sort give tight
       // per-row-group term bounds — a term-predicated read prunes to the
       // groups that can match (FileSink.writeRangeSorted posture).
-      postings.repartitionByRange(col("term"))
+      () => postings.repartitionByRange(col("term"))
         .sortWithinPartitions(col("term"), col("doc_id"))
         .write.parquet(s"$dir/postings"))
     // Derive termdf and stats from the relations JUST WRITTEN instead of
     // re-tokenizing the corpus (r16): df per term = the row count of its
     // postings, and (n, sumdl) = doclen's count/sum — identical values,
     // two corpus passes removed (buildIndex paid four).
-    val spark = docs.sparkSession
-    par(
-      spark.read.parquet(s"$dir/postings")
+    graft.Jobs.overlap(spark, "bm25", "build_derive")(
+      () => spark.read.parquet(s"$dir/postings")
         .groupBy(col("term"))
         .agg(count(lit(1)).as("df"))
         .write.parquet(s"$dir/termdf"),
-      spark.read.parquet(s"$dir/doclen")
+      () => spark.read.parquet(s"$dir/doclen")
         .agg(count(lit(1)).as("n"), sum(col("dl")).as("sumdl"))
         .write.parquet(s"$dir/stats"))
   }
@@ -197,13 +190,6 @@ object Bm25 {
     // segment + termdf share the persisted postings, stats reads the
     // persisted toks — so the pairs below are independent jobs whose
     // tasks back-fill each other's straggler tails.
-    def par(a: => Unit, b: => Unit): Unit = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val fa = Future(a); val fb = Future(b)
-      Await.result(fa, Duration.Inf); Await.result(fb, Duration.Inf)
-    }
     toks.select(col("doc_id"), size(col("_w")).cast("long").as("dl"))
       .write.mode("append").parquet(s"$dir/doclen")
     val postings = toks
@@ -211,11 +197,11 @@ object Bm25 {
       .groupBy(col("term"), col("doc_id"))
       .agg(count(lit(1)).as("tf"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    par(
-      postings.repartitionByRange(col("term"))
+    graft.Jobs.overlap(spark, "bm25", "append_write")(
+      () => postings.repartitionByRange(col("term"))
         .sortWithinPartitions(col("term"), col("doc_id"))
         .write.mode("append").parquet(s"$dir/postings"),
-      spark_stats(toks).write.mode("append").parquet(s"$dir/stats"))
+      () => spark_stats(toks).write.mode("append").parquet(s"$dir/stats"))
     postings.groupBy(col("term"))
       .agg(count(lit(1)).as("df"))
       .write.mode("append").parquet(s"$dir/termdf")

@@ -194,42 +194,32 @@ object FileSink {
     * `rewrite_data_files` semantics, minus the transaction log): size the
     * output file count from the directory's ACTUAL bytes (footer-level
     * listing, no data read), rewrite via one round-robin repartition, and
-    * atomically swap directories. Streaming sinks and per-trigger CDC
-    * appends write thousands of KB-scale files; at 100 TB the resulting
-    * per-file open/footer overhead dominates scans long before data cost
-    * does — compaction restores `maxPartitionBytes`-sized splits.
+    * swap directories with a [[StagedSwap]]. Streaming sinks and
+    * per-trigger CDC appends write thousands of KB-scale files; at 100 TB
+    * the resulting per-file open/footer overhead dominates scans long
+    * before data cost does — compaction restores `maxPartitionBytes`-sized
+    * splits.
     *
-    * Returns (filesBefore, filesAfter). The rewrite materializes the
-    * compacted copy COMPLETELY (to `<dir>.__compacting`) before the
-    * original is touched, so a mid-job crash leaves the source intact;
-    * the swap itself is two renames on the same filesystem.
+    * Returns (filesBefore, filesAfter). The compacted copy is written
+    * completely before the original moves. A crash between the swap's two
+    * renames leaves `dir` missing until the next call on it, which first
+    * restores the old or the compacted contents; readers in that window
+    * see no table.
     */
   def compact(spark: SparkSession, dir: String,
               targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
     require(targetFileBytes > 0, s"targetFileBytes must be > 0, got $targetFileBytes")
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val dataFiles = fs.listStatus(path)
+    val swap = StagedSwap(spark, dir)
+    val dataFiles = swap.fs.listStatus(swap.dir)
       .filter(s => s.isFile && !s.getPath.getName.startsWith("_")
         && !s.getPath.getName.startsWith("."))
     if (dataFiles.isEmpty) return (0, 0) // nothing to compact (and no schema to re-infer)
     val totalBytes = dataFiles.map(_.getLen).sum
     val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    val tmp = new org.apache.hadoop.fs.Path(dir + ".__compacting")
-    val old = new org.apache.hadoop.fs.Path(dir + ".__compacted_old")
-    fs.delete(tmp, true); fs.delete(old, true)
     // Round-robin repartition: even output sizes with no shuffle KEY —
     // layout-preserving compaction. (Layout-CREATING rewrites are the
     // sibling writers: writeRangeSorted / writeZOrdered / writeBucketed.)
-    spark.read.parquet(dir).repartition(nOut)
-      .write.parquet(tmp.toString)
-    if (!fs.rename(path, old))
-      throw new RuntimeException(s"compact: could not stage $dir aside")
-    if (!fs.rename(tmp, path)) {
-      fs.rename(old, path) // restore — the compacted copy is still at tmp
-      throw new RuntimeException(s"compact: could not swap compacted files into $dir")
-    }
-    fs.delete(old, true)
+    swap.replace()(spark.read.parquet(dir).repartition(nOut).write.parquet(_))
     (dataFiles.length, nOut)
   }
 
@@ -260,12 +250,17 @@ object FileSink {
   /** [[compact]] for a HIVE-PARTITIONED directory tree: every leaf
     * partition directory (`key=value/...`) is compacted independently and
     * in place, so the partition layout — and therefore partition pruning
-    * — survives untouched, and a crash mid-run leaves every partition
-    * either fully old or fully new (the per-leaf staged swap). This is
-    * the production shape of streaming-sink maintenance: per-trigger
-    * appends fragment exactly these leaves, and per-leaf compaction is
-    * embarrassingly parallel across partitions (up to 4 leaves compact
-    * concurrently, each as its own job).
+    * — survives untouched. This is the production shape of
+    * streaming-sink maintenance: per-trigger appends fragment exactly
+    * these leaves, and per-leaf compaction is embarrassingly parallel
+    * across partitions (leaves compact concurrently through
+    * [[graft.Jobs.overlap]], each as its own job).
+    *
+    * Each leaf is its own [[StagedSwap]], so after a failure every leaf
+    * holds its old or its compacted contents; a leaf a crash left
+    * missing is restored by the next run. If one leaf fails, the other
+    * leaves' jobs are cancelled, leaves not yet started are skipped, and
+    * the first failure is rethrown.
     *
     * Returns one (relative partition path, filesBefore, filesAfter) row
     * per leaf visited.
@@ -275,36 +270,26 @@ object FileSink {
     val raw = new org.apache.hadoop.fs.Path(dir)
     val fs = raw.getFileSystem(spark.sessionState.newHadoopConf())
     val root = fs.makeQualified(raw) // listing returns qualified paths; relativize against same
-    def leaves(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
-      val entries = fs.listStatus(p)
-        .filterNot(_.getPath.getName.startsWith("_"))
-        .filterNot(_.getPath.getName.startsWith("."))
-      val subdirs = entries.filter(_.isDirectory)
-        .filter(_.getPath.getName.contains("=")) // partition dirs only
-      if (subdirs.isEmpty) Seq(p) else subdirs.flatMap(s => leaves(s.getPath))
-    }
-    // Leaves compact CONCURRENTLY (r17, guide §2.6): each leaf's
-    // rewrite is an independent job in its own directory (per-leaf temp
-    // + atomic swap), and sequential leaves left the cluster idle on
-    // every leaf's straggler tail. A small fixed pool bounds in-flight
-    // jobs (enough to back-fill, not enough to fight for executors).
-    val leafDirs = leaves(root)
-      .filter(p => p != root || fs.listStatus(p).exists(_.isFile)) // skip an all-dir root
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(4, leafDirs.size)))
-    try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      val futs = leafDirs.map { leaf =>
-        Future {
-          val (before, after) = compact(spark, leaf.toString, targetFileBytes)
-          val rel = leaf.toString.stripPrefix(root.toString).stripPrefix("/")
-          (if (rel.isEmpty) "." else rel, before, after)
-        }
+    def leaves(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
+      if (!fs.exists(p)) Seq(p) // a crash left it at <leaf>.__old; its swap restores it
+      else {
+        val subdirs = fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName)
+          .filterNot(n => n.startsWith("_") || n.startsWith(".") ||
+            n.endsWith(StagedSwap.NextSuffix))
+          .map(_.stripSuffix(StagedSwap.OldSuffix)).distinct
+          .filter(_.contains("=")) // partition dirs only
+        if (subdirs.isEmpty) Seq(p)
+        else subdirs.toSeq.flatMap(n => leaves(new org.apache.hadoop.fs.Path(p, n)))
       }
-      futs.map(Await.result(_, Duration.Inf))
-    } finally pool.shutdown()
+    // Leaves compact CONCURRENTLY (r17, guide §2.6): each leaf's
+    // rewrite is an independent job in its own directory, and sequential
+    // leaves left the cluster idle on every leaf's straggler tail.
+    val leafDirs = leaves(root).filter(p => // skip an all-dir root
+      p != root || !fs.exists(p) || fs.listStatus(p).exists(_.isFile))
+    graft.Jobs.overlap(spark, "compact", "leaves")(leafDirs.map { leaf => () =>
+      val (before, after) = compact(spark, leaf.toString, targetFileBytes)
+      val rel = leaf.toString.stripPrefix(root.toString).stripPrefix("/")
+      (if (rel.isEmpty) "." else rel, before, after)
+    }: _*)
   }
 }

@@ -282,23 +282,14 @@ object StreamSync {
     // disjoint temp dirs, so they run as concurrent driver-submitted
     // jobs; only the (fast, order-sensitive) renames below stay
     // sequential so chunk numbering and modtime order are unchanged.
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val main = Future {
-        df.repartitionByRange(nChunks, col(orderCol))
-          .write.parquet(sdir.toString)
-      }
-      val sents = sentinels.zipWithIndex.map { case (row, j) =>
-        Future {
-          spark.createDataFrame(java.util.Arrays.asList(row), schema)
-            .coalesce(1).write.mode("overwrite")
-            .parquet(root.resolve(s"sentinel$j").toString)
-        }
-      }
-      (main +: sents).foreach(Await.result(_, Duration.Inf))
-    }
+    graft.Jobs.overlap(spark, "replay", "stage")(
+      (() => df.repartitionByRange(nChunks, col(orderCol))
+        .write.parquet(sdir.toString)) +:
+      sentinels.zipWithIndex.map { case (row, j) => () =>
+        spark.createDataFrame(java.util.Arrays.asList(row), schema)
+          .coalesce(1).write.mode("overwrite")
+          .parquet(root.resolve(s"sentinel$j").toString)
+      }: _*)
     val parts = {
       val ls = java.nio.file.Files.list(sdir)
       try ls.filter(p => p.getFileName.toString.startsWith("part-"))
@@ -714,13 +705,9 @@ object StreamSync {
         tsCol, nChunks)
     // The two sides' staging writes are independent — overlap them
     // (guide §2.6), same as the writes inside each stager.
-    val ((fDir, fRoots), (dDir, dRoots)) = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val ff = Future(stage(facts)); val fd = Future(stage(dims))
-      (Await.result(ff, Duration.Inf), Await.result(fd, Duration.Inf))
-    }
+    val Seq((fDir, fRoots), (dDir, dRoots)) =
+      graft.Jobs.overlap(caller, "interval_join", "stage_sides")(
+        () => stage(facts), () => stage(dims))
     val spark = replaySession(caller, fDir, dDir)
     val name = s"graft_replay_ijoin_${ReplaySeq.incrementAndGet()}"
     def src(dir: String): DataFrame = spark.readStream.schema(schema)
@@ -855,13 +842,11 @@ object StreamSync {
     * rows is spliced into the parquet state directory with
     * [[graft.operators.ChangeLog.scd2Apply]] — only the batch's touched
     * keys are rewritten, so per-trigger cost scales with the batch, not
-    * the dimension. The state swap is staged (materialize the next state
-    * COMPLETELY beside the current one, then two renames), so a crash
-    * mid-batch leaves the prior state intact. Exactly-once caveat shared
-    * with [[startDedupedIngest]]: foreachBatch may replay a batch on
-    * recovery, and re-applying the same events would duplicate versions —
-    * a production state dir would record the last applied batchId and
-    * skip replays; out of scope for the operator shape.
+    * the dimension. Each batch replaces the state through
+    * [[maintainState]]: a [[graft.sinks.StagedSwap]] that leaves the
+    * prior or the next state after any failure, and a batch mark that
+    * makes a replayed batch a no-op, so a restart cannot duplicate
+    * versions.
     *
     * Scale note: the COMPUTE is delta-proportional (scd2Apply rewrites
     * touched keys only), but this plain-parquet state dir is REWRITTEN
@@ -877,31 +862,37 @@ object StreamSync {
     changes.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
-        val cur = new org.apache.hadoop.fs.Path(stateDir)
-        val fs = cur.getFileSystem(spark.sessionState.newHadoopConf())
-        val hasState = fs.exists(cur)
-        val next =
-          if (hasState)
-            graft.operators.ChangeLog.scd2Apply(
-              spark.read.parquet(stateDir), batch, keyCols, tieBreakCol, dataCols)
-          else
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        maintainState(batch, batchId, stateDir) {
+          case Some(state) =>
+            graft.operators.ChangeLog.scd2Apply(state, batch, keyCols, tieBreakCol, dataCols)
+          case None =>
             graft.operators.ChangeLog.scd2State(batch, keyCols, tieBreakCol, dataCols)
-        val tmp = new org.apache.hadoop.fs.Path(stateDir + ".__next")
-        val old = new org.apache.hadoop.fs.Path(stateDir + ".__old")
-        fs.delete(tmp, true); fs.delete(old, true)
-        next.write.parquet(tmp.toString) // materialized before current state moves
-        if (hasState && !fs.rename(cur, old))
-          throw new RuntimeException(s"scd2 maintenance: could not stage $stateDir aside")
-        if (!fs.rename(tmp, cur)) {
-          if (hasState) fs.rename(old, cur) // restore; next state still at tmp
-          throw new RuntimeException(s"scd2 maintenance: could not swap state into $stateDir")
         }
-        fs.delete(old, true)
-        ()
       }
       .start()
+
+  /** One foreachBatch step over a parquet state directory: swap in
+    * `next(current state)` (None before the first batch) through a
+    * [[graft.sinks.StagedSwap]] marked with the streaming query id and
+    * the batch id, unless the state already carries that mark. Spark
+    * re-runs the last batch when a restart finds it uncommitted; the
+    * mark turns that replay into a no-op. The query id is stable across
+    * restarts from one checkpoint, so a fresh checkpoint over existing
+    * state still applies its batches.
+    */
+  private def maintainState(batch: Dataset[Row], batchId: Long, stateDir: String)
+                           (next: Option[DataFrame] => DataFrame): Unit = {
+    val spark = batch.sparkSession
+    val swap = graft.sinks.StagedSwap(spark, stateDir)
+    // StreamExecution.QUERY_ID_KEY: set on the thread running the batch.
+    val mark = Option(spark.sparkContext.getLocalProperty("sql.streaming.queryId"))
+      .map(q => s"$q $batchId")
+    if (mark.isEmpty || swap.mark != mark) {
+      val state = if (swap.exists) Some(spark.read.parquet(stateDir)) else None
+      swap.replace(mark)(next(state).write.parquet(_))
+    }
+  }
 
   /** Drive [[startScd2Maintenance]] over a BOUNDED change log streamed in
     * `nBatches` chronological micro-batches and return the PRESENTED
@@ -1136,11 +1127,12 @@ object StreamSync {
 
   /** STREAMING incremental-aggregate maintenance: each micro-batch of
     * the change feed folds into the persisted per-key (count, Σvalue)
-    * view via [[graft.operators.ChangeLog.aggMaintainApply]] behind the
-    * same staged two-rename state swap as [[startScd2Maintenance]] —
-    * the continuously-current materialized aggregate, never a base
-    * rescan. Integer-exact state makes batch boundaries invisible by
-    * construction (sums are associative/commutative).
+    * view via [[graft.operators.ChangeLog.aggMaintainApply]] through the
+    * same [[maintainState]] step as [[startScd2Maintenance]] — the
+    * continuously-current materialized aggregate, never a base rescan.
+    * Integer-exact state makes batch boundaries invisible by
+    * construction (sums are associative/commutative); the batch mark
+    * keeps a replayed batch from adding its deltas twice.
     */
   def startAggMaintenance(changes: DataFrame, keyCols: Seq[String],
                           valueCol: String, stateDir: String,
@@ -1148,29 +1140,13 @@ object StreamSync {
     changes.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
-        val cur = new org.apache.hadoop.fs.Path(stateDir)
-        val fs = cur.getFileSystem(spark.sessionState.newHadoopConf())
-        val hasState = fs.exists(cur)
-        val next =
-          if (hasState)
-            graft.operators.ChangeLog.aggMaintainApply(
-              spark.read.parquet(stateDir), batch, keyCols, valueCol)
-          else
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        maintainState(batch, batchId, stateDir) {
+          case Some(state) =>
+            graft.operators.ChangeLog.aggMaintainApply(state, batch, keyCols, valueCol)
+          case None =>
             graft.operators.ChangeLog.aggMaintainState(batch, keyCols, valueCol)
-        val tmp = new org.apache.hadoop.fs.Path(stateDir + ".__next")
-        val old = new org.apache.hadoop.fs.Path(stateDir + ".__old")
-        fs.delete(tmp, true); fs.delete(old, true)
-        next.write.parquet(tmp.toString)
-        if (hasState && !fs.rename(cur, old))
-          throw new RuntimeException(s"agg maintenance: could not stage $stateDir aside")
-        if (!fs.rename(tmp, cur)) {
-          if (hasState) fs.rename(old, cur)
-          throw new RuntimeException(s"agg maintenance: could not swap state into $stateDir")
         }
-        fs.delete(old, true)
-        ()
       }
       .start()
 

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 
 import graft.operators.{ChangeLog, SyncMode}
-import graft.sinks.{FileSink, GcsAuth, SinkSpec}
+import graft.sinks.{FileSink, GcsAuth, SinkSpec, StagedSwap}
 
 class FileSinkSpec extends AnyFunSuite with SparkTestBase {
 
@@ -83,7 +83,8 @@ class FileSinkSpec extends AnyFunSuite with SparkTestBase {
     assert(spark.read.parquet(dir).as[(Long, Long)].collect().toSet ==
       (0L until 20000L).map(i => (i, i * 7)).toSet)
     val parent = Paths.get(dir).getParent.toFile.listFiles.map(_.getName).toSet
-    assert(!parent.exists(_.contains("__compact")), s"staging left behind: $parent")
+    assert(!parent.exists(n => n.endsWith(StagedSwap.NextSuffix) || n.endsWith(StagedSwap.OldSuffix)),
+      s"staging left behind: $parent")
   }
 
   test("partitioned compact collapses every leaf in place; pruning layout and rows survive") {
@@ -103,6 +104,33 @@ class FileSinkSpec extends AnyFunSuite with SparkTestBase {
       (0L until 9000L).filter(_ % 3 == 1).toSet)
     val pruned = back.filter(col("part") === 2).queryExecution.executedPlan.toString()
     assert(pruned.contains("PartitionFilters: [isnotnull(part"), pruned.take(800))
+  }
+
+  test("partitioned compact: a corrupt leaf fails the run, and every leaf is left whole with no staging") {
+    import spark.implicits._
+    val dir = tmpDir("graft-compact-corrupt")
+    spark.range(0, 6000).select(col("id"), (col("id") % 6).cast("int").as("part"))
+      .write.option("maxRecordsPerFile", "200").partitionBy("part").parquet(dir)
+    def leaf(p: Int) = Paths.get(dir, s"part=$p")
+    def contents(p: Int): Set[Long] = spark.read.parquet(leaf(p).toString).as[Long].collect().toSet
+    val rows = (0 until 6).map(p => p -> contents(p)).toMap
+    Files.write(leaf(3).resolve("part-99999-corrupt.parquet"), "not a parquet file".getBytes)
+    intercept[Exception](FileSink.compactPartitioned(spark, dir, targetFileBytes = 64L * 1024 * 1024))
+    val names = Paths.get(dir).toFile.list().toSeq
+    assert(!names.exists(n => n.endsWith(StagedSwap.NextSuffix) || n.endsWith(StagedSwap.OldSuffix)),
+      s"staging left behind: $names")
+    for (p <- (0 until 6) if p != 3)
+      assert(contents(p) == rows(p), s"leaf part=$p lost rows")
+    assert(leaf(3).toFile.list().count(_.endsWith(".parquet")) > 1, "the corrupt leaf was rewritten")
+    // A crash between a leaf's two renames leaves only <leaf>.__old; the
+    // next run finds that leaf, restores it and compacts it.
+    Files.delete(leaf(3).resolve("part-99999-corrupt.parquet"))
+    Files.move(leaf(0), Paths.get(dir, s"part=0${StagedSwap.OldSuffix}"))
+    val results = FileSink.compactPartitioned(spark, dir, targetFileBytes = 64L * 1024 * 1024)
+    assert(results.map(_._1).toSet == (0 until 6).map(p => s"part=$p").toSet)
+    assert((0 until 6).forall(p => contents(p) == rows(p)))
+    assert(Paths.get(dir).toFile.list().filterNot(_.startsWith(".")).toSet ==
+      (0 until 6).map(p => s"part=$p").toSet + "_SUCCESS")
   }
 
   test("compact on an empty directory is a no-op, not a schema-inference crash") {

@@ -11,7 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * had been orphaned by later insertions. This spec makes both failure
   * modes (missing comment, comment absorbed by a neighbor) loud at
   * test time instead of judge time. The same source scan keeps the
-  * engine's environment reads to the allowlisted deployment settings.
+  * engine's environment reads to the allowlisted deployment settings,
+  * and keeps thread pools and directory renames in their one owner
+  * each.
   */
 class RegistryDocSpec extends AnyFunSuite {
 
@@ -58,6 +60,26 @@ class RegistryDocSpec extends AnyFunSuite {
     assert(unlisted.isEmpty, s"reads outside the allowlist: ${unlisted.mkString(", ")}")
     val unread = allowed -- reads.map(_._1)
     assert(unread.isEmpty, s"allowlisted but never read: ${unread.mkString(", ")}")
+  }
+
+  test("thread pools, futures and directory renames live only in Jobs and StagedSwap") {
+    // Concurrent job submission goes through Jobs.overlap (labels,
+    // sibling cancellation) and directory swaps through StagedSwap
+    // (crash recovery, replay marks); a hand-written copy elsewhere
+    // would skip both.
+    val owners = Set("Jobs.scala", "StagedSwap.scala")
+    val rx = """scala\.concurrent|ExecutionContext|Executors\.new|\.rename\(""".r
+    val files = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector
+      finally walk.close()
+    }
+    val copies = files.filterNot(f => owners(f.getFileName.toString)).flatMap { f =>
+      java.nio.file.Files.readString(f).linesIterator.zipWithIndex.collect {
+        case (ln, i) if rx.findFirstIn(ln).isDefined => s"$f:${i + 1}: ${ln.trim}"
+      }
+    }
+    assert(copies.isEmpty, s"use graft.Jobs.overlap / graft.sinks.StagedSwap instead:\n${copies.mkString("\n")}")
   }
 
   test("gate names are unique") {
