@@ -77,14 +77,28 @@ object Jobs {
     }
   }
 
+  /** Run `body` with the job tag `graft:<op>:<step>` on every job it
+    * starts. The job description and the caller's other local
+    * properties are left as they are.
+    */
+  def labelled[T](spark: SparkSession, op: String, step: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val label = s"graft:$op:$step"
+    if (sc.getJobTags().contains(label)) body
+    else {
+      sc.addJobTag(label)
+      try body finally sc.removeJobTag(label)
+    }
+  }
+
   /** Run `tasks` concurrently, at most [[MaxInFlight]] at a time, on a
     * pool owned by this call, and return their results in task order.
     *
     * Each task runs with the caller's Spark local properties as they are
     * at call time (job description, job group, tags, scheduler pool),
-    * plus the job tag `graft:<op>:<step>`; the description is left as
-    * the caller set it. Nested calls do not deadlock: each call has its
-    * own threads.
+    * plus the job tag `graft:<op>:<step>` ([[labelled]]); the description
+    * is left as the caller set it. Nested calls do not deadlock: each
+    * call has its own threads.
     *
     * On the first failure the call cancels every job its tasks started
     * (through a tag unique to the call, which nested calls inherit),
@@ -96,7 +110,6 @@ object Jobs {
   def overlap[T](spark: SparkSession, op: String, step: String)(tasks: (() => T)*): Seq[T] = {
     if (tasks.isEmpty) return Seq.empty
     val sc = spark.sparkContext
-    val label = s"graft:$op:$step"
     val callTag = s"graft-overlap-${callSeq.incrementAndGet()}"
     val first = new AtomicReference[Throwable]()
     val pool = Executors.newFixedThreadPool(math.min(MaxInFlight, tasks.size))
@@ -105,16 +118,16 @@ object Jobs {
         SQLExecution.withThreadLocalCaptured(castToImpl(spark), pool) {
           if (first.get != null) None
           else {
-            sc.addJobTags(Set(callTag, label))
-            Some(settled(sc) {
+            sc.addJobTag(callTag)
+            Some(labelled(spark, op, step)(settled(sc) {
               try task()
               catch {
                 case t: Throwable =>
                   if (first.compareAndSet(null, t))
-                    sc.cancelJobsWithTag(callTag, s"a sibling task of $label failed")
+                    sc.cancelJobsWithTag(callTag, s"a sibling task of graft:$op:$step failed")
                   throw t
               }
-            })
+            }))
           }
         }
       }

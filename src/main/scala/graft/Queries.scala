@@ -1049,7 +1049,10 @@ object Queries {
     // codebook parquet), load, query from the loaded index. Same oracle
     // as q_ann_pq: the disk round trip must be lossless to the row.
     // This is the production read path (train once offline, query many
-    // times); per-run temp dir like the sink roundtrips.
+    // times); per-run temp dir like the sink roundtrips. The loaded index
+    // is small, so this gate runs pqTopKFromIndex's driver tier (its
+    // 10-row query side is collected in one job); q_ann_pq and
+    // q_ann_ivfpq keep the distributed plan.
     Entry("q_ann_pq_saved",
       (s, d) => {
         val emb = t(s, d, "embeddings")

@@ -24,24 +24,17 @@ private[graft] object LocalGraph {
   val MaxEdges: Long = 200000L
 
   /** The rows of `df` when the local tier applies — every column long,
-    * at most `ceiling` rows, no null anywhere — else `None`.
+    * at most `ceiling` rows ([[DriverRows.collect]], at most one job),
+    * no null anywhere — else `None`.
     *
     * `knownCount` is a row count the caller already holds (connected
     * components' signature probe, KCore's edge count), so no job counts
-    * again. Without one the gate collects at most `ceiling + 1` rows in
-    * ONE job: `coalesce(1)` makes the limit scan a single partition,
-    * where a multi-partition limit scales up over several jobs.
+    * again.
     */
   def collect(df: DataFrame, ceiling: Long,
-              knownCount: Option[Long] = None): Option[Array[Row]] = {
-    if (knownCount.exists(_ > ceiling) ||
-        !df.schema.fields.forall(_.dataType == LongType)) return None
-    val rows =
-      if (knownCount.isDefined) df.collect()
-      else df.coalesce(1).limit(math.min(ceiling, Int.MaxValue - 1L).toInt + 1).collect()
-    if (rows.length > ceiling || rows.exists(_.anyNull)) None
-    else Some(rows)
-  }
+              knownCount: Option[Long] = None): Option[Array[Row]] =
+    if (!df.schema.fields.forall(_.dataType == LongType)) None
+    else DriverRows.collect(df, ceiling, knownCount).filterNot(_.exists(_.anyNull))
 
   /** A local tier's (a, b) result frame of two long columns. `a` is
     * nullable and `b` is `bNullable`, mirroring the distributed loop's

@@ -245,6 +245,54 @@ class NativeExprSpec extends AnyFunSuite with SparkTestBase {
     assert(diff == 0L)
   }
 
+  test("PqAdcScore eval == generated code, bitwise, with an unmatched code scoring 0.0") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeArrayData}
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.graft.PqAdcScore
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
+    val (emb, _, _, cellsArr, centsArr) = pqFix
+    val (codes, _) = graft.operators.Pq.pqModel(
+      emb, "embedding", "vec_id", PqDim, PqM, PqKsub, iters = 2)
+    // Vector 0's subspace-2 code names no cell of the codebook.
+    val unmatched = 1000000L
+    val planted = codes.withColumn("codes", when(col("vec_id") === 0L,
+      transform(col("codes"), (c, j) => when(j === 2, lit(unmatched)).otherwise(c)))
+      .otherwise(col("codes")))
+    val q = emb.filter(col("vec_id") < 6)
+      .select(col("vec_id").as("query_id"),
+        transform(col("embedding"), x => x.cast("double")).as("_qv"))
+    val scored = planted.join(q, col("vec_id") =!= col("query_id"))
+      .select(col("vec_id"), col("codes"), col("_qv"),
+        PqAdcScore(col("codes"), col("_qv"), cellsArr, centsArr, PqSubLen).as("gen"))
+    val expr = PqAdcScore(BoundReference(0, ArrayType(LongType), nullable = false),
+      BoundReference(1, ArrayType(DoubleType), nullable = false), cellsArr, centsArr, PqSubLen)
+    val got = scored.collect()
+    object Plans extends AdaptiveSparkPlanHelper
+    assert(Plans.collectFirst(scored.queryExecution.executedPlan) {
+      case w: WholeStageCodegenExec if w.toString.contains("graft_pq_adc") => w
+    }.isDefined, "the score was not generated code")
+    assert(got.count(_.getLong(0) == 0L) == 5 && got.length > 6 * 100)
+    for (r <- got) {
+      val c = r.getSeq[Long](1).toArray
+      val qv = r.getSeq[Double](2).toArray
+      val eval = expr.eval(InternalRow(UnsafeArrayData.fromPrimitiveArray(c),
+        UnsafeArrayData.fromPrimitiveArray(qv))).asInstanceOf[Double]
+      assert(java.lang.Double.doubleToRawLongBits(eval) ==
+        java.lang.Double.doubleToRawLongBits(r.getDouble(3)), s"vector ${r.getLong(0)}")
+      if (r.getLong(0) == 0L) {
+        // The same left fold with subspace 2 adding 0.0.
+        val want = (0 until PqM).foldLeft(0.0) { (acc, j) =>
+          val idx = java.util.Arrays.binarySearch(cellsArr(j), c(j))
+          acc + (if (idx < 0) 0.0 else centsArr(j)(idx).indices.foldLeft(0.0)(
+            (dp, i) => dp + qv(j * PqSubLen + i) * centsArr(j)(idx)(i)))
+        }
+        assert(c(2) == unmatched && eval == want)
+      }
+    }
+  }
+
   test("PolyFingerprint native == HOF formulation on documents + edge strings") {
     import spark.implicits._
     val docs = Tables.load(spark, sf, "documents").select(col("text"))
