@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.operators.{RowHash, Sync, SyncMode}
+import graft.operators.{ChangeLog, DriverRows, RowHash, Sync, SyncMode}
 import graft.sinks.{FileSink, SinkSpec}
 
 /** End-to-end export pipeline façade — the Scala shape of the reference's
@@ -67,9 +67,33 @@ object Engine {
     * 115–116) and anchors to `nowMs` (export.py:143–144). A real Delta
     * source drops in here unchanged when a delta jar is available; the
     * parquet emulation is just one implementation.
+    *
+    * Two tiers for an incremental window, with the same sink rows,
+    * returned rows, schema and watermark:
+    *  - Held window: with a sink configured and at most
+    *    [[graft.operators.ChangeLog.MaxDriverBatchRows]] rows, the window
+    *    is collected once ([[graft.operators.DriverRows.collect]], one
+    *    job tagged `graft:cdc:collect_window`), the sink is written from
+    *    the held rows, hashed in the write, as one file
+    *    (`maxRecordsPerFile` still splits it), and `SyncResult.df` is a
+    *    driver-local frame over those rows, so a caller's
+    *    [[graft.operators.ChangeLog.cdcMergeApply]] reads no log and
+    *    merges in one job.
+    *  - Lazy plan, everything else: no sink (no job runs at all), a
+    *    window over the ceiling (the collect stops at `ceiling + 1` rows
+    *    and the sink is written from the plan, one file per non-empty
+    *    scan partition; that collect is the cost a window over the
+    *    ceiling pays), and the first sync, whose snapshot fold a probe
+    *    could only size by running its whole aggregation.
     */
   def runCdc(src: sources.ChangeSource, timeCutoffMs: Long, nowMs: Long,
-             hash: Option[HashSpec], sink: Option[SinkSpec]): SyncResult = {
+             hash: Option[HashSpec], sink: Option[SinkSpec]): SyncResult =
+    runCdcWith(src, timeCutoffMs, nowMs, hash, sink, ChangeLog.MaxDriverBatchRows)
+
+  /** [[runCdc]] with the held window's ceiling as a parameter. */
+  private[graft] def runCdcWith(src: sources.ChangeSource, timeCutoffMs: Long, nowMs: Long,
+                                hash: Option[HashSpec], sink: Option[SinkSpec],
+                                maxHeldRows: Long): SyncResult = {
     val (df0, watermark) =
       if (timeCutoffMs == 0) {
         val endMs = src.latestCommitMs()
@@ -77,9 +101,15 @@ object Engine {
       } else {
         (src.tableChanges(timeCutoffMs + 1, nowMs), nowMs)
       }
-    val out = hash.fold(df0)(h => RowHash.withHashColumn(df0, h.column, h.ignoreColumns))
-    sink.foreach(FileSink.write(out, _))
-    SyncResult(out, watermark)
+    def hashed(df: DataFrame) =
+      hash.fold(df)(h => RowHash.withHashColumn(df, h.column, h.ignoreColumns))
+    // The hash is computed over the held rows, not collected with them:
+    // the sink write keeps the row hash in its own plan (above the
+    // coalesce, which the optimizer does not fold into the relation).
+    val held = sink.filter(_ => timeCutoffMs != 0).flatMap(_ =>
+      Jobs.labelled(df0.sparkSession, "cdc", "collect_window")(DriverRows.hold(df0, maxHeldRows)))
+    sink.foreach(FileSink.write(hashed(held.fold(df0)(_.coalesce(1))), _))
+    SyncResult(hashed(held.getOrElse(df0)), watermark)
   }
 
   /** CDC with user-supplied SQL (export.py:145–153): the watermark picks

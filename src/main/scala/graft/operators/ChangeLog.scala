@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Emulation of the Delta facilities the reference's `cdc` sync type uses —
   * time travel (`TIMESTAMP AS OF`, export.py:114), the `table_changes` TVF
@@ -17,15 +18,33 @@ import org.apache.spark.sql.functions._
   * mapping consumes (export.py:121–126).
   *
   * Scale notes: every operator here is a scan + narrow filter/projection
-  * (plus one hash aggregate for the snapshot fold), so parquet min/max
-  * row-group skipping on `_commit_timestamp` prunes the range scans
-  * automatically, and the snapshot fold uses `max_by` partial aggregation
-  * rather than a windowed sort (one row per key per mapper on the shuffle).
+  * (plus one hash aggregate for the snapshot fold), and the snapshot fold
+  * uses `max_by` partial aggregation rather than a windowed sort (one row
+  * per key per mapper on the shuffle). [[tableChanges]] adds raw-column
+  * bounds on `_commit_timestamp`, so a log whose commit column carries
+  * parquet statistics (written as `TIMESTAMP_MICROS` or
+  * `TIMESTAMP_MILLIS`) skips the row groups outside the window. An INT96
+  * column (Spark's default `outputTimestampType`) has no statistics, so
+  * such a log is read in full.
   */
 object ChangeLog {
   val ChangeType = "_change_type"
   val CommitTs = "_commit_timestamp"
   val MpChangeType = "_mp_change_type"
+
+  /** Most rows of a CDC batch held on the driver: the incremental window
+    * [[graft.Engine.runCdc]] collects when it writes a sink, and the
+    * driver-local batch [[cdcMergeApply]], [[scd2Apply]] and
+    * [[aggMaintainApply]] merge in one partition. Set below where
+    * holding stops paying: the held tier scans the log in one task,
+    * writes the sink in one task and folds the merge in one task. Cycle
+    * p50 held against lazy, 4-vCPU host, `local[4]`, the benchmark's log
+    * shape: at 60 k log rows, ~2 k-row windows 0.75 s against 0.97 s and
+    * ~6 k-row windows 1.05 s against 1.04 s; at 600 k log rows, ~2.5 k-row
+    * windows 0.98 s against 1.06 s, ~5.5 k-row windows 0.98 s against
+    * 1.03 s and ~20 k-row windows 1.66 s against 1.23 s.
+    */
+  val MaxDriverBatchRows: Long = 1L << 12
 
   /** Commit timestamp at MILLISECOND precision (ms epoch). Delta CDF bounds
     * `table_changes` at millisecond ISO timestamps (export.py:115–127) and
@@ -66,10 +85,26 @@ object ChangeLog {
     * This emulation needs no analogue: the bounds here are plain filter
     * predicates, so an out-of-range window simply yields zero rows
     * instead of throwing — the behavior that flag opts into.
+    *
+    * The exact predicate is on the ms projection, an expression no
+    * source can push down. Beside it sit the raw-column bounds it
+    * implies, `_commit_timestamp` in
+    * `[timestamp_micros(1000·start − 999), timestamp_micros(1000·end + 999)]`:
+    * `div` truncates toward zero, so a row within the ms bounds is
+    * within these for either sign of the epoch, and no row is dropped.
+    * Parquet skips row groups on them when the column has statistics
+    * (see the object doc); a bound whose micros would overflow a long
+    * is left out.
     */
-  def tableChanges(log: DataFrame, startMs: Long, endMs: Long): DataFrame =
-    log.filter(commitMs >= startMs && commitMs <= endMs)
+  def tableChanges(log: DataFrame, startMs: Long, endMs: Long): DataFrame = {
+    def micros(ms: Long, off: Long) =
+      scala.util.Try(Math.addExact(Math.multiplyExact(ms, 1000L), off)).toOption
+        .map(us => timestamp_micros(lit(us)))
+    val raw = micros(startMs, -999L).map(col(CommitTs) >= _).toSeq ++
+      micros(endMs, 999L).map(col(CommitTs) <= _)
+    log.filter((raw :+ (commitMs >= startMs && commitMs <= endMs)).reduce(_ && _))
       .select(mpChangeType(col(ChangeType)).as(MpChangeType) +: log.columns.map(col): _*)
+  }
 
   /** S2 — `SELECT 'INSERT' as _mp_change_type, * FROM t TIMESTAMP AS OF ts`
     * (export.py:112–114): reconstruct the table state at `tsMs` by folding
@@ -164,24 +199,98 @@ object ChangeLog {
     * over the change-log convention: splice a change batch into an
     * existing [[cdcMergeState]] by re-folding ONLY the touched keys
     * (null-safe key match, like [[scd2Apply]]); untouched rows pass
-    * through one anti join. Cost scales with the batch, not the
-    * dimension. Equality contract (gate + spec):
-    * `cdcMergeApply(cdcMergeState(log ≤ T), changes > T)` equals
-    * `cdcMergeState(full log)` for any split — the fold is associative
-    * and commutative under the (ms, tie-break) comparator.
+    * through. Cost scales with the batch, not the dimension. Equality
+    * contract (gate + spec): `cdcMergeApply(cdcMergeState(log ≤ T),
+    * changes > T)` equals `cdcMergeState(full log)` for any split — the
+    * fold is associative and commutative under the (ms, tie-break)
+    * comparator — and applying the same batch twice leaves the state
+    * as one application does.
+    *
+    * Two plans, with the same rows ([[splitTouched]]):
+    *  - Driver-local batch (a `LocalRelation`, e.g. the window
+    *    [[graft.Engine.runCdc]] holds when it writes a sink): the touched
+    *    keys are read from the batch's plan, with no job, into a
+    *    null-safe `IN` literal predicate; `state` is filtered twice by it
+    *    and the touched rows fold with the batch in one partition, so
+    *    the merge plans no exchange and is the caller's one write job.
+    *  - Any other batch (a file scan, a streaming micro-batch, a batch
+    *    over [[MaxDriverBatchRows]] rows, a key of a type outside the
+    *    literal set): the touched keys are broadcast to a
+    *    left-anti and a left-semi join on the state, and the fold is a
+    *    hash aggregate over the key exchange.
     */
   def cdcMergeApply(state: DataFrame, changes: DataFrame,
                     keyCols: Seq[String], tieBreakCol: String): DataFrame = {
     val newEvents = projectMergeEvents(changes)
-    // Broadcast hint: see scd2Apply — the touched set is batch-sized and
-    // the planner would otherwise sort-merge the dimension twice.
-    val touched = broadcast(newEvents.select(keyCols.map(col): _*).distinct())
-    val matchCond = keyCols.map(k => state(k) <=> touched(k)).reduce(_ && _)
-    val untouched = state.join(touched, matchCond, "left_anti")
-    val replayed = state.join(touched, matchCond, "left_semi")
-    untouched.unionByName(
-      foldMergeEvents(replayed.unionByName(newEvents), keyCols, tieBreakCol))
+    val s = splitTouched(state, newEvents, keyCols)
+    s.untouched.unionByName(
+      foldMergeEvents(s.fold(s.touched.unionByName(newEvents)), keyCols, tieBreakCol))
   }
+
+  /** The state of a maintenance fold split by a change batch's keys:
+    * `touched` holds the state rows whose key appears in the batch
+    * (null-safe, as `<=>`), `untouched` the rest. `fold` wraps the input
+    * of the per-key re-fold: one partition when the batch is
+    * driver-local, so the fold plans no exchange.
+    */
+  private final case class Split(untouched: DataFrame, touched: DataFrame, local: Boolean) {
+    def fold(input: DataFrame): DataFrame = if (local) input.coalesce(1) else input
+  }
+
+  /** The touched/untouched split [[cdcMergeApply]], [[scd2Apply]] and
+    * [[aggMaintainApply]] share. `batch` is any frame holding `keyCols`.
+    *
+    * When `batch` is driver-local, of at most [[MaxDriverBatchRows]]
+    * rows, and every key column has a type whose literal equality is
+    * `<=>` (integers, booleans, dates, timestamps, strings of the
+    * default binary collation), the distinct key tuples are read from
+    * its plan (no job) into a literal predicate: `k IN (…)` with the
+    * null key matched by `IS NULL` for one column, a struct `IN` for
+    * several (struct fields compare null-equal). The predicate is never
+    * null, so `untouched` is exactly its negation. Otherwise the key set
+    * is broadcast: the planner cannot size a distinct() over an arbitrary
+    * plan and would otherwise sort-merge the dimension twice (measured
+    * 14× slower at a 20 M-row state, BASELINE.md round-9 CDC
+    * rehearsal); with the hint both probes are map-side hash lookups on
+    * the state scan. The match is null-safe in both plans: a null key is
+    * a real version chain, and a plain equi-join would neither replay
+    * it (semi misses) nor retire it (anti keeps).
+    */
+  private def splitTouched(state: DataFrame, batch: DataFrame, keyCols: Seq[String]): Split = {
+    val keys = batch.select(keyCols.map(col): _*)
+    val types = keys.schema.map(_.dataType)
+    val literal = types == state.select(keyCols.map(col): _*).schema.map(_.dataType) &&
+      types.forall {
+        case ByteType | ShortType | IntegerType | LongType | BooleanType | DateType |
+             TimestampType | TimestampNTZType | StringType => true
+        case _ => false
+      }
+    val held =
+      if (literal && DriverRows.local(keys).isDefined) DriverRows.collect(keys, MaxDriverBatchRows)
+      else None
+    held match {
+      case Some(rows) =>
+        val touched = keyIn(keyCols, types, rows.distinct.toSeq)
+        Split(state.filter(!touched), state.filter(touched), local = true)
+      case None =>
+        val t = broadcast(keys.distinct())
+        val matchCond = keyCols.map(k => state(k) <=> t(k)).reduce(_ && _)
+        Split(state.join(t, matchCond, "left_anti"), state.join(t, matchCond, "left_semi"),
+          local = false)
+    }
+  }
+
+  /** Null-safe, never-null membership of the key tuple in `keys`. */
+  private def keyIn(keyCols: Seq[String], types: Seq[DataType], keys: Seq[Row]): Column =
+    keyCols match {
+      case Seq(k) =>
+        val (nulls, vals) = keys.map(_.get(0)).partition(_ == null)
+        val in = col(k).isin(vals: _*)
+        if (nulls.isEmpty) col(k).isNotNull && in else col(k).isNull || in
+      case _ =>
+        struct(keyCols.map(col): _*).isin(keys.map(r => struct(keyCols.indices.map(i =>
+          lit(r.get(i)).cast(types(i)).as(keyCols(i))): _*)): _*)
+    }
 
   /** User-facing view of a [[cdcMergeState]]: tombstones out, merge
     * bookkeeping dropped, rows tagged `'INSERT'` — the same shape
@@ -270,18 +379,24 @@ object ChangeLog {
     * dimension of TBs. Only keys touched by the batch are rewritten:
     *
     *   1. `touched` = distinct keys in the batch (delta-sized);
-    *   2. untouched state rows pass through via one LEFT ANTI join;
+    *   2. untouched state rows pass through ([[splitTouched]]: a literal
+    *      key predicate for a driver-local batch, else a broadcast LEFT
+    *      ANTI join);
     *   3. touched keys' existing rows are stripped back to their events
     *      (key, tie-break, data, change type, valid_from_ms — all
     *      retained in the state), unioned with the batch's events, and
     *      re-windowed per key.
     *
     * Cost scales with (touched history + batch), never with the full
-    * dimension; the anti/semi joins are broadcast-able whenever the
-    * batch's key set is small. Equality contract (spec + oracle gate):
+    * dimension. Equality contract (spec + oracle gate):
     * `scd2Apply(scd2State(log ≤ T), changes > T) == scd2State(full log)`
     * for ANY split — the window recomputation sees the identical per-key
-    * event multiset, so even out-of-order batch boundaries hold.
+    * event multiset, so even out-of-order batch boundaries hold. Not
+    * idempotent: a batch applied twice adds its versions twice, so a
+    * rerun must be skipped by the caller (`StreamSync`'s batch mark).
+    * The key match is null-safe: a window's null partition is a real
+    * version chain, and matching it by `=` would split it into two
+    * version-1 "current" rows when a null-key change arrives.
     */
   def scd2Apply(state: DataFrame, changes: DataFrame, keyCols: Seq[String],
                 tieBreakCol: String, dataCols: Seq[String]): DataFrame = {
@@ -290,23 +405,9 @@ object ChangeLog {
     val newEvents = changes.filter(col(ChangeType) =!= "update_preimage")
       .select((keyCols ++ Seq(tieBreakCol) ++ dataCols).distinct.map(col)
         :+ col(ChangeType) :+ commitMs.as("valid_from_ms"): _*)
-    // BROADCAST the touched-key set: it is batch-sized by the operator's
-    // own delta contract, but the planner cannot size a distinct() over
-    // an arbitrary plan and falls back to TWO full sort-merge passes
-    // over the dimension (measured 14× slower at a 20 M-row state,
-    // BASELINE.md round-9 CDC rehearsal). With the hint both the anti
-    // and semi probes are map-side hash lookups on the state scan.
-    val touched = broadcast(newEvents.select(keyCols.map(col): _*).distinct())
-    // NULL-SAFE key match (`<=>`): a window's null partition is a real
-    // version chain, and a plain equi-join would neither replay it
-    // (semi misses) nor retire it (anti keeps) when a null-key change
-    // arrives — splitting the chain into two version-1 "current" rows.
-    val matchCond = keyCols.map(k => state(k) <=> touched(k)).reduce(_ && _)
-    val untouched = state.join(touched, matchCond, "left_anti")
-    val replayed = state.join(touched, matchCond, "left_semi")
-      .select(eventCols: _*)
-    untouched.unionByName(
-      scd2Windowize(replayed.unionByName(newEvents), keyCols, tieBreakCol))
+    val s = splitTouched(state, newEvents, keyCols)
+    s.untouched.unionByName(scd2Windowize(
+      s.fold(s.touched.select(eventCols: _*).unionByName(newEvents)), keyCols, tieBreakCol))
   }
 
   /** POINT-IN-TIME dimension lookup over an SCD2 history — join each
@@ -401,22 +502,19 @@ object ChangeLog {
     aggDelta(log, keyCols, valueCol)
 
   /** Splice a change batch into an existing [[aggMaintainState]]. The
-    * delta aggregate is batch-sized; with the broadcast hint (sizing
-    * rationale at [[scd2Apply]]) the anti/semi probes are map-side hash
-    * lookups on the state scan — cost scales with the batch, never the
-    * state. Zero rows are NOT retired here (a (0, 0) key row is
-    * algebraically identical to an absent one under this merge);
-    * [[aggPresent]] hides them from readers.
+    * delta aggregate is batch-sized and only the state rows of the
+    * batch's keys are re-summed ([[splitTouched]]) — cost scales with
+    * the batch, never the state. Zero rows are NOT retired here (a
+    * (0, 0) key row is algebraically identical to an absent one under
+    * this merge); [[aggPresent]] hides them from readers. Not
+    * idempotent: a batch applied twice counts twice, so a rerun must be
+    * skipped by the caller (`StreamSync`'s batch mark).
     */
   def aggMaintainApply(state: DataFrame, changes: DataFrame,
                        keyCols: Seq[String], valueCol: String): DataFrame = {
-    val delta = aggDelta(changes, keyCols, valueCol)
-    val touched = broadcast(delta.select(keyCols.map(col): _*))
-    val matchCond = keyCols.map(k => state(k) <=> touched(k)).reduce(_ && _)
-    val untouched = state.join(touched, matchCond, "left_anti")
-    val replayed = state.join(touched, matchCond, "left_semi")
-    untouched.unionByName(
-      replayed.unionByName(delta)
+    val s = splitTouched(state, changes, keyCols)
+    s.untouched.unionByName(
+      s.fold(s.touched.unionByName(aggDelta(s.fold(changes), keyCols, valueCol)))
         .groupBy(keyCols.map(col): _*)
         .agg(sum(col("n_rows")).as("n_rows"),
           sum(col("sum_value_q6")).as("sum_value_q6")))

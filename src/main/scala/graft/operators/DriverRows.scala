@@ -1,12 +1,16 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
 /** The one bounded collect behind the driver-resident tiers: the graph
-  * loops' ([[LocalGraph]]) and PQ top-k's ([[Pq.pqTopKFromIndex]]).
-  * Each caller adds its own checks on the rows it gets.
+  * loops' ([[LocalGraph]]), PQ top-k's ([[Pq.pqTopKFromIndex]]) and the
+  * CDC window's ([[graft.Engine.runCdc]], read back by
+  * [[ChangeLog.cdcMergeApply]] and the other maintenance folds). Each
+  * caller adds its own checks on the rows it gets.
   */
 private[graft] object DriverRows {
 
@@ -45,4 +49,10 @@ private[graft] object DriverRows {
     }
     if (rows.length > ceiling) None else Some(rows)
   }
+
+  /** [[collect]] as a driver-local frame with `df`'s schema (nullability
+    * included), or `None` over the ceiling.
+    */
+  def hold(df: DataFrame, ceiling: Long): Option[DataFrame] =
+    collect(df, ceiling).map(rows => df.sparkSession.createDataFrame(rows.toSeq.asJava, df.schema))
 }

@@ -370,8 +370,7 @@ object Pq {
         .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2))))
     val codes = Jobs.labelled(spark, "pq", "load_codes") {
       val read = spark.read.parquet(s"$dir/codes.parquet")
-      DriverRows.collect(read, MaxDriverPairs)
-        .fold(read)(rows => spark.createDataFrame(rows.toSeq.asJava, read.schema))
+      DriverRows.hold(read, MaxDriverPairs).getOrElse(read)
     }
     (codes, cents)
   }

@@ -68,9 +68,11 @@ trait ChangeSource {
   * a parquet log needs row identity explicit to fold snapshots.
   *
   * All three operations delegate to [[graft.operators.ChangeLog]]; the
-  * scale shapes (narrow range filters that parquet row-group min/max
-  * skipping prunes, one `max_by` hash-aggregate snapshot fold) are
-  * documented there.
+  * scale shapes (narrow range filters, one `max_by` hash-aggregate
+  * snapshot fold) are documented there. The range filter carries raw
+  * `_commit_timestamp` bounds, so parquet skips row groups only when
+  * the log stores that column with statistics (`TIMESTAMP_MICROS` or
+  * `TIMESTAMP_MILLIS`); an INT96 log, Spark's default, is read in full.
   */
 final case class ParquetChangeLog(log: DataFrame, keyCols: Seq[String])
     extends ChangeSource {

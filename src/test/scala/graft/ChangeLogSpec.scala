@@ -2,7 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import java.nio.file.Files
 import java.sql.Timestamp
+
+import org.apache.spark.graft.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.FileSourceScanExec
 
 import graft.operators.ChangeLog
 
@@ -216,6 +221,59 @@ class ChangeLogSpec extends AnyFunSuite with SparkTestBase {
       .select("id").collect().map(_.getLong(0)).toSet
     assert(first == Set(1L, 2L))
     assert(second == Set(3L))
+  }
+
+  test("tableChanges: implied raw-column bounds skip row groups of a TIMESTAMP_MICROS log and drop no row") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lit, timestamp_micros}
+    // Windows in ms: before 1970, across the epoch, after it.
+    val windows = Seq((-5000L, -2000L), (-3L, 2L), (1700000000000L, 1700000000007L))
+    val offsets = Seq(-1000L, -999L, -998L, -1L, 0L, 1L, 998L, 999L, 1000L, 1001L)
+    val micros = windows.flatMap { case (s, e) =>
+      offsets.flatMap(o => Seq(1000L * s + o, 1000L * e + o)) }.distinct.sorted
+    // One row per file, so a row group's statistics are that row's value.
+    def write(tsType: String): org.apache.spark.sql.DataFrame = {
+      val session = spark.newSession()
+      session.conf.set("spark.sql.parquet.outputTimestampType", tsType)
+      val dir = Files.createTempDirectory("graft-cl-prune").resolve("log").toString
+      session.createDataFrame(micros.zipWithIndex.map { case (u, i) => (i.toLong, u) })
+        .toDF("id", "u")
+        .select(col("id"), lit("insert").as(ChangeLog.ChangeType),
+          timestamp_micros(col("u")).as(ChangeLog.CommitTs), col("id").as("part"))
+        .write.partitionBy("part").parquet(dir)
+      spark.read.parquet(dir).drop("part")
+    }
+    def recordsRead(body: => Unit): Long = {
+      val n = new java.util.concurrent.atomic.AtomicLong()
+      val l = new SparkListener {
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+          Option(e.taskMetrics).foreach(m => n.addAndGet(m.inputMetrics.recordsRead))
+      }
+      ListenerBusAccess.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(l)
+      try { body; ListenerBusAccess.drain(spark.sparkContext) }
+      finally spark.sparkContext.removeSparkListener(l)
+      n.get
+    }
+    val idOf = micros.zipWithIndex.map { case (u, i) => u -> i.toLong }.toMap
+    val stats = write("TIMESTAMP_MICROS")
+    val int96 = write("INT96")
+    for ((s, e) <- windows) {
+      // Scala's `/` truncates toward zero, as Spark's `div`.
+      val want = micros.filter(u => u / 1000 >= s && u / 1000 <= e).map(idOf).toSet
+      for ((log, name) <- Seq((stats, "TIMESTAMP_MICROS"), (int96, "INT96"))) {
+        val win = ChangeLog.tableChanges(log, s, e)
+        val pushed = win.queryExecution.executedPlan.collectFirst {
+          case f: FileSourceScanExec => f.metadata("PushedFilters") }.getOrElse("")
+        assert(pushed.contains(s"GreaterThanOrEqual(${ChangeLog.CommitTs}") &&
+          pushed.contains(s"LessThanOrEqual(${ChangeLog.CommitTs}"), s"$name: bounds not pushed: $pushed")
+        var got = Set.empty[Long]
+        val read = recordsRead { got = win.select("id").as[Long].collect().toSet }
+        assert(got == want, s"$name ($s, $e): rows differ from the ms predicate")
+        if (name == "INT96") assert(read == micros.size, s"INT96 ($s, $e): read $read")
+        else assert(read < micros.size / 2 && read >= want.size, s"MICROS ($s, $e): read $read")
+      }
+    }
   }
 
   test("inferChanges classifies insert/delete/update and is null-safe on data columns") {

@@ -167,6 +167,23 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("a driver-local CDC batch merges with no exchange and no broadcast: one stage over the state scan") {
+    import graft.operators.{ChangeLog, DriverRows}
+    val log = ChangeLog.synthesize(Tables.load(spark, sf, "events"), "event_id", "ts")
+      .withColumn("_ms", expr(s"unix_micros(`${ChangeLog.CommitTs}`) div 1000"))
+    val cut = log.agg(max("_ms")).head().getLong(0) - 3600000L
+    val stateDir = java.nio.file.Files.createTempDirectory("graft-plan-state").resolve("s").toString
+    ChangeLog.cdcMergeState(log.filter(col("_ms") <= cut).drop("_ms"), Seq("user_id"), "event_id")
+      .write.parquet(stateDir)
+    val batch = DriverRows.hold(log.filter(col("_ms") > cut).drop("_ms"), Long.MaxValue).get
+    assert(DriverRows.local(batch).isDefined && batch.count() > 0)
+    val merged = ChangeLog.cdcMergeApply(spark.read.parquet(stateDir), batch, Seq("user_id"), "event_id")
+    val plan = merged.queryExecution.executedPlan.toString()
+    assert(!plan.contains("Exchange") && !plan.contains("BroadcastHashJoin"),
+      s"the driver-local merge planned a shuffle or a broadcast:\n$plan")
+    assert(plan.contains("FileScan parquet"), plan)
+  }
+
   test("sequence packing shuffles once, on the group key") {
     val plan = SparkEntry.queries("q_seq_pack")(spark, sf)
       .queryExecution.executedPlan.toString()
