@@ -1,29 +1,38 @@
 package graft.operators
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.graft.PlanFrames
+import org.apache.spark.sql.types.StructType
 
 /** The one bounded collect behind the driver-resident tiers: the graph
   * loops' ([[LocalGraph]]), PQ top-k's ([[Pq.pqTopKFromIndex]]) and the
   * CDC window's ([[graft.Engine.runCdc]], read back by
   * [[ChangeLog.cdcMergeApply]] and the other maintenance folds). Each
-  * caller adds its own checks on the rows it gets.
+  * caller adds its own checks on the rows it gets. [[frame]] is the one
+  * way those tiers hand rows back as a DataFrame.
   */
 private[graft] object DriverRows {
 
-  /** `df`'s relation when its rows already sit on the driver: the
-    * optimized plan is one `LocalRelation` (a `createDataFrame` frame,
-    * with any projection or filter over it folded in). A plan check; no
-    * job runs.
+  /** `df`'s relation when its rows already sit on the driver: the plan is
+    * one `LocalRelation` (a [[frame]] or `createDataFrame` frame, with any
+    * projection or filter over it folded in by the optimizer). A plan
+    * check; no job runs. A frame that is a relation as analyzed is
+    * answered without running the optimizer.
     */
-  def local(df: DataFrame): Option[LocalRelation] =
-    df.queryExecution.optimizedPlan match {
+  def local(df: DataFrame): Option[LocalRelation] = {
+    val qe = df.queryExecution
+    (qe.analyzed match {
+      case l: LocalRelation => l
+      case _ => qe.optimizedPlan
+    }) match {
       case l: LocalRelation if !l.isStreaming => Some(l)
       case _ => None
     }
+  }
 
   /** The rows of `df` when there are at most `ceiling` of them, else
     * `None`.
@@ -54,5 +63,18 @@ private[graft] object DriverRows {
     * included), or `None` over the ceiling.
     */
   def hold(df: DataFrame, ceiling: Long): Option[DataFrame] =
-    collect(df, ceiling).map(rows => df.sparkSession.createDataFrame(rows.toSeq.asJava, df.schema))
+    collect(df, ceiling).map { rows =>
+      val toInternal = CatalystTypeConverters.createToCatalystConverter(df.schema)
+      frame(df.sparkSession, df.schema, rows.toSeq.map(r => toInternal(r).asInstanceOf[InternalRow]))
+    }
+
+  /** A driver-local frame of `rows` (Catalyst values laid out as
+    * `schema`): one `LocalRelation` of `UnsafeRow`s, so reading it back
+    * ([[local]], [[collect]]) or planning a scan over it converts nothing.
+    */
+  def frame(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame = {
+    val toUnsafe = UnsafeProjection.create(schema)
+    PlanFrames.ofPlan(spark,
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows.map(r => toUnsafe(r).copy())))
+  }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** The driver-local tier of the iterative graph operators: connected
@@ -41,10 +42,8 @@ private[graft] object LocalGraph {
     * output so the gate's schema is the same on either tier.
     */
   def frame(spark: SparkSession, rows: Seq[(Long, Long)], a: String, b: String,
-            bNullable: Boolean = true): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.map { case (x, y) => Row(x, y) }.asJava,
-      StructType(Seq(StructField(a, LongType, nullable = true),
-        StructField(b, LongType, bNullable))))
-  }
+            bNullable: Boolean = true): DataFrame =
+    DriverRows.frame(spark,
+      StructType(Seq(StructField(a, LongType, nullable = true), StructField(b, LongType, bNullable))),
+      rows.map { case (x, y) => InternalRow(x, y) })
 }

@@ -1,15 +1,16 @@
 package graft.operators
 
-import scala.collection.mutable
-import scala.jdk.CollectionConverters._
+import scala.collection.{immutable, mutable}
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeArrayData}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, Literal, Round, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.PqAdcScore
-import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.graft.{PlanFrames, PqAdcScore}
+import org.apache.spark.sql.types._
 
 import graft.Jobs
 import graft.sinks.StagedSwap
@@ -48,15 +49,6 @@ import graft.sinks.StagedSwap
   * already pins), and every ranking tie-break is (score, id).
   */
 object Pq {
-
-  /** Squared L2 distance — explicit left fold (seed 0.0, ascending
-    * component order) so the oracle can reproduce it bit-for-bit.
-    */
-  def sqDist(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => (x.cast("double") - y.cast("double")) *
-        (x.cast("double") - y.cast("double"))),
-      lit(0.0), (acc, v) => acc + v)
 
   /** Exploded subvector frame: one row per (vector, subspace) with the
     * double-cast slice. Narrow (Generate + slice), no shuffle.
@@ -213,12 +205,13 @@ object Pq {
   /** Most (query, code) pairs the driver tier of [[pqTopKFromIndex]]
     * scores in one call, and so also the most code rows [[loadIndex]]
     * keeps on the driver. Measured at 64-d, m 8, ksub 32, `local[4]`:
-    * at this ceiling a driver-tier call takes 0.04 s against 0.24 s for
-    * the distributed plan's three jobs, and the held table is 2.5 MB.
-    * The bound is set by the fallback: a distributed plan over a
-    * driver-held code table ships it with every query, which stayed
-    * within noise of a parquet scan at 16 384 codes (0.98-1.18x) but
-    * was 1.4x at 32 768 and 2x at 65 536.
+    * the held index is a [[PackedCodes]] of 24 B per vector (0.40 MB at
+    * this ceiling), and a warm driver-tier call over it takes ~3.4 ms
+    * against 0.24 s for the distributed plan's three jobs. The bound is
+    * set by the fallback: a distributed plan over a driver-held code
+    * table ships it with every query, which stayed within noise of a
+    * parquet scan at 16 384 codes (0.98-1.18x) but was 1.4x at 32 768
+    * and 2x at 65 536.
     */
   val MaxDriverPairs: Long = 1L << 14
 
@@ -229,15 +222,20 @@ object Pq {
     *
     * Two tiers, with the same rows and schema:
     *  - Driver tier: when `codes` is already driver-local (a
-    *    [[loadIndex]] of at most [[MaxDriverPairs]] rows; a plan check),
-    *    the query side collects through [[DriverRows.collect]] (no job
-    *    when `queries` is itself local) and queries × codes is at most
-    *    [[MaxDriverPairs]], every pair is scored on the driver by the
-    *    same `PqAdcScore.nullSafeEval` the generated loop mirrors and
-    *    ranked in Spark's order (`SQLOrderingUtil.compareDoubles` on the
-    *    score, then the id). Rows sharing a query id rank together, as
-    *    in the window. The result is a local relation, so collecting it
-    *    starts no job.
+    *    [[loadIndex]] of at most [[MaxDriverPairs]] rows; a plan check)
+    *    and packs ([[PackedCodes]]: two columns, no null, one code width),
+    *    the query side is read without a job (straight from its relation
+    *    when `queries` is itself local, else through
+    *    [[DriverRows.collect]]) and queries × codes is at most
+    *    [[MaxDriverPairs]]. Each query builds one ADC table, its dot with
+    *    every code value that occurs, by the same fold as
+    *    [[org.apache.spark.sql.graft.PqAdcScore]]; a pair's score is `m`
+    *    lookups into it, summed in `PqAdcScore`'s order, so it is
+    *    bitwise the same. Pairs rank in Spark's order
+    *    (`SQLOrderingUtil.compareDoubles` on the score, then the id), rows
+    *    sharing a query id rank together, as in the window, and the score
+    *    is rounded by Spark's own `Round`. The result is a local relation,
+    *    so collecting it starts no job.
     *  - Distributed tier, everything else (a larger index, a code table
     *    read from disk or freshly trained, any null id, code or vector
     *    component): the query side is broadcast against the code table
@@ -258,12 +256,19 @@ object Pq {
     require(cents.forall(_._3.length == subLen),
       s"every codebook centroid must have dim / m = $subLen components")
     val cb = bySub(cents)
-    val q = queries.select(col(idCol).as("query_id"),
-      transform(col(vecCol), x => x.cast("double")).as("_qv"))
-    driverTopK(codes, q, idCol, k, maxPairs, cb, m, subLen).getOrElse(
+    driverTopK(codes, queries, vecCol, idCol, k, maxPairs, cb, m, subLen).getOrElse {
+      val q = querySide(queries, vecCol, idCol)
       rankTopK(codes.join(broadcast(q), col(idCol) =!= col("query_id"))
-        .withColumn("_s", adcScore(cb, m, subLen)), idCol, k))
+        .withColumn("_s", adcScore(cb, m, subLen)), idCol, k)
+    }
   }
+
+  /** The query side as the distributed plan reads it: `query_id` and the
+    * vector widened to doubles (`_qv`).
+    */
+  private def querySide(queries: DataFrame, vecCol: String, idCol: String): DataFrame =
+    queries.select(col(idCol).as("query_id"),
+      transform(col(vecCol), x => x.cast("double")).as("_qv"))
 
   /** Spark's order for the rank window: score DESC, then id ASC. */
   private val rankOrder: Ordering[(Double, Long)] = (x, y) => {
@@ -271,46 +276,84 @@ object Pq {
     if (c != 0) c else java.lang.Long.compare(x._2, y._2)
   }
 
+  /** The query rows for the driver tier, at most `ceiling` of them and
+    * none with a null, as (`query_id` field, whether the vector column is
+    * nullable, (id, vector as doubles) per row); else `None`.
+    *
+    * A local `queries` with a long `idCol` and a float or double array
+    * `vecCol` is read from its relation, widening each component as
+    * `Cast` does. Any other frame goes through [[querySide]] (so a
+    * missing column fails as it does in the distributed plan) and
+    * [[DriverRows.collect]].
+    */
+  private def queryRows(queries: DataFrame, vecCol: String, idCol: String, ceiling: Long)
+      : Option[(StructField, Boolean, Array[(Long, Array[Double])])] = {
+    def field(name: String) = queries.schema.fields.filter(_.name == name) match {
+      case Array(f) => Some(f)
+      case _ => None
+    }
+    val direct = for {
+      rel <- DriverRows.local(queries)
+      idField <- field(idCol) if idField.dataType == LongType
+      vecField <- field(vecCol)
+      widen <- vecField.dataType match {
+        case ArrayType(FloatType, _) => Some((a: ArrayData, i: Int) => a.getFloat(i).toDouble)
+        case ArrayType(DoubleType, _) => Some((a: ArrayData, i: Int) => a.getDouble(i))
+        case _ => None
+      }
+    } yield (rel.data, idField, vecField, widen)
+    direct match {
+      case Some((data, idField, vecField, widen)) =>
+        val (idPos, vecPos) = (queries.schema.fieldIndex(idCol), queries.schema.fieldIndex(vecCol))
+        def whole(r: InternalRow) = !r.isNullAt(idPos) && !r.isNullAt(vecPos) && {
+          val a = r.getArray(vecPos)
+          (0 until a.numElements()).forall(!a.isNullAt(_))
+        }
+        if (data.size > ceiling || !data.forall(whole)) None
+        else Some((idField.copy(name = "query_id"), vecField.nullable, data.map { r =>
+          val a = r.getArray(vecPos)
+          (r.getLong(idPos), Array.tabulate(a.numElements())(widen(a, _)))
+        }.toArray))
+      case None =>
+        val q = querySide(queries, vecCol, idCol)
+        if (q.schema("query_id").dataType != LongType) None
+        else Jobs.labelled(q.sparkSession, "pq", "collect_queries")(DriverRows.collect(q, ceiling))
+          .filterNot(_.exists(r => r.anyNull || r.getSeq[Any](1).contains(null)))
+          .map(rows => (q.schema("query_id"), q.schema("_qv").nullable,
+            rows.map(r => (r.getLong(0), r.getSeq[Double](1).toArray))))
+    }
+  }
+
   /** The driver tier of [[pqTopKFromIndex]], or `None` where it does not
     * apply. Its schema is the one [[rankTopK]] gives the distributed
     * plan: the ids keep their nullability, `rank` is not nullable, and
     * the score is nullable as the `PqAdcScore` over the same columns.
     */
-  private def driverTopK(codes: DataFrame, q: DataFrame, idCol: String, k: Int,
-                         maxPairs: Long, cb: Map[Int, Array[(Long, Seq[Double])]],
+  private def driverTopK(codes: DataFrame, queries: DataFrame, vecCol: String, idCol: String,
+                         k: Int, maxPairs: Long, cb: Map[Int, Array[(Long, Seq[Double])]],
                          m: Int, subLen: Int): Option[DataFrame] = {
-    val idPos = codes.schema.fieldIndex(idCol)
-    val codesPos = codes.schema.fieldIndex("codes")
-    val idField = codes.schema(idPos)
-    val codesField = codes.schema(codesPos)
+    val idField = codes.schema(idCol)
+    val codesField = codes.schema("codes")
     val (cellArr, centArr) = cbArrays(cb, m)
-    val score = PqAdcScore(
-      BoundReference(0, codesField.dataType, codesField.nullable),
-      BoundReference(1, q.schema("_qv").dataType, q.schema("_qv").nullable),
-      cellArr, centArr, subLen)
-    def whole(a: ArrayData) = (0 until a.numElements()).forall(!a.isNullAt(_))
     for {
       rel <- DriverRows.local(codes)
-      if idField.dataType == LongType && q.schema("query_id").dataType == LongType &&
-        (codesField.dataType match { case ArrayType(LongType, _) => true; case _ => false })
-      table = rel.data
-      if table.size <= maxPairs && table.forall(r => !r.isNullAt(idPos) &&
-        !r.isNullAt(codesPos) && whole(r.getArray(codesPos)))
-      queries <- Jobs.labelled(q.sparkSession, "pq", "collect_queries")(
-        DriverRows.collect(q, if (table.isEmpty) maxPairs else maxPairs / table.size))
-      if !queries.exists(r => r.anyNull || r.getSeq[Any](1).contains(null))
+      if rel.data.size <= maxPairs
+      packed <- PackedCodes.of(rel)
+      if packed.idPos == codes.schema.fieldIndex(idCol)
+      (qField, vecNullable, queries) <- queryRows(queries, vecCol, idCol,
+        if (packed.isEmpty) maxPairs else maxPairs / packed.size)
     } yield {
-      val ids = table.map(_.getLong(idPos)).toArray
-      val codeRows = table.map(_.getArray(codesPos)).toArray
-      val rows = queries.groupBy(_.getLong(0)).toSeq.flatMap { case (qid, rs) =>
+      val ids = packed.ids
+      val round6 = new Round(BoundReference(0, DoubleType, nullable = false), Literal(6))
+      val rows = queries.groupBy(_._1).toSeq.flatMap { case (qid, rs) =>
         // The k best so far, the last-ranked at the head.
         val top = mutable.PriorityQueue.empty[(Double, Long)](rankOrder)
-        for (r <- rs) {
-          val qv = UnsafeArrayData.fromPrimitiveArray(r.getSeq[Double](1).toArray)
+        for ((_, qv) <- rs) {
+          val table = packed.adcTable(qv, cellArr, centArr, subLen, m)
           var i = 0
           while (k > 0 && i < ids.length) {
             if (ids(i) != qid) {
-              val c = (score.nullSafeEval(codeRows(i), qv).asInstanceOf[Double], ids(i))
+              val c = (packed.score(table, i), ids(i))
               if (top.size < k) top.enqueue(c)
               else if (rankOrder.lt(c, top.head)) { top.dequeue(); top.enqueue(c) }
             }
@@ -318,14 +361,12 @@ object Pq {
           }
         }
         top.toArray.sorted(rankOrder).zipWithIndex.map { case ((s, id), r) =>
-          Row(qid, id, r + 1L, s)
+          InternalRow(qid, id, r + 1L, round6.eval(InternalRow(s)))
         }
       }
-      val schema = StructType(Seq(q.schema("query_id"), idField.copy(name = "vec_id"),
+      DriverRows.frame(codes.sparkSession, StructType(Seq(qField, idField.copy(name = "vec_id"),
         StructField("rank", LongType, nullable = false),
-        StructField("_s", DoubleType, score.nullable)))
-      q.sparkSession.createDataFrame(rows.asJava, schema)
-        .select(col("query_id"), col("vec_id"), col("rank"), round(col("_s"), 6).as("score_adc"))
+        StructField("score_adc", DoubleType, codesField.nullable || vecNullable))), rows)
     }
   }
 
@@ -352,28 +393,43 @@ object Pq {
     })
   }
 
+  /** The codebook relation's schema, as [[saveIndex]] writes it. */
+  private val CodebookSchema = StructType(Seq(StructField("sub", IntegerType),
+    StructField("cell", LongType), StructField("centroid", ArrayType(DoubleType))))
+
   /** Load a [[saveIndex]] directory back into (codes frame, codebook),
     * first repairing a save that a crash interrupted (so do not load a
-    * directory while a save to it runs). The codebook collect is m·ksub
-    * rows — metadata, same posture as training's own [[collectCents]].
-    * A code table of at most [[MaxDriverPairs]] rows is collected in one
-    * job and returned as a driver-local frame, which
-    * [[pqTopKFromIndex]]'s driver tier answers from; a larger one stays
-    * a parquet scan.
+    * directory while a save to it runs). The codebook is read with the
+    * schema [[saveIndex]] writes, so no job infers it, and its collect is
+    * m·ksub rows — metadata, same posture as training's own
+    * [[collectCents]]. A code table of at most [[MaxDriverPairs]] rows is
+    * collected in one job ([[holdCodes]]) and returned as a driver-local
+    * frame whose relation holds it packed, which [[pqTopKFromIndex]]'s
+    * driver tier scores from with no further pass over the rows; a larger
+    * one stays a parquet scan.
     */
   def loadIndex(spark: SparkSession, dir: String): (DataFrame, Codebook) = {
     StagedSwap(spark, dir)
     val cents: Codebook = Jobs.labelled(spark, "pq", "load_codebook")(
-      spark.read.parquet(s"$dir/codebook.parquet")
-        .select(col("sub"), col("cell"), col("centroid"))
+      spark.read.schema(CodebookSchema).parquet(s"$dir/codebook.parquet")
         .collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2))))
     val codes = Jobs.labelled(spark, "pq", "load_codes") {
       val read = spark.read.parquet(s"$dir/codes.parquet")
-      DriverRows.hold(read, MaxDriverPairs).getOrElse(read)
+      holdCodes(read).getOrElse(read)
     }
     (codes, cents)
   }
+
+  /** `codes` held on the driver when it has at most [[MaxDriverPairs]]
+    * rows ([[DriverRows.hold]]): validated and packed once into a
+    * [[PackedCodes]] relation where it packs, else as the plain rows.
+    */
+  private[graft] def holdCodes(codes: DataFrame): Option[DataFrame] =
+    DriverRows.hold(codes, MaxDriverPairs).map { held =>
+      (for (rel <- DriverRows.local(held); packed <- PackedCodes.of(rel))
+        yield PlanFrames.ofPlan(held.sparkSession, rel.copy(data = packed))).getOrElse(held)
+    }
 
   /** IVF-PQ — the production ANN composition (coarse cells prune the
     * candidate set, PQ codes make scoring the survivors cheap): probe
@@ -522,5 +578,111 @@ object Pq {
        |${duckAdcTail(finalA, finalC, k,
           s"JOIN cand cd ON cd.qid = q.qid " +
           s"JOIN $finalA d ON d.sub = q.sub AND d.vid = cd.vid")}""".stripMargin
+  }
+}
+
+/** A driver-held PQ code table, packed: `ids(i)` is row i's id, and
+  * `pos(i * width + j)`, read unsigned, is the position of its subspace-j
+  * code in `dict(j)`, the ascending distinct codes that occur in that
+  * subspace: 8 bytes per id and 2 per subspace code, 24 B per vector at
+  * m 8.
+  *
+  * It is also the `data` of the relation [[Pq.loadIndex]] returns, so
+  * the packed form travels with the frame: rows (the id at `idPos`, the
+  * codes in the other column) are built only when something iterates
+  * it, and the frame stays an ordinary local relation for `count`, joins
+  * and the distributed tier.
+  */
+private[graft] final class PackedCodes private (val ids: Array[Long], val idPos: Int,
+                                                width: Int, dict: Array[Array[Long]],
+                                                pos: Array[Short])
+    extends immutable.AbstractSeq[InternalRow] with immutable.IndexedSeq[InternalRow]
+    with Serializable {
+
+  def length: Int = ids.length
+
+  def apply(i: Int): InternalRow = {
+    val row = new Array[Any](2)
+    row(idPos) = ids(i)
+    row(1 - idPos) = UnsafeArrayData.fromPrimitiveArray(
+      Array.tabulate(width)(j => dict(j)(pos(i * width + j) & 0xffff)))
+    new GenericInternalRow(row)
+  }
+
+  /** One query's ADC table: for each subspace j below `m` and the code
+    * width, the query's dot with the centroid of every code in `dict(j)`
+    * — the seed-0.0 ascending fold of
+    * [[org.apache.spark.sql.graft.PqAdcScore]], over the same components
+    * — or 0.0 for a code with no centroid, where `PqAdcScore` adds
+    * nothing. Adding 0.0 instead leaves the sum bitwise the same: it
+    * starts at +0.0 and so is never -0.0.
+    */
+  def adcTable(qv: Array[Double], cells: Array[Array[Long]],
+               cents: Array[Array[Array[Double]]], subLen: Int, m: Int): Array[Array[Double]] =
+    Array.tabulate(math.min(m, width)) { j =>
+      val base = j * subLen
+      dict(j).map { code =>
+        val idx = java.util.Arrays.binarySearch(cells(j), code)
+        var dp = 0.0
+        if (idx >= 0) {
+          val c = cents(j)(idx)
+          val n = math.min(c.length, math.max(0, qv.length - base))
+          var i = 0
+          while (i < n) {
+            dp += qv(base + i) * c(i)
+            i += 1
+          }
+        }
+        dp
+      }
+    }
+
+  /** Row `i`'s ADC score from a query's [[adcTable]]: its subspaces'
+    * entries summed onto 0.0 in ascending j, as `PqAdcScore` sums them.
+    */
+  def score(table: Array[Array[Double]], i: Int): Double = {
+    val base = i * width
+    var acc = 0.0
+    var j = 0
+    while (j < table.length) {
+      acc += table(j)(pos(base + j) & 0xffff)
+      j += 1
+    }
+    acc
+  }
+}
+
+private[graft] object PackedCodes {
+
+  /** `rel`'s code table packed: its own data when that is packed already,
+    * else packed from its rows (one pass). `None` unless `rel` has two
+    * columns, a long id and `codes`, an array of longs, and every row has
+    * an id and the same number of codes, none of them null.
+    */
+  def of(rel: LocalRelation): Option[PackedCodes] = rel.data match {
+    case p: PackedCodes => Some(p)
+    case data =>
+      val codesPos = rel.output.indexWhere(a => a.name == "codes" &&
+        (a.dataType match { case ArrayType(LongType, _) => true; case _ => false }))
+      val idPos = 1 - codesPos
+      if (rel.output.size != 2 || codesPos < 0 || rel.output(idPos).dataType != LongType) None
+      else pack(data.toArray, idPos, codesPos)
+  }
+
+  private def pack(rows: Array[InternalRow], idPos: Int, codesPos: Int): Option[PackedCodes] = {
+    val width = rows.headOption.filterNot(_.isNullAt(codesPos))
+      .fold(0)(_.getArray(codesPos).numElements())
+    val whole = rows.forall(r => !r.isNullAt(idPos) && !r.isNullAt(codesPos) && {
+      val a = r.getArray(codesPos)
+      a.numElements() == width && (0 until width).forall(!a.isNullAt(_))
+    })
+    if (!whole) return None
+    val codes = rows.map(_.getArray(codesPos).toLongArray())
+    val dict = Array.tabulate(width)(j => codes.map(_(j)).distinct.sorted)
+    if (dict.exists(_.length > 65536)) return None
+    val pos = new Array[Short](rows.length * width)
+    for (i <- rows.indices; j <- 0 until width)
+      pos(i * width + j) = java.util.Arrays.binarySearch(dict(j), codes(i)(j)).toShort
+    Some(new PackedCodes(rows.map(_.getLong(idPos)), idPos, width, dict, pos))
   }
 }

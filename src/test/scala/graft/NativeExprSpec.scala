@@ -180,6 +180,15 @@ class NativeExprSpec extends AnyFunSuite with SparkTestBase {
   // used before the native expressions — kept here so parity against
   // them stays regression-gated).
   private val PqDim = 64; private val PqM = 8
+
+  /** Squared L2 distance as an explicit left fold (seed 0.0, ascending
+    * components): the reference distance of the argmin parity case.
+    */
+  private def sqDist(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
+    aggregate(
+      zip_with(a, b, (x, y) => (x.cast("double") - y.cast("double")) *
+        (x.cast("double") - y.cast("double"))),
+      lit(0.0), (acc, v) => acc + v)
   private val PqSubLen = PqDim / PqM; private val PqKsub = 16
 
   private lazy val pqFix = {
@@ -204,7 +213,7 @@ class NativeExprSpec extends AnyFunSuite with SparkTestBase {
     val (_, sv, bySub, cellsArr, centsArr) = pqFix
     def bestHof(j: Int) = {
       val scored = bySub(j).map { case (cell, cvec) =>
-        struct((-graft.operators.Pq.sqDist(col("subvec"), typedlit(cvec))).as("negd"),
+        struct((-sqDist(col("subvec"), typedlit(cvec))).as("negd"),
           lit(-cell).as("negcell"))
       }
       -array_max(array(scored.toIndexedSeq: _*)).getField("negcell")

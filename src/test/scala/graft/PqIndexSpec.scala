@@ -11,9 +11,10 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SizeEstimator
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{DriverRows, Pq}
+import graft.operators.{DriverRows, PackedCodes, Pq}
 
 /** The PQ read path: the driver tier of `Pq.pqTopKFromIndex` against the
   * distributed plan, the jobs a query starts, crash safety of
@@ -182,6 +183,31 @@ class PqIndexSpec extends AnyFunSuite with SparkTestBase {
       assert(labels.forall(l => jobs.exists(_._1.contains(l))), s"$what: $jobs")
       assert(jobs.forall(_._2 == "caller step"), s"$what: $jobs")
     }
+    // The codebook is read with its known schema: its collect, no inference job.
+    assert(load.count(_._1.contains("graft:pq:load_codebook")) == 1, s"$load")
+  }
+
+  test("a loaded 10 000-code index is held packed in at most 32 B per code; repeat queries start no job") {
+    val (n, m, ksub, dim) = (10000, 8, 32, 64)
+    val rnd = new java.util.SplittableRandom(7L)
+    val codes = spark.createDataFrame((0 until n).map(i =>
+      Row(i.toLong, Seq.fill(m)(rnd.nextInt(ksub).toLong))).asJava,
+      StructType(Seq(StructField("vec_id", LongType), StructField("codes", ArrayType(LongType)))))
+    val cents: Pq.Codebook = (for (j <- 0 until m; c <- 0 until ksub)
+      yield (j, c.toLong, Seq.fill(dim / m)(rnd.nextDouble() * 2 - 1))).toArray
+    val dir = tmp("graft-pq-packed")
+    Pq.saveIndex(codes, cents, "vec_id", dir)
+    val (held, loaded) = Pq.loadIndex(spark, dir)
+    val data = DriverRows.local(held).map(_.data)
+    assert(data.exists(_.isInstanceOf[PackedCodes]), "loadIndex did not pack the code table")
+    val bytes = SizeEstimator.estimate(data.get)
+    assert(bytes <= 32L * n, s"$bytes B for $n codes")
+    val q = spark.createDataFrame(Seq(Row(3L, Seq.fill(dim)(0.25f))).asJava, StructType(Seq(
+      StructField("vec_id", LongType), StructField("embedding", ArrayType(FloatType, containsNull = false)))))
+    val (answers, jobs) = jobsOf(Seq.fill(2)(
+      Pq.pqTopKFromIndex(held, loaded, q, "embedding", "vec_id", dim, m, 10).collect().toSeq))
+    assert(jobs.isEmpty, s"${jobs.size} jobs: $jobs")
+    assert(answers.forall(_.size == 10) && answers(0) == answers(1))
   }
 
   /** A session that resolves `faulty://` and writes one file per job. */
