@@ -1,7 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, Round, Slice, UnsafeProjection, XxHash64}
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{JaccardSortedLongs, MinHashSig, ShingleFingerprints, Shingles}
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.TextAnalysis
 
@@ -655,11 +663,40 @@ object Dedup {
     * groups larger than [[AllPairsGroupCap]], pairs are emitted as a star
     * (complete pair lists are quadratic in group size; the star keeps
     * [[resolvePairs]] clustering exact).
+    *
+    * Two tiers, with the same rows, `jaccard` bits and schema:
+    *  - Driver tier: when `df` is already driver-local (a plan check, e.g.
+    *    [[Pipeline.prepCorpus]]' held corpus) with at most
+    *    [[MaxDriverDocs]] rows, a long id column with no null and no
+    *    repeated id, and a string text column, the steps below run over
+    *    the held rows with the plan's own expressions
+    *    ([[heldLshPairs]]). It starts no job and returns a local relation.
+    *  - Distributed tier, everything else (a larger corpus, a frame read
+    *    from disk or a checkpoint, a null or repeated id): the lazy plan
+    *    below.
     */
   def minhashLshPairs(df: DataFrame, textCol: String, idCol: String,
                       n: Int, bands: Int, rowsPerBand: Int,
                       threshold: Double,
-                      maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
+                      maxBucketSize: Int = DefaultMaxBucketSize): DataFrame =
+    minhashLshPairsWith(df, textCol, idCol, n, bands, rowsPerBand, threshold,
+      maxBucketSize, MaxDriverDocs)
+
+  /** [[minhashLshPairs]] with the driver tier's document ceiling as a
+    * parameter.
+    */
+  private[graft] def minhashLshPairsWith(df: DataFrame, textCol: String, idCol: String,
+                                         n: Int, bands: Int, rowsPerBand: Int,
+                                         threshold: Double, maxBucketSize: Int,
+                                         maxDriverDocs: Long): DataFrame =
+    driverLshPairs(df, textCol, idCol, n, bands, rowsPerBand, threshold, maxBucketSize,
+      maxDriverDocs).getOrElse(
+      distributedLshPairs(df, textCol, idCol, n, bands, rowsPerBand, threshold, maxBucketSize))
+
+  /** The distributed tier of [[minhashLshPairs]]: a lazy plan. */
+  private def distributedLshPairs(df: DataFrame, textCol: String, idCol: String,
+                                  n: Int, bands: Int, rowsPerBand: Int,
+                                  threshold: Double, maxBucketSize: Int): DataFrame = {
     // Shingles deliberately do NOT travel through the signature shuffle:
     // shingle arrays are ~3× the text volume, so shipping them would
     // triple the exchange payload at 100 TB. The verification join
@@ -700,6 +737,124 @@ object Dedup {
       .withColumn("jaccard", round(jaccardSorted(col("_sha"), col("_shb")), 6))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
+  }
+
+  /** Most documents the driver tier of [[minhashLshPairs]] takes, and so
+    * the most rows [[Pipeline.prepCorpus]] holds on the driver. Measured
+    * on the benchmark's corpus shape (8-92 words per document, 42 bands
+    * of 3, `local[4]`), pairs plus components, warm: 1 415 documents
+    * 0.15-0.25 s on the driver against 1.5-2.3 s for the distributed
+    * plan; 8 360 documents 0.8 s against 2.6-3.3 s; 14 030 documents
+    * 1.1 s against 2.9-3.6 s; 28 074 documents 2.2-3.0 s against
+    * 3.5-4.6 s, where the two start to meet. Held rows take ~525 B per
+    * document there (8.6 MB at this ceiling). Over the ceiling the
+    * bounded read is wasted: ~0.13 s beside 17.9 s for the distributed
+    * tier at 162 001 documents.
+    */
+  val MaxDriverDocs: Long = 1L << 14
+
+  /** The driver tier of [[minhashLshPairs]], or `None` where it does not
+    * apply: `df` must be driver-local ([[DriverRows.local]], a plan check)
+    * with at most `maxDocs` rows, a long `idCol` with no null and no
+    * repeated id, and a string `textCol`. See [[heldLshPairs]]. The
+    * result is a local relation with the distributed plan's schema.
+    */
+  private def driverLshPairs(df: DataFrame, textCol: String, idCol: String, n: Int,
+                             bands: Int, rowsPerBand: Int, threshold: Double,
+                             maxBucketSize: Int, maxDocs: Long): Option[DataFrame] = {
+    def field(name: String) = df.schema.fields.filter(_.name == name) match {
+      case Array(f) => Some(f)
+      case _ => None
+    }
+    for {
+      rel <- DriverRows.local(df) if rel.data.size <= maxDocs
+      idField <- field(idCol) if idField.dataType == LongType
+      if field(textCol).exists(_.dataType == StringType)
+      idPos = df.schema.fieldIndex(idCol)
+      if rel.data.forall(!_.isNullAt(idPos))
+      ids = rel.data.map(_.getLong(idPos)).toArray
+      if ids.distinct.length == ids.length
+    } yield {
+      val textPos = df.schema.fieldIndex(textCol)
+      val texts = rel.data.map(r => if (r.isNullAt(textPos)) null else r.getUTF8String(textPos)).toArray
+      DriverRows.frame(df.sparkSession, StructType(Seq(
+          StructField("id_a", LongType, nullable = true),
+          StructField("id_b", LongType, idField.nullable),
+          StructField("jaccard", DoubleType, nullable = true))),
+        heldLshPairs(ids, texts, n, bands, rowsPerBand, threshold, maxBucketSize))
+    }
+  }
+
+  /** The distributed plan's pairs over held documents (`texts(i)` is
+    * `ids(i)`'s text, `null` for null text; ids distinct), computed with
+    * the plan's own expressions so every pair and every `jaccard` double
+    * is the same:
+    *  - per document `Shingles` → `MinHashSig` (null text gives a null
+    *    signature), then one generated projection of the group key
+    *    `xxhash64(_sig)` and the band keys `xxhash64(slice(_sig, b·r+1,
+    *    r))` (a null signature hashes to the seed, as in the plan);
+    *  - signature groups on the key, the min id as `_rep`: all pairs
+    *    within a group of at most [[AllPairsGroupCap]], a star from the
+    *    rep above that;
+    *  - reps only are banded, a bucket of more than `maxBucketSize` reps
+    *    is dropped, and each distinct rep pair expands over both groups'
+    *    members;
+    *  - each candidate is verified by `JaccardSortedLongs` over
+    *    `ShingleFingerprints`, rounded by Spark's `Round(_, 6)` and kept
+    *    at `>= threshold` in Spark's double order; null text never
+    *    verifies.
+    */
+  private def heldLshPairs(ids: Array[Long], texts: Array[UTF8String], n: Int, bands: Int,
+                           rowsPerBand: Int, threshold: Double,
+                           maxBucketSize: Int): Seq[InternalRow] = {
+    val shingler = Shingles(BoundReference(0, StringType, nullable = true), n)
+    val minhash = MinHashSig(BoundReference(0, ArrayType(StringType, containsNull = false),
+      nullable = true), bands * rowsPerBand)
+    val sig = BoundReference(0, ArrayType(LongType, containsNull = false), nullable = true)
+    val keysOf = UnsafeProjection.create(new XxHash64(Seq(sig)) +: (0 until bands).map(b =>
+      new XxHash64(Seq(Slice(sig, Literal(b * rowsPerBand + 1), Literal(rowsPerBand))))))
+    // keys(i) = (group key, band keys...) of document i.
+    val keys = texts.map { t =>
+      val row = keysOf(InternalRow(if (t == null) null else minhash.nullSafeEval(shingler.compute(t))))
+      Array.tabulate(bands + 1)(row.getLong)
+    }
+    // Signature groups as member indices in id order, the rep first.
+    val groups = ids.indices.groupBy(keys(_)(0)).values.map(_.sortBy(ids(_))).toIndexedSeq
+    // Candidates as (i, j) with ids(i) < ids(j).
+    val cand = mutable.ArrayBuffer[(Int, Int)]()
+    for (g <- groups) {
+      if (g.size <= AllPairsGroupCap) for (x <- g.indices; y <- x + 1 until g.size) cand += ((g(x), g(y)))
+      else g.tail.foreach(m => cand += ((g.head, m)))
+    }
+    // Band buckets of group indices, one band at a time.
+    val groupPairs = mutable.HashSet[(Int, Int)]()
+    for (b <- 1 to bands) {
+      val buckets = mutable.LongMap[mutable.ArrayBuffer[Int]]()
+      for (gi <- groups.indices)
+        buckets.getOrElseUpdate(keys(groups(gi).head)(b), mutable.ArrayBuffer()) += gi
+      for (gs <- buckets.values if gs.size > 1 && gs.size <= maxBucketSize; x <- gs; y <- gs
+           if ids(groups(x).head) < ids(groups(y).head)) groupPairs += ((x, y))
+    }
+    for ((x, y) <- groupPairs; a <- groups(x); b <- groups(y))
+      cand += (if (ids(a) < ids(b)) (a, b) else (b, a))
+    val fingerprints = ShingleFingerprints(BoundReference(0, StringType, nullable = true), n)
+    val fps = new Array[ArrayData](ids.length) // filled on first use
+    def fpOf(i: Int): ArrayData = {
+      if (fps(i) == null) fps(i) = fingerprints.compute(texts(i))
+      fps(i)
+    }
+    val fpType = ArrayType(LongType, containsNull = false)
+    val jaccard = JaccardSortedLongs(BoundReference(0, fpType, nullable = true),
+      BoundReference(1, fpType, nullable = true))
+    val round6 = new Round(BoundReference(0, DoubleType, nullable = false), Literal(6))
+    cand.toSeq.flatMap { case (a, b) =>
+      if (texts(a) == null || texts(b) == null) None
+      else {
+        val j = round6.eval(InternalRow(jaccard.compute(fpOf(a), fpOf(b)))).asInstanceOf[Double]
+        if (SQLOrderingUtil.compareDoubles(j, threshold) >= 0) Some(InternalRow(ids(a), ids(b), j))
+        else None
+      }
+    }
   }
 
   /** Edit-distance-verified fuzzy dedup: LSH candidate generation (the
@@ -1083,7 +1238,11 @@ object Dedup {
     * `lbl` is the component's minimum id. Throws `IllegalStateException`
     * if `maxIters` rounds pass without convergence rather than returning
     * wrong labels. Below [[LocalGraph.MaxEdges]] edges the components
-    * come from a driver union-find instead (see [[LocalGraph]]).
+    * come from a driver union-find instead ([[LocalGraph.components]]):
+    * a driver-local `pairs` frame (a local relation of long ids with no
+    * null, such as [[minhashLshPairs]]' driver tier) goes to it
+    * directly, starting no job; any other frame is checkpointed and
+    * counted first, then collected when it fits.
     */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 50): DataFrame =
     connectedComponentsWith(pairs, maxIters, LocalGraph.MaxEdges)
@@ -1103,41 +1262,34 @@ object Dedup {
       val row = df.agg(count(lit(1)), bit_xor(xxhash64(col("src"), col("dst")))).head()
       (row.getLong(0), if (row.isNullAt(1)) None else Some(row.getLong(1)))
     }
+    // The local tier's labels ([[LocalGraph.components]]), or the empty
+    // label set when no edge is left.
+    def localLabels(rows: Array[Row]): DataFrame =
+      LocalGraph.components(rows.iterator.map(r => (r.getLong(0), r.getLong(1)))) match {
+        case Seq() => pairs.limit(0).select(col("id_a").as("id"), col("id_b").as("lbl"))
+        case labels => LocalGraph.frame(pairs.sparkSession, labels, "id", "lbl")
+      }
+    // A driver-local pair list within the ceiling goes straight to the
+    // union-find: no checkpoint, no job.
+    if (DriverRows.local(pairs).isDefined) {
+      val held = LocalGraph.collect(pairs.select(col("id_a"), col("id_b")), localMaxEdges)
+      if (held.isDefined) return localLabels(held.get)
+    }
     var edges = cutLineage(
       pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
         .filter(col("src") =!= col("dst")).distinct())
     var prevSig = sigOf(edges)
     if (prevSig._1 == 0L) { // no edges at all — nothing to cluster
       checkpointRdd(edges).foreach(_.unpersist(false))
-      return pairs.limit(0).select(col("id_a").as("id"), col("id_b").as("lbl"))
+      return localLabels(Array.empty)
     }
     // Driver-local tier ([[LocalGraph]]; the count is already on hand
     // from the sig probe): a union-find over the collected edges produces
     // the IDENTICAL (id, component-min) label set in one collect.
     val local = LocalGraph.collect(edges, localMaxEdges, Some(prevSig._1))
     if (local.isDefined) {
-      val collected = local.get
       checkpointRdd(edges).foreach(_.unpersist(false))
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrDefault(r, r) != r) r = parent.get(r)
-        var c = x // path compression
-        while (parent.getOrDefault(c, c) != c) {
-          val n = parent.get(c); parent.put(c, r); c = n
-        }
-        r
-      }
-      collected.foreach { row =>
-        val (a, b) = (find(row.getLong(0)), find(row.getLong(1)))
-        if (a != b) parent.put(math.max(a, b), math.min(a, b))
-      }
-      // Component min = the root under min-directed unions (every union
-      // points the larger root at the smaller, so each tree's root is
-      // its component's minimum id).
-      val nodes = collected.flatMap(r => Seq(r.getLong(0), r.getLong(1))).distinct
-      return LocalGraph.frame(pairs.sparkSession,
-        nodes.map(n => (n, find(n))).toSeq, "id", "lbl")
+      return localLabels(local.get)
     }
     var converged = false
     var i = 0

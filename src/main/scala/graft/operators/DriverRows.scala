@@ -20,14 +20,18 @@ private[graft] object DriverRows {
   /** `df`'s relation when its rows already sit on the driver: the plan is
     * one `LocalRelation` (a [[frame]] or `createDataFrame` frame, with any
     * projection or filter over it folded in by the optimizer). A plan
-    * check; no job runs. A frame that is a relation as analyzed is
-    * answered without running the optimizer.
+    * check; no job runs. The optimizer runs only for a plan whose
+    * leaves are all local relations: a frame that is a relation as
+    * analyzed needs no folding, and one that reads anything else (a
+    * file, a checkpoint) is not local, even where the optimizer would
+    * prune it to an empty relation.
     */
   def local(df: DataFrame): Option[LocalRelation] = {
     val qe = df.queryExecution
     (qe.analyzed match {
       case l: LocalRelation => l
-      case _ => qe.optimizedPlan
+      case p if p.collectLeaves().forall(_.isInstanceOf[LocalRelation]) => qe.optimizedPlan
+      case p => p
     }) match {
       case l: LocalRelation if !l.isStreaming => Some(l)
       case _ => None

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -36,6 +38,35 @@ private[graft] object LocalGraph {
               knownCount: Option[Long] = None): Option[Array[Row]] =
     if (!df.schema.fields.forall(_.dataType == LongType)) None
     else DriverRows.collect(df, ceiling, knownCount).filterNot(_.exists(_.anyNull))
+
+  /** Connected components of an undirected edge list by union-find: one
+    * (node, component min id) per distinct endpoint. Self-loops add
+    * nothing, not even their node (the distributed loop filters them
+    * first); duplicate and reversed edges are harmless. Every union points
+    * the larger root at the smaller, so each tree's root is its
+    * component's minimum id.
+    */
+  def components(edges: Iterator[(Long, Long)]): Seq[(Long, Long)] = {
+    val parent = new java.util.HashMap[Long, Long]()
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrDefault(r, r) != r) r = parent.get(r)
+      var c = x // path compression
+      while (parent.getOrDefault(c, c) != c) {
+        val n = parent.get(c); parent.put(c, r); c = n
+      }
+      r
+    }
+    val nodes = mutable.LinkedHashSet[Long]()
+    edges.foreach { case (x, y) =>
+      if (x != y) {
+        nodes += x; nodes += y
+        val (a, b) = (find(x), find(y))
+        if (a != b) parent.put(math.max(a, b), math.min(a, b))
+      }
+    }
+    nodes.toSeq.map(n => (n, find(n)))
+  }
 
   /** A local tier's (a, b) result frame of two long columns. `a` is
     * nullable and `b` is `bNullable`, mirroring the distributed loop's

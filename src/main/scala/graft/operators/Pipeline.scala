@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Jobs
 import graft.functions.{QualityFilters, TextAnalysis}
 
 /** The composed training-data preparation pipeline — the end-to-end flow a
@@ -17,7 +18,9 @@ import graft.functions.{QualityFilters, TextAnalysis}
   *      ([[Dedup.minhashLshPairs]], banded equi-join — never all-pairs)
   *      resolved to clusters ([[Dedup.resolvePairs]],
   *      large-star/small-star, O(log n) rounds), keeping each cluster's
-  *      min-id representative.
+  *      min-id representative. A deduped corpus of at most
+  *      [[Dedup.MaxDriverDocs]] rows runs this stage on the driver
+  *      instead, with the same result.
   *
   * Output is the training manifest: surviving doc ids with their language,
   * quality, and token-count metadata. Every stage is an operator gated
@@ -31,37 +34,64 @@ object Pipeline {
   /** See object doc. `docs` is the raw corpus; the result keeps one row
     * per surviving document with columns `(idCol, lang_pred, quality,
     * n_tokens)`.
+    *
+    * Its eager jobs are tagged `graft:prep_corpus:<step>`: the score
+    * barrier, the exact-dedup barrier, and a bounded read of at most
+    * [[Dedup.MaxDriverDocs]] deduped rows back to the driver. A corpus
+    * that fits is held there, so the near-dup stage runs on the driver
+    * ([[Dedup.minhashLshPairs]]' driver tier, then
+    * [[Dedup.connectedComponents]]' union-find) and starts no job; the
+    * caller's action runs the anti-join of the barrier against the local
+    * losers. A larger corpus takes the distributed LSH plan and the
+    * checkpointed component loop (step `near_dup`) over the barrier.
     */
   def prepCorpus(docs: DataFrame, textCol: String, idCol: String,
                  lang: String, minQuality: Double,
                  n: Int = 3, bands: Int = 42, rowsPerBand: Int = 3,
-                 threshold: Double = 0.5): DataFrame = {
+                 threshold: Double = 0.5): DataFrame =
+    prepCorpusWith(docs, textCol, idCol, lang, minQuality, n, bands, rowsPerBand, threshold,
+      Dedup.MaxDriverDocs)
+
+  /** [[prepCorpus]] with the held corpus' row ceiling as a parameter. */
+  private[graft] def prepCorpusWith(docs: DataFrame, textCol: String, idCol: String,
+                                    lang: String, minQuality: Double, n: Int, bands: Int,
+                                    rowsPerBand: Int, threshold: Double,
+                                    maxDriverDocs: Long): DataFrame = {
+    def step[T](name: String)(body: => T): T =
+      Jobs.labelled(docs.sparkSession, "prep_corpus", name)(body)
     // Score, BARRIER, then filter: pushing the lang/quality predicate
     // past the projection substitutes langIdOf's ~24-reference CASE
     // chain (token split inlined per reference) into the filter and
     // computes the scoring stage twice — the curateCorpus keptIds note,
     // measured again on curateSplits at 4.7× the stage cost.
-    val scored = Dedup.rebalance(docs)
+    val scored = step("score")(Dedup.rebalance(docs)
       .withColumn("_w", TextAnalysis.tokens(col(textCol))) // bind the split once
       .withColumn("lang_pred", TextAnalysis.langIdOf(col("_w")))
       .withColumn("quality", TextAnalysis.qualityScoreOf(col(textCol), col("_w")))
       .withColumn("n_tokens", TextAnalysis.tokenCountOf(col("_w")))
       .drop("_w")
-      .localCheckpoint()
+      .localCheckpoint())
       .filter(col("lang_pred") === lang && col("quality") >= minQuality)
-    // Materialize the filtered+exact-deduped corpus BEFORE the LSH
-    // pass: minhashLshPairs reads its input three times (signature
-    // branch + both sides of the exact-Jaccard verification join), and
-    // resolvePairs reads it again — without the barrier the scoring
-    // projection and the dedup exchange re-execute per consumer
+    // Materialize the filtered+exact-deduped corpus BEFORE the near-dup
+    // stage: the distributed LSH plan reads its input three times
+    // (signature branch + both sides of the exact-Jaccard verification
+    // join), and resolvePairs reads it again — without the barrier the
+    // scoring projection and the dedup exchange re-execute per consumer
     // (measured: the pair stage alone was 3× its standalone cost). At
     // cluster scale this is the standard persist()/checkpoint() of the
-    // curated corpus before near-dup detection.
-    val exact = Dedup.exact(scored, textCol, idCol).localCheckpoint()
-    val pairs = Dedup.minhashLshPairs(exact, textCol, idCol,
-      n, bands, rowsPerBand, threshold)
-    Dedup.resolvePairs(exact, pairs, idCol)
-      .select(col(idCol), col("lang_pred"), col("quality"), col("n_tokens"))
+    // curated corpus before near-dup detection. The hold reads the
+    // materialized blocks, so a corpus over the ceiling costs one
+    // bounded read, not a recompute.
+    val exact = step("exact")(Dedup.exact(scored, textCol, idCol).localCheckpoint())
+    val held = step("hold")(DriverRows.hold(exact, maxDriverDocs))
+    // The survivors are read from the barrier, not from the held rows: a
+    // local relation would spread the caller's write over one file per
+    // core, where the barrier keeps its own partitioning.
+    step("near_dup") {
+      val pairs = Dedup.minhashLshPairsWith(held.getOrElse(exact), textCol, idCol, n, bands,
+        rowsPerBand, threshold, Dedup.DefaultMaxBucketSize, maxDriverDocs)
+      Dedup.resolvePairs(exact, pairs, idCol)
+    }.select(col(idCol), col("lang_pred"), col("quality"), col("n_tokens"))
   }
 
   /** The round-3 composed CURATION pipeline — the filter/scrub/split/pack

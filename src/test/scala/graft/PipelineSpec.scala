@@ -70,6 +70,35 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(out.select("doc_id").as[Long].collect().toSet == Set(10L, 11L))
   }
 
+  test("prepCorpus under the ceiling: every job it starts is tagged, at most 5; over it, the same manifest") {
+    import scala.collection.mutable
+    import org.apache.spark.graft.ListenerBusAccess
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val docs = Tables.load(spark, sf, "documents")
+    val sc = spark.sparkContext
+    val tags = mutable.Buffer[Set[String]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = tags.synchronized {
+        tags += Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .map(_.split(",").toSet).getOrElse(Set.empty)
+      }
+    }
+    ListenerBusAccess.drain(sc)
+    sc.addSparkListener(listener)
+    val held = try {
+      val out = Pipeline.prepCorpus(docs, "text", "doc_id", lang = "en", minQuality = 0.75)
+      ListenerBusAccess.drain(sc)
+      out
+    } finally sc.removeSparkListener(listener)
+    assert(tags.nonEmpty && tags.size <= 5, s"${tags.size} jobs")
+    assert(tags.forall(_.exists(_.startsWith("graft:prep_corpus:"))), tags.toString)
+    val forced = Pipeline.prepCorpusWith(docs, "text", "doc_id", "en", 0.75, 3, 42, 3, 0.5,
+      maxDriverDocs = 0L)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+    assert(held.schema == forced.schema)
+    assert(rows(held) == rows(forced))
+  }
+
   test("quantizeInt8 emits exact scale, digest and mse for known vectors") {
     import spark.implicits._
     val vecs = Seq(

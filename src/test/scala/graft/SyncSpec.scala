@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test}
+import org.scalacheck.rng.Seed
+import org.scalacheck.util.Pretty
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Sync, SyncMode}
@@ -27,6 +30,41 @@ class SyncSpec extends AnyFunSuite with SparkTestBase {
     intercept[IllegalArgumentException] {
       Engine.backfill(df, "ts", base + 1, base + 30000, 10000) // unaligned start
     }
+  }
+
+  test("backfill property: random ranges and chunk sizes tile the range; the chunks' union is the single-range plan") {
+    import spark.implicits._
+    val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    // Event offsets from base in ms: whole seconds (chunk boundaries),
+    // sub-second values, nulls, and values outside the range.
+    val offset: Gen[Option[Long]] = Gen.frequency(
+      3 -> Gen.choose(-2L, 45L).map(s => Some(s * 1000L)),
+      3 -> Gen.choose(-2000L, 45000L).map(Some(_)),
+      1 -> Gen.const(None))
+    val gen = for {
+      startS <- Gen.choose(0L, 20L)
+      lenS <- Gen.choose(1L, 20L)
+      chunkS <- Gen.choose(1L, 25L)
+      events <- Gen.listOf(offset).map(_.take(30))
+    } yield (base + startS * 1000L, base + (startS + lenS) * 1000L, chunkS * 1000L, events)
+    val prop = Prop.forAll(gen) { case (start, end, chunkMs, events) =>
+      val df = events.zipWithIndex
+        .map { case (o, i) => (i.toLong, o.map(ms => new java.sql.Timestamp(base + ms))) }
+        .toDF("id", "ts")
+      val chunks = Engine.backfill(df, "ts", start, end, chunkMs)
+      val bounds = chunks.map(c => (c._1, c._2))
+      val tiled = bounds.head._1 == start && bounds.last._2 == end &&
+        bounds.zip(bounds.tail).forall { case (a, b) => a._2 == b._1 } &&
+        bounds.forall { case (a, b) => a < b && b - a <= chunkMs }
+      val union = chunks.map(_._3).reduce(_ union _).select("id").as[Long].collect().sorted.toSeq
+      val single = Sync.plan(df, SyncMode.TimeBased("ts", start, delayMs = 1000L, nowMs = end))
+        .select("id").as[Long].collect().sorted.toSeq
+      Prop(tiled) :| s"chunks $bounds" && Prop(union == single) :| s"union $union vs $single"
+    }
+    val params = Test.Parameters.default.withMinSuccessfulTests(60)
+      .withInitialSeed(Seed(20261021L)).withWorkers(1)
+    val result = Test.check(params, prop)
+    assert(result.passed, Pretty.pretty(result, Pretty.Params(2)))
   }
 
   test("nonNullableFilter: empty list means no filter") {
