@@ -87,13 +87,7 @@ object Engine {
     *    could only size by running its whole aggregation.
     */
   def runCdc(src: sources.ChangeSource, timeCutoffMs: Long, nowMs: Long,
-             hash: Option[HashSpec], sink: Option[SinkSpec]): SyncResult =
-    runCdcWith(src, timeCutoffMs, nowMs, hash, sink, ChangeLog.MaxDriverBatchRows)
-
-  /** [[runCdc]] with the held window's ceiling as a parameter. */
-  private[graft] def runCdcWith(src: sources.ChangeSource, timeCutoffMs: Long, nowMs: Long,
-                                hash: Option[HashSpec], sink: Option[SinkSpec],
-                                maxHeldRows: Long): SyncResult = {
+             hash: Option[HashSpec], sink: Option[SinkSpec]): SyncResult = {
     val (df0, watermark) =
       if (timeCutoffMs == 0) {
         val endMs = src.latestCommitMs()
@@ -107,17 +101,20 @@ object Engine {
     // the sink write keeps the row hash in its own plan (above the
     // coalesce, which the optimizer does not fold into the relation).
     val held = sink.filter(_ => timeCutoffMs != 0).flatMap(_ =>
-      Jobs.labelled(df0.sparkSession, "cdc", "collect_window")(DriverRows.hold(df0, maxHeldRows)))
+      DriverRows.hold(df0, "cdc", "collect_window", ChangeLog.MaxDriverBatchRows))
     sink.foreach(FileSink.write(hashed(held.fold(df0)(_.coalesce(1))), _))
     SyncResult(hashed(held.getOrElse(df0)), watermark)
   }
 
-  /** CDC with user-supplied SQL (export.py:145–153): the watermark picks
+  /** CDC with user-supplied SQL: the reference's `cdc` sync type with
+    * `use_custom_sql` set (export.py:145–153). The watermark picks
     * `initial_query.sql` vs `recurring_query.sql`, the end anchor is the
     * caller-provided consistent snapshot time (latest commit on first
     * sync, "now" after — export.py:141–144), and the file's
     * `:start_timestamp`/`:end_timestamp` named params are bound exactly
-    * like the reference's `spark.sql(query, args)`.
+    * like the reference's `spark.sql(query, args)`. Called by
+    * `FileSinkSpec`'s custom-SQL case, which checks both query files and
+    * their bound parameters.
     */
   def runCdcCustomSql(spark: SparkSession, queriesBaseDir: String,
                       project: String, catalog: String, schema: String,

@@ -266,7 +266,8 @@ object ChangeLog {
         case _ => false
       }
     val held =
-      if (literal && DriverRows.local(keys).isDefined) DriverRows.collect(keys, MaxDriverBatchRows)
+      if (literal && DriverRows.local(keys).isDefined)
+        DriverRows.collect(keys, "cdc_merge", "touched_keys", MaxDriverBatchRows)
       else None
     held match {
       case Some(rows) =>

@@ -427,12 +427,6 @@ object Dedup {
     *
     * Returns (nDocs, expectedCandidatePairs).
     */
-  def prefixCandidateStats(df: DataFrame, textCol: String, idCol: String,
-                           n: Int, threshold: Double): (Long, Double) = {
-    val (_, prefixes) = prefixPostings(df, textCol, idCol, n, threshold)
-    statsOf(prefixes)
-  }
-
   private def statsOf(prefixes: DataFrame): (Long, Double) = {
     val row = prefixes.groupBy("_ps").agg(count(lit(1)).as("_c"))
       .agg(coalesce(sum(col("_c").cast("double") * (col("_c") - 1) / 2), lit(0.0)).as("cand"))
@@ -679,19 +673,9 @@ object Dedup {
                       n: Int, bands: Int, rowsPerBand: Int,
                       threshold: Double,
                       maxBucketSize: Int = DefaultMaxBucketSize): DataFrame =
-    minhashLshPairsWith(df, textCol, idCol, n, bands, rowsPerBand, threshold,
-      maxBucketSize, MaxDriverDocs)
-
-  /** [[minhashLshPairs]] with the driver tier's document ceiling as a
-    * parameter.
-    */
-  private[graft] def minhashLshPairsWith(df: DataFrame, textCol: String, idCol: String,
-                                         n: Int, bands: Int, rowsPerBand: Int,
-                                         threshold: Double, maxBucketSize: Int,
-                                         maxDriverDocs: Long): DataFrame =
-    driverLshPairs(df, textCol, idCol, n, bands, rowsPerBand, threshold, maxBucketSize,
-      maxDriverDocs).getOrElse(
-      distributedLshPairs(df, textCol, idCol, n, bands, rowsPerBand, threshold, maxBucketSize))
+    driverLshPairs(df, textCol, idCol, n, bands, rowsPerBand, threshold, maxBucketSize)
+      .getOrElse(
+        distributedLshPairs(df, textCol, idCol, n, bands, rowsPerBand, threshold, maxBucketSize))
 
   /** The distributed tier of [[minhashLshPairs]]: a lazy plan. */
   private def distributedLshPairs(df: DataFrame, textCol: String, idCol: String,
@@ -755,19 +739,20 @@ object Dedup {
 
   /** The driver tier of [[minhashLshPairs]], or `None` where it does not
     * apply: `df` must be driver-local ([[DriverRows.local]], a plan check)
-    * with at most `maxDocs` rows, a long `idCol` with no null and no
-    * repeated id, and a string `textCol`. See [[heldLshPairs]]. The
-    * result is a local relation with the distributed plan's schema.
+    * with at most [[MaxDriverDocs]] rows ([[DriverRows.ceiling]]), a long
+    * `idCol` with no null and no repeated id, and a string `textCol`. See
+    * [[heldLshPairs]]. The result is a local relation with the
+    * distributed plan's schema.
     */
   private def driverLshPairs(df: DataFrame, textCol: String, idCol: String, n: Int,
                              bands: Int, rowsPerBand: Int, threshold: Double,
-                             maxBucketSize: Int, maxDocs: Long): Option[DataFrame] = {
+                             maxBucketSize: Int): Option[DataFrame] = {
     def field(name: String) = df.schema.fields.filter(_.name == name) match {
       case Array(f) => Some(f)
       case _ => None
     }
     for {
-      rel <- DriverRows.local(df) if rel.data.size <= maxDocs
+      rel <- DriverRows.local(df) if rel.data.size <= DriverRows.ceiling(MaxDriverDocs)
       idField <- field(idCol) if idField.dataType == LongType
       if field(textCol).exists(_.dataType == StringType)
       idPos = df.schema.fieldIndex(idCol)
@@ -1053,9 +1038,9 @@ object Dedup {
       transform(TextAnalysis.tokens(c), t => xxhash64(t)))
 
   /** Built-in-only formulation of [[simhash]] (vote vector via
-    * aggregate+zip_with). Kept as the portable reference implementation;
-    * bitwise-identical to the native expression, ~10× slower on the
-    * interpreted HOF path.
+    * aggregate+zip_with): the reference `NativeExprSpec` checks the
+    * native `SimHash64` expression against, bit for bit. ~10× slower on
+    * the interpreted HOF path, so no operator calls it.
     */
   def simhashHof(c: Column): Column = {
     val hashes = transform(TextAnalysis.tokens(c), t => xxhash64(t))
@@ -1242,17 +1227,9 @@ object Dedup {
     * a driver-local `pairs` frame (a local relation of long ids with no
     * null, such as [[minhashLshPairs]]' driver tier) goes to it
     * directly, starting no job; any other frame is checkpointed and
-    * counted first, then collected when it fits.
+    * counted first, then collected when it fits (README "Driver tiers").
     */
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 50): DataFrame =
-    connectedComponentsWith(pairs, maxIters, LocalGraph.MaxEdges)
-
-  /** [[connectedComponents]] with an explicit local-tier ceiling —
-    * test seam for the local-vs-distributed equivalence gate (DedupSpec)
-    * without touching the process environment.
-    */
-  private[graft] def connectedComponentsWith(pairs: DataFrame, maxIters: Int,
-                                             localMaxEdges: Long): DataFrame = {
+  def connectedComponents(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
     // Convergence = edge-set fixpoint, detected by (count, xor of row
     // hashes) — one tiny aggregate per round, no full-set comparison.
     // bit_xor is order-independent and cannot overflow (ANSI mode
@@ -1267,12 +1244,14 @@ object Dedup {
     def localLabels(rows: Array[Row]): DataFrame =
       LocalGraph.components(rows.iterator.map(r => (r.getLong(0), r.getLong(1)))) match {
         case Seq() => pairs.limit(0).select(col("id_a").as("id"), col("id_b").as("lbl"))
-        case labels => LocalGraph.frame(pairs.sparkSession, labels, "id", "lbl")
+        case labels => LocalGraph.frame(pairs.sparkSession, labels, "id", "lbl",
+          aNullable = true, bNullable = true)
       }
     // A driver-local pair list within the ceiling goes straight to the
     // union-find: no checkpoint, no job.
     if (DriverRows.local(pairs).isDefined) {
-      val held = LocalGraph.collect(pairs.select(col("id_a"), col("id_b")), localMaxEdges)
+      val held =
+        LocalGraph.collect(pairs.select(col("id_a"), col("id_b")), "connected_components")
       if (held.isDefined) return localLabels(held.get)
     }
     var edges = cutLineage(
@@ -1286,7 +1265,7 @@ object Dedup {
     // Driver-local tier ([[LocalGraph]]; the count is already on hand
     // from the sig probe): a union-find over the collected edges produces
     // the IDENTICAL (id, component-min) label set in one collect.
-    val local = LocalGraph.collect(edges, localMaxEdges, Some(prevSig._1))
+    val local = LocalGraph.collect(edges, "connected_components", Some(prevSig._1))
     if (local.isDefined) {
       checkpointRdd(edges).foreach(_.unpersist(false))
       return localLabels(local.get)

@@ -32,16 +32,11 @@ import org.apache.spark.sql.functions._
   */
 object KCore {
 
-  def coreMembers(edges: DataFrame, srcCol: String, dstCol: String,
-                  k: Int, iters: Int): DataFrame =
-    coreMembersWith(edges, srcCol, dstCol, k, iters, LocalGraph.MaxEdges)
-
-  /** [[coreMembers]] with an explicit local-tier ceiling — the
-    * [[Dedup.connectedComponentsWith]] test-seam convention.
+  /** See object doc. At most [[LocalGraph.MaxEdges]] edges peel on the
+    * driver (README "Driver tiers").
     */
-  private[graft] def coreMembersWith(edges: DataFrame, srcCol: String,
-                                     dstCol: String, k: Int, iters: Int,
-                                     localMaxEdges: Long): DataFrame = {
+  def coreMembers(edges: DataFrame, srcCol: String, dstCol: String,
+                  k: Int, iters: Int): DataFrame = {
     require(k >= 1, s"kCore: bad k=$k")
     require(iters >= 1, s"kCore: bad iters=$iters")
     var e = edges
@@ -63,7 +58,7 @@ object KCore {
     // nodes removed simultaneously per round, early exit on a stable
     // round), so the surviving (node, degree) set is bit-identical to the
     // distributed loop's by construction.
-    val local = LocalGraph.collect(e, localMaxEdges, Some(nEdges))
+    val local = LocalGraph.collect(e, "kcore", Some(nEdges))
     if (local.isDefined) {
       var el = local.get.map(r => (r.getLong(0), r.getLong(1)))
       var stable = false
@@ -80,7 +75,7 @@ object KCore {
       import scala.jdk.CollectionConverters._
       return LocalGraph.frame(e.sparkSession,
         outDeg.asScala.toSeq.filter(_._2 >= k), "node", "degree",
-        bNullable = false)
+        aNullable = e.schema("_s").nullable, bNullable = false)
     }
     var stable = false
     for (_ <- 1 to iters if !stable) {

@@ -33,18 +33,11 @@ import org.apache.spark.sql.functions._
   */
 object LabelProp {
 
-  def communities(edges: DataFrame, srcCol: String, dstCol: String,
-                  weightCol: String, iters: Int): DataFrame =
-    communitiesWith(edges, srcCol, dstCol, weightCol, iters,
-      LocalGraph.MaxEdges)
-
-  /** [[communities]] with an explicit local-tier ceiling — the
-    * [[Dedup.connectedComponentsWith]] test-seam convention.
+  /** See object doc. At most [[LocalGraph.MaxEdges]] edges propagate on
+    * the driver (README "Driver tiers").
     */
-  private[graft] def communitiesWith(edges: DataFrame, srcCol: String,
-                                     dstCol: String, weightCol: String,
-                                     iters: Int,
-                                     localMaxEdges: Long): DataFrame = {
+  def communities(edges: DataFrame, srcCol: String, dstCol: String,
+                  weightCol: String, iters: Int): DataFrame = {
     require(iters >= 0, s"labelProp: bad iters=$iters")
     val e = edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst"),
       col(weightCol).cast("long").as("_w")).localCheckpoint()
@@ -53,7 +46,7 @@ object LabelProp {
     // labels, argmax with the smallest-label tie-break, no-in-neighbor
     // nodes keep their label — so the final (node, community) set is
     // bit-identical by construction (integer arithmetic, total order).
-    val local = LocalGraph.collect(e, localMaxEdges)
+    val local = LocalGraph.collect(e, "label_prop")
     if (local.isDefined) {
       val el = local.get.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       val nodesL = (el.map(_._1) ++ el.map(_._2)).distinct.sorted
@@ -70,8 +63,10 @@ object LabelProp {
           }
         lbl = nodesL.map(n => n -> winners.getOrElse(n, lbl(n))).toMap
       }
+      // A label is some node's id, so it is nullable where a node is.
+      val nullable = e.schema("_src").nullable || e.schema("_dst").nullable
       return LocalGraph.frame(e.sparkSession,
-        nodesL.map(n => (n, lbl(n))).toSeq, "node", "community")
+        nodesL.map(n => (n, lbl(n))).toSeq, "node", "community", nullable, nullable)
     }
     val nodes = e.select(col("_src").as("node"))
       .union(e.select(col("_dst").as("node"))).distinct().localCheckpoint()

@@ -15,9 +15,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * the data, are the wall. Below [[MaxEdges]] each operator collects its
   * edge set once and runs the IDENTICAL computation on the driver, so the
   * results are bit-identical by construction (one local-vs-distributed
-  * equivalence spec per operator). Above the ceiling, or on any input the
-  * local code cannot hold exactly (a non-long column, a null), the
-  * operator keeps its distributed loop, the shape that scales.
+  * equivalence spec per operator). Above the ceiling, or on any input
+  * the local code cannot hold exactly (a non-long column, a null), the
+  * operator keeps its distributed loop, the shape that scales. See
+  * README "Driver tiers".
   */
 private[graft] object LocalGraph {
 
@@ -27,17 +28,16 @@ private[graft] object LocalGraph {
   val MaxEdges: Long = 200000L
 
   /** The rows of `df` when the local tier applies — every column long,
-    * at most `ceiling` rows ([[DriverRows.collect]], at most one job),
-    * no null anywhere — else `None`.
+    * at most [[MaxEdges]] rows ([[DriverRows.collect]], at most one job,
+    * tagged `graft:<op>:hold`), no null anywhere — else `None`.
     *
     * `knownCount` is a row count the caller already holds (connected
     * components' signature probe, KCore's edge count), so no job counts
     * again.
     */
-  def collect(df: DataFrame, ceiling: Long,
-              knownCount: Option[Long] = None): Option[Array[Row]] =
+  def collect(df: DataFrame, op: String, knownCount: Option[Long] = None): Option[Array[Row]] =
     if (!df.schema.fields.forall(_.dataType == LongType)) None
-    else DriverRows.collect(df, ceiling, knownCount).filterNot(_.exists(_.anyNull))
+    else DriverRows.collect(df, op, "hold", MaxEdges, knownCount).filterNot(_.exists(_.anyNull))
 
   /** Connected components of an undirected edge list by union-find: one
     * (node, component min id) per distinct endpoint. Self-loops add
@@ -68,13 +68,13 @@ private[graft] object LocalGraph {
     nodes.toSeq.map(n => (n, find(n)))
   }
 
-  /** A local tier's (a, b) result frame of two long columns. `a` is
-    * nullable and `b` is `bNullable`, mirroring the distributed loop's
-    * output so the gate's schema is the same on either tier.
+  /** A local tier's (a, b) result frame of two long columns, nullable as
+    * the caller's distributed loop would give them for the same input, so
+    * the schema is the same on either tier.
     */
   def frame(spark: SparkSession, rows: Seq[(Long, Long)], a: String, b: String,
-            bNullable: Boolean = true): DataFrame =
+            aNullable: Boolean, bNullable: Boolean): DataFrame =
     DriverRows.frame(spark,
-      StructType(Seq(StructField(a, LongType, nullable = true), StructField(b, LongType, bNullable))),
+      StructType(Seq(StructField(a, LongType, aNullable), StructField(b, LongType, bNullable))),
       rows.map { case (x, y) => InternalRow(x, y) })
 }

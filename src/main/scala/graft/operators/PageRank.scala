@@ -44,18 +44,11 @@ object PageRank {
   /** PageRank after `iters` synchronous iterations. `dampPct` is the
     * damping factor in integer percent (85 = the canonical 0.85).
     * Output: (node, rank) with rank in units (double, rounded 6 dp).
+    * At most [[LocalGraph.MaxEdges]] edges iterate on the driver (README
+    * "Driver tiers").
     */
   def ranks(edges: DataFrame, srcCol: String, dstCol: String, iters: Int,
-            dampPct: Long = 85L, scale: Long = DefaultScale): DataFrame =
-    ranksWith(edges, srcCol, dstCol, iters, dampPct, scale,
-      LocalGraph.MaxEdges)
-
-  /** [[ranks]] with an explicit local-tier ceiling — the
-    * [[Dedup.connectedComponentsWith]] test-seam convention.
-    */
-  private[graft] def ranksWith(edges: DataFrame, srcCol: String,
-                               dstCol: String, iters: Int, dampPct: Long,
-                               scale: Long, localMaxEdges: Long): DataFrame = {
+            dampPct: Long = 85L, scale: Long = DefaultScale): DataFrame = {
     require(iters >= 0 && dampPct >= 0 && dampPct <= 100,
       s"pageRank: bad iters=$iters / dampPct=$dampPct")
     // The edge list and its two derived tables are referenced 2–3× per
@@ -73,7 +66,7 @@ object PageRank {
     // to the distributed loop's by construction (PageRankSpec
     // equivalence case). An empty edge list has no node to divide the
     // start mass over; the distributed loop returns it as no rows.
-    val local = LocalGraph.collect(e, localMaxEdges)
+    val local = LocalGraph.collect(e, "pagerank")
     if (local.exists(_.nonEmpty)) {
       val el = local.get.map(r => (r.getLong(0), r.getLong(1)))
       val nodesL = (el.map(_._1) ++ el.map(_._2)).distinct.sorted
@@ -93,8 +86,7 @@ object PageRank {
           next.put(nd, base + (dampPct * in.getOrDefault(nd, 0L)) / 100L))
         r = next
       }
-      return localRankFrame(e.sparkSession,
-        nodesL.map(nd => (nd, r.get(nd))), scale)
+      return localRankFrame(e, nodesL.map(nd => (nd, r.get(nd))), scale)
     }
     val nodes = e.select(col("_src").as("node"))
       .union(e.select(col("_dst").as("node"))).distinct().localCheckpoint()
@@ -129,11 +121,12 @@ object PageRank {
   /** Integer ranks → the gate's output frame, with the one float step
     * (round(r/scale, 6)) evaluated by the SAME Spark expression the
     * distributed loop ends with — local-tier float formatting can never
-    * drift a bit from the engine's.
+    * drift a bit from the engine's. `node` is nullable where an endpoint
+    * column of the edge list `e` is.
     */
-  private def localRankFrame(spark: org.apache.spark.sql.SparkSession,
-                             ranks: Seq[(Long, Long)], scale: Long): DataFrame = {
-    LocalGraph.frame(spark, ranks, "node", "_r")
+  private def localRankFrame(e: DataFrame, ranks: Seq[(Long, Long)], scale: Long): DataFrame = {
+    LocalGraph.frame(e.sparkSession, ranks, "node", "_r",
+      aNullable = e.schema("_src").nullable || e.schema("_dst").nullable, bNullable = true)
       .select(col("node"),
         round(col("_r").cast("double") / lit(scale.toDouble), 6).as("rank"))
   }
@@ -150,35 +143,26 @@ object PageRank {
     * driver-side.
     *
     * Output: (node, rank) over ALL graph nodes (unreached nodes rank
-    * 0 — the caller top-k's per use case).
+    * 0 — the caller top-k's per use case). At most
+    * [[LocalGraph.MaxEdges]] edges and distinct seeds iterate on the
+    * driver (README "Driver tiers").
     */
   def personalized(edges: DataFrame, srcCol: String, dstCol: String,
                    seeds: DataFrame, seedCol: String, iters: Int,
-                   dampPct: Long = 85L, scale: Long = DefaultScale): DataFrame =
-    personalizedWith(edges, srcCol, dstCol, seeds, seedCol, iters, dampPct,
-      scale, LocalGraph.MaxEdges)
-
-  /** [[personalized]] with an explicit local-tier ceiling — the
-    * [[Dedup.connectedComponentsWith]] test-seam convention.
-    */
-  private[graft] def personalizedWith(edges: DataFrame, srcCol: String,
-                                      dstCol: String, seeds: DataFrame,
-                                      seedCol: String, iters: Int,
-                                      dampPct: Long, scale: Long,
-                                      localMaxEdges: Long): DataFrame = {
+                   dampPct: Long = 85L, scale: Long = DefaultScale): DataFrame = {
     require(iters >= 0 && dampPct >= 0 && dampPct <= 100,
       s"personalized: bad iters=$iters / dampPct=$dampPct")
     val e = edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst"))
       .localCheckpoint()
-    // DRIVER-LOCAL TIER — the [[ranksWith]] replica with the seeded
+    // DRIVER-LOCAL TIER — the [[ranks]] replica with the seeded
     // teleport: tele(mass) = mass div |seeds∩nodes| on seeds, 0
     // elsewhere; identical integer chain, same Spark round at the end.
     // The distinct seeds pass the same gate as the edges, so a seed set
     // over the ceiling takes the distributed loop.
     val local = for {
-      rows <- LocalGraph.collect(e, localMaxEdges)
-      seedRows <- LocalGraph.collect(
-        seeds.select(col(seedCol)).distinct(), localMaxEdges)
+      rows <- LocalGraph.collect(e, "personalized_pagerank")
+      seedRows <- LocalGraph.collect(seeds.select(col(seedCol)).distinct(),
+        "personalized_pagerank")
     } yield (rows, seedRows)
     if (local.isDefined) {
       val (rows, seedRows) = local.get
@@ -204,8 +188,7 @@ object PageRank {
           tele(nd, dampedBase) + (dampPct * in.getOrDefault(nd, 0L)) / 100L))
         r = next
       }
-      return localRankFrame(e.sparkSession,
-        nodesL.map(nd => (nd, r.get(nd))), scale)
+      return localRankFrame(e, nodesL.map(nd => (nd, r.get(nd))), scale)
     }
     val nodes = e.select(col("_src").as("node"))
       .union(e.select(col("_dst").as("node"))).distinct()

@@ -48,15 +48,7 @@ object Pipeline {
   def prepCorpus(docs: DataFrame, textCol: String, idCol: String,
                  lang: String, minQuality: Double,
                  n: Int = 3, bands: Int = 42, rowsPerBand: Int = 3,
-                 threshold: Double = 0.5): DataFrame =
-    prepCorpusWith(docs, textCol, idCol, lang, minQuality, n, bands, rowsPerBand, threshold,
-      Dedup.MaxDriverDocs)
-
-  /** [[prepCorpus]] with the held corpus' row ceiling as a parameter. */
-  private[graft] def prepCorpusWith(docs: DataFrame, textCol: String, idCol: String,
-                                    lang: String, minQuality: Double, n: Int, bands: Int,
-                                    rowsPerBand: Int, threshold: Double,
-                                    maxDriverDocs: Long): DataFrame = {
+                 threshold: Double = 0.5): DataFrame = {
     def step[T](name: String)(body: => T): T =
       Jobs.labelled(docs.sparkSession, "prep_corpus", name)(body)
     // Score, BARRIER, then filter: pushing the lang/quality predicate
@@ -83,13 +75,13 @@ object Pipeline {
     // materialized blocks, so a corpus over the ceiling costs one
     // bounded read, not a recompute.
     val exact = step("exact")(Dedup.exact(scored, textCol, idCol).localCheckpoint())
-    val held = step("hold")(DriverRows.hold(exact, maxDriverDocs))
+    val held = DriverRows.hold(exact, "prep_corpus", "hold", Dedup.MaxDriverDocs)
     // The survivors are read from the barrier, not from the held rows: a
     // local relation would spread the caller's write over one file per
     // core, where the barrier keeps its own partitioning.
     step("near_dup") {
-      val pairs = Dedup.minhashLshPairsWith(held.getOrElse(exact), textCol, idCol, n, bands,
-        rowsPerBand, threshold, Dedup.DefaultMaxBucketSize, maxDriverDocs)
+      val pairs = Dedup.minhashLshPairs(held.getOrElse(exact), textCol, idCol, n, bands,
+        rowsPerBand, threshold)
       Dedup.resolvePairs(exact, pairs, idCol)
     }.select(col(idCol), col("lang_pred"), col("quality"), col("n_tokens"))
   }

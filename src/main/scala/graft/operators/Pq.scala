@@ -227,11 +227,11 @@ object Pq {
     *    the query side is read without a job (straight from its relation
     *    when `queries` is itself local, else through
     *    [[DriverRows.collect]]) and queries × codes is at most
-    *    [[MaxDriverPairs]]. Each query builds one ADC table, its dot with
-    *    every code value that occurs, by the same fold as
-    *    [[org.apache.spark.sql.graft.PqAdcScore]]; a pair's score is `m`
-    *    lookups into it, summed in `PqAdcScore`'s order, so it is
-    *    bitwise the same. Pairs rank in Spark's order
+    *    [[MaxDriverPairs]] ([[DriverRows.ceiling]]). Each query builds
+    *    one ADC table, its dot with every code value that occurs, by the
+    *    same fold as [[org.apache.spark.sql.graft.PqAdcScore]]; a pair's
+    *    score is `m` lookups into it, summed in `PqAdcScore`'s order, so
+    *    it is bitwise the same. Pairs rank in Spark's order
     *    (`SQLOrderingUtil.compareDoubles` on the score, then the id), rows
     *    sharing a query id rank together, as in the window, and the score
     *    is rounded by Spark's own `Round`. The result is a local relation,
@@ -243,20 +243,13 @@ object Pq {
     */
   def pqTopKFromIndex(codes: DataFrame, cents: Codebook, queries: DataFrame,
                       vecCol: String, idCol: String, dim: Int, m: Int,
-                      k: Int): DataFrame =
-    pqTopKFromIndexWith(codes, cents, queries, vecCol, idCol, dim, m, k, MaxDriverPairs)
-
-  /** [[pqTopKFromIndex]] with the driver tier's pair ceiling as a parameter. */
-  private[graft] def pqTopKFromIndexWith(codes: DataFrame, cents: Codebook,
-                                         queries: DataFrame, vecCol: String,
-                                         idCol: String, dim: Int, m: Int, k: Int,
-                                         maxPairs: Long): DataFrame = {
+                      k: Int): DataFrame = {
     require(dim % m == 0, s"dim $dim not divisible by m $m")
     val subLen = dim / m
     require(cents.forall(_._3.length == subLen),
       s"every codebook centroid must have dim / m = $subLen components")
     val cb = bySub(cents)
-    driverTopK(codes, queries, vecCol, idCol, k, maxPairs, cb, m, subLen).getOrElse {
+    driverTopK(codes, queries, vecCol, idCol, k, cb, m, subLen).getOrElse {
       val q = querySide(queries, vecCol, idCol)
       rankTopK(codes.join(broadcast(q), col(idCol) =!= col("query_id"))
         .withColumn("_s", adcScore(cb, m, subLen)), idCol, k)
@@ -284,7 +277,9 @@ object Pq {
     * `vecCol` is read from its relation, widening each component as
     * `Cast` does. Any other frame goes through [[querySide]] (so a
     * missing column fails as it does in the distributed plan) and
-    * [[DriverRows.collect]].
+    * [[DriverRows.collect]], whose rows are checked against `ceiling`
+    * again: under a [[DriverRows.ceilingsAt]] scope the collect reads the
+    * scope's value, not this derived bound.
     */
   private def queryRows(queries: DataFrame, vecCol: String, idCol: String, ceiling: Long)
       : Option[(StructField, Boolean, Array[(Long, Array[Double])])] = {
@@ -317,8 +312,9 @@ object Pq {
       case None =>
         val q = querySide(queries, vecCol, idCol)
         if (q.schema("query_id").dataType != LongType) None
-        else Jobs.labelled(q.sparkSession, "pq", "collect_queries")(DriverRows.collect(q, ceiling))
-          .filterNot(_.exists(r => r.anyNull || r.getSeq[Any](1).contains(null)))
+        else DriverRows.collect(q, "pq", "collect_queries", ceiling)
+          .filterNot(rows => rows.length > ceiling ||
+            rows.exists(r => r.anyNull || r.getSeq[Any](1).contains(null)))
           .map(rows => (q.schema("query_id"), q.schema("_qv").nullable,
             rows.map(r => (r.getLong(0), r.getSeq[Double](1).toArray))))
     }
@@ -330,8 +326,9 @@ object Pq {
     * the score is nullable as the `PqAdcScore` over the same columns.
     */
   private def driverTopK(codes: DataFrame, queries: DataFrame, vecCol: String, idCol: String,
-                         k: Int, maxPairs: Long, cb: Map[Int, Array[(Long, Seq[Double])]],
+                         k: Int, cb: Map[Int, Array[(Long, Seq[Double])]],
                          m: Int, subLen: Int): Option[DataFrame] = {
+    val maxPairs = DriverRows.ceiling(MaxDriverPairs)
     val idField = codes.schema(idCol)
     val codesField = codes.schema("codes")
     val (cellArr, centArr) = cbArrays(cb, m)
@@ -426,7 +423,7 @@ object Pq {
     * [[PackedCodes]] relation where it packs, else as the plain rows.
     */
   private[graft] def holdCodes(codes: DataFrame): Option[DataFrame] =
-    DriverRows.hold(codes, MaxDriverPairs).map { held =>
+    DriverRows.hold(codes, "pq", "load_codes", MaxDriverPairs).map { held =>
       (for (rel <- DriverRows.local(held); packed <- PackedCodes.of(rel))
         yield PlanFrames.ofPlan(held.sparkSession, rel.copy(data = packed))).getOrElse(held)
     }

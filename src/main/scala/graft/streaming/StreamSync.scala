@@ -791,53 +791,6 @@ object StreamSync {
       tempRoots :+ dimRoot.toString)
   }
 
-  /** Continuous-ingestion dedup: every micro-batch of incoming documents
-    * is screened with [[graft.operators.Dedup.indexDedup]] against the
-    * static corpus PLUS everything this stream already ingested, and
-    * only novel documents (no near-dup at `threshold`) reach `outDir`.
-    * This is the streaming face of the "dedup the crawl against the
-    * training set" operator: the accumulating output directory IS the
-    * growing index, so a duplicate arriving in a later trigger is
-    * dropped even if its original arrived on this stream, not in the
-    * seed corpus.
-    *
-    * Scale notes: per trigger the work is O(micro-batch) band keys
-    * joined against the corpus+ingested index — the same asymmetric
-    * cost shape as the batch operator. (At production scale the index
-    * side would be a maintained banded table rather than a re-scan of
-    * the output directory; the foreachBatch body is the integration
-    * point.) Exactly-once: foreachBatch may replay a batch on recovery;
-    * parquet append is idempotent only per-file, so a production sink
-    * would dedup on `batchId` — out of scope for the operator shape.
-    */
-  def startDedupedIngest(docs: DataFrame, corpus: DataFrame, textCol: String,
-                         idCol: String, outDir: String, checkpointDir: String,
-                         n: Int = 3, bands: Int = 42, rowsPerBand: Int = 3,
-                         threshold: Double = 0.5): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val spark = batch.sparkSession
-        val ingested =
-          if (java.nio.file.Files.exists(java.nio.file.Paths.get(outDir)))
-            scala.util.Try(spark.read.schema(batch.schema).parquet(outDir))
-              .getOrElse(spark.createDataFrame(
-                java.util.Collections.emptyList[Row](), batch.schema))
-          else spark.createDataFrame(
-            java.util.Collections.emptyList[Row](), batch.schema)
-        val index = corpus.select(col(idCol), col(textCol))
-          .unionByName(ingested.select(col(idCol), col(textCol)))
-        val verdicts = graft.operators.Dedup.indexDedup(
-          index, batch, textCol, idCol, n, bands, rowsPerBand, threshold)
-        val kept = batch.join(
-          verdicts.filter(col("keep") === 1L).select(col("doc_id").as(idCol)),
-          Seq(idCol), "left_semi")
-        kept.write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-
   /** STREAMING SCD2 dimension maintenance: every micro-batch of change
     * rows is spliced into the parquet state directory with
     * [[graft.operators.ChangeLog.scd2Apply]] — only the batch's touched

@@ -5,11 +5,8 @@ import java.nio.file.{Files, Path}
 import java.sql.Timestamp
 import java.util.zip.GZIPInputStream
 
-import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.graft.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -60,38 +57,31 @@ class CdcTierSpec extends AnyFunSuite with SparkTestBase {
   private def dataFiles(dir: Path): Int =
     Files.list(dir).iterator().asScala.count(_.getFileName.toString.startsWith("part-"))
 
-  private def sorted(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+  /** One tier's cycle: the window `Engine.runCdc` returned, its sink and
+    * the state the window merges into.
+    */
+  private final case class Cycle(window: SyncResult, sink: Path, merged: DataFrame)
 
-  /** One tier's cycle: what it wrote, returned and merged. */
-  private final case class Cycle(local: Boolean, scan: Boolean, lines: Seq[String], files: Int,
-                                 rows: Seq[String], schema: StructType, watermark: Long,
-                                 merged: Seq[String], mergedSchema: StructType)
-
-  private def cycle(log: DataFrame, keys: Seq[String], cutoffMs: Long, nowMs: Long,
-                    ceiling: Long): Cycle = {
+  private def cycle(log: DataFrame, keys: Seq[String], cutoffMs: Long, nowMs: Long): Cycle = {
     val sink = tmp("graft-cdc-sink").resolve("out")
-    val r = Engine.runCdcWith(ParquetChangeLog(log, keys), cutoffMs, nowMs, Hash,
-      Some(SinkSpec("json", sink.toString)), ceiling)
+    val r = Engine.runCdc(ParquetChangeLog(log, keys), cutoffMs, nowMs, Hash,
+      Some(SinkSpec("json", sink.toString)))
     val state = ChangeLog.cdcMergeState(
       log.filter(expr(s"unix_micros(`${ChangeLog.CommitTs}`) div 1000") <= cutoffMs), keys, "seq")
-    val merged = ChangeLog.cdcMergeApply(state,
-      r.df.drop(ChangeLog.MpChangeType, "row_hash"), keys, "seq")
-    Cycle(DriverRows.local(r.df).isDefined,
-      r.df.queryExecution.executedPlan.toString.contains("FileScan parquet"),
-      sinkLines(sink), dataFiles(sink), sorted(r.df), r.df.schema, r.newWatermarkMs,
-      sorted(merged), merged.schema)
+    Cycle(r, sink, ChangeLog.cdcMergeApply(state,
+      r.df.drop(ChangeLog.MpChangeType, "row_hash"), keys, "seq"))
   }
 
+  private def scans(df: DataFrame) = df.queryExecution.executedPlan.toString.contains("FileScan parquet")
+
   private def assertSame(name: String, held: Cycle, plan: Cycle): Unit = {
-    assert(held.local && !held.scan, s"$name: the window was not held")
-    assert(!plan.local && plan.scan, s"$name: the lazy tier did not scan the log")
-    assert(held.lines == plan.lines, s"$name: sink rows differ")
-    assert(held.rows == plan.rows, s"$name: returned rows differ")
-    assert(held.schema == plan.schema, s"$name: ${held.schema} vs ${plan.schema}")
-    assert(held.watermark == plan.watermark, name)
-    assert(held.merged == plan.merged, s"$name: merge states differ")
-    assert(held.mergedSchema == plan.mergedSchema, s"$name: merge schemas differ")
-    assert(held.files <= 1, s"$name: the held window wrote ${held.files} files")
+    TierLaws.broken(held.window.df, plan.window.df).foreach(m => fail(s"$name: $m"))
+    assert(!scans(held.window.df) && scans(plan.window.df), s"$name: scans")
+    assert(sinkLines(held.sink) == sinkLines(plan.sink), s"$name: sink rows differ")
+    assert(held.window.newWatermarkMs == plan.window.newWatermarkMs, name)
+    assert(TierLaws.rows(held.merged) == TierLaws.rows(plan.merged), s"$name: merge states differ")
+    assert(held.merged.schema == plan.merged.schema, s"$name: merge schemas differ")
+    assert(dataFiles(held.sink) <= 1, s"$name: the held window wrote ${dataFiles(held.sink)} files")
   }
 
   private val base: Seq[Ev] = Seq(
@@ -117,9 +107,9 @@ class CdcTierSpec extends AnyFunSuite with SparkTestBase {
       ("a two-column key with a null component", Seq("k", "k2"), T0 + 3000L, T0 + 9000L),
       ("same-ms commits broken by the tie-break", Seq("k"), T0 + 8500L, T0 + 9000L))
     for ((name, keys, cutoff, now) <- cases) {
-      val held = cycle(log, keys, cutoff, now, Long.MaxValue)
-      assertSame(name, held, cycle(log, keys, cutoff, now, -1L))
-      assert(held.rows.isEmpty == (name == "an empty window"), name)
+      val (held, plan) = TierLaws.tiers(cycle(log, keys, cutoff, now))
+      assertSame(name, held, plan)
+      assert(held.window.df.isEmpty == (name == "an empty window"), name)
     }
   }
 
@@ -128,8 +118,9 @@ class CdcTierSpec extends AnyFunSuite with SparkTestBase {
     val (cutoff, now) = (T0 + 3000L, T0 + 9000L)
     val n = ChangeLog.tableChanges(log, cutoff + 1, now).count()
     assert(n == 8)
-    assertSame("over the ceiling", cycle(log, Seq("k"), cutoff, now, n),
-      cycle(log, Seq("k"), cutoff, now, n - 1))
+    assertSame("over the ceiling",
+      DriverRows.ceilingsAt(n)(cycle(log, Seq("k"), cutoff, now)),
+      DriverRows.ceilingsAt(n - 1)(cycle(log, Seq("k"), cutoff, now)))
   }
 
   test("a driver-local batch over the ceiling, or keyed by a double, merges through the broadcast plan") {
@@ -149,45 +140,23 @@ class CdcTierSpec extends AnyFunSuite with SparkTestBase {
 
   test("the window collect is one job tagged graft:cdc:collect_window; the merge is one job") {
     val log = parquetLog(base)
-    val sc = spark.sparkContext
-    val group = s"cdc-tier-${java.util.UUID.randomUUID}"
-    val seen = mutable.ArrayBuffer[(Set[String], String)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val p = e.properties
-        if (p != null && p.getProperty("spark.jobGroup.id") == group) seen.synchronized {
-          seen += ((Option(p.getProperty("spark.job.tags")).toSet.flatMap((t: String) =>
-            t.split(",").toSet), p.getProperty("spark.job.description")))
-        }
-      }
-    }
-    def jobs[T](body: => T): (T, Seq[(Set[String], String)]) = {
-      seen.synchronized(seen.clear())
-      sc.setJobGroup(group, "caller step")
-      val out = try body finally sc.clearJobGroup()
-      ListenerBusAccess.drain(sc)
-      (out, seen.synchronized(seen.toList))
-    }
     val stateDir = tmp("graft-cdc-state").resolve("s").toString
     ChangeLog.cdcMergeState(log.filter(col("seq") < 20L), Seq("k"), "seq").write.parquet(stateDir)
     val stateSchema = spark.read.parquet(stateDir).schema
-    sc.addSparkListener(listener)
-    try {
-      val sink = Some(SinkSpec("json", tmp("graft-cdc-sink").resolve("out").toString))
-      val (window, sync) = jobs(Engine.runCdc(log, CdcSpec(Seq("k"), T0 + 3000L, T0 + 9000L), Hash, sink).df)
-      assert(sync.size == 2, s"$sync")
-      assert(sync.count(_._1.contains("graft:cdc:collect_window")) == 1, s"$sync")
-      assert(sync.forall(_._2 == "caller step"), s"$sync")
-      // A state read with its schema starts no inference job, so the
-      // merge is exactly its one write job.
-      val (_, merge) = jobs {
-        ChangeLog.cdcMergeApply(spark.read.schema(stateSchema).parquet(stateDir),
-          window.drop(ChangeLog.MpChangeType, "row_hash"), Seq("k"), "seq")
-          .write.parquet(tmp("graft-cdc-merged").resolve("m").toString)
-      }
-      assert(merge.size == 1, s"$merge")
-      // With no sink nothing runs.
-      assert(jobs(Engine.runCdc(log, CdcSpec(Seq("k"), T0 + 3000L, T0 + 9000L), Hash))._2.isEmpty)
-    } finally sc.removeSparkListener(listener)
+    val sink = Some(SinkSpec("json", tmp("graft-cdc-sink").resolve("out").toString))
+    val (window, sync) = jobsOf(Engine.runCdc(log, CdcSpec(Seq("k"), T0 + 3000L, T0 + 9000L), Hash, sink).df)
+    assert(sync.size == 2, s"$sync")
+    assert(sync.count(_._1.contains("graft:cdc:collect_window")) == 1, s"$sync")
+    assert(sync.forall(_._2 == SparkTestBase.CallerStep), s"$sync")
+    // A state read with its schema starts no inference job, so the
+    // merge is exactly its one write job.
+    val (_, merge) = jobsOf {
+      ChangeLog.cdcMergeApply(spark.read.schema(stateSchema).parquet(stateDir),
+        window.drop(ChangeLog.MpChangeType, "row_hash"), Seq("k"), "seq")
+        .write.parquet(tmp("graft-cdc-merged").resolve("m").toString)
+    }
+    assert(merge.size == 1, s"$merge")
+    // With no sink nothing runs.
+    assert(jobsOf(Engine.runCdc(log, CdcSpec(Seq("k"), T0 + 3000L, T0 + 9000L), Hash))._2.isEmpty)
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, DriverRows}
 
 class DedupSpec extends AnyFunSuite with SparkTestBase {
 
@@ -83,15 +83,12 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val closed = (1 to 300).map { i =>
       (i.toLong, (1 to 40).map(_ => s"v${rnd.nextInt(8)}").mkString(" "))
     }.toDF("doc_id", "text")
-    val (nDocs, cand) = Dedup.prefixCandidateStats(closed, "text", "doc_id",
-      n = 3, threshold = 0.5)
-    assert(nDocs == 300L)
     // The 300-doc spec fixture sits in the early-saturation band: above
     // the spec's explicit 64/doc bound (proving the routing mechanism)
     // though below the production default, which is set at the measured
     // 1×/10× cost crossover (DefaultMaxPrefixCandidatesPerDoc scaladoc).
-    assert(cand > 64.0 * nDocs,
-      f"closed-vocab fixture must exceed the routing bound (measured $cand%.0f)")
+    // The router takes LSH exactly when the measured candidates exceed
+    // the bound times the document count.
     val (closedOut, closedExact) = Dedup.prefixJaccardPairsRouted(
       closed, "text", "doc_id", n = 3, threshold = 0.5,
       maxCandidatesPerDoc = 64.0)
@@ -197,10 +194,9 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     val pairs = (0L until 99L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     intercept[IllegalStateException] {
-      // localMaxEdges = 0 forces the distributed loop — the local
+      // A negative ceiling forces the distributed loop — the local
       // union-find tier has no rounds to run out of.
-      Dedup.connectedComponentsWith(pairs, maxIters = 1, localMaxEdges = 0L)
-        .collect()
+      DriverRows.ceilingsAt(-1L)(Dedup.connectedComponents(pairs, maxIters = 1)).collect()
     }
   }
 
@@ -215,12 +211,9 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       (21L, 22L), (22L, 21L),                // dup + reversed
       (30L, 30L),                            // self-loop (filtered)
       (40L, 41L), (50L, 51L))
-    val pairs = edges.toDF("id_a", "id_b")
-    val local = Dedup.connectedComponentsWith(pairs, 50, Long.MaxValue)
-      .as[(Long, Long)].collect().toSet
-    val dist = Dedup.connectedComponentsWith(pairs, 50, 0L)
-      .as[(Long, Long)].collect().toSet
-    assert(local == dist, s"local $local != distributed $dist")
+    val (driver, _) =
+      TierLaws.holds("components")(Dedup.connectedComponents(edges.toDF("id_a", "id_b")))
+    val local = driver.as[(Long, Long)].collect().toSet
     assert(local.contains((4L, 1L)) && local.contains((13L, 10L)) &&
       local.contains((22L, 20L)) && local.contains((41L, 40L)))
   }

@@ -5,33 +5,12 @@ import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.TaskContext
-import org.apache.spark.graft.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Jobs.overlap]]: task order, nesting, the failure protocol and the
   * labels its jobs carry.
   */
 class JobsSpec extends AnyFunSuite with SparkTestBase {
-
-  /** Job id -> (description, tags) of every job started while `body` runs. */
-  private def recordJobs[A](body: => A): (A, Map[Int, (String, Set[String])]) = {
-    val seen = new ConcurrentHashMap[Int, (String, Set[String])]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val p = e.properties
-        val tags = Option(p.getProperty("spark.job.tags")).toSeq
-          .flatMap(_.split(",")).filter(_.nonEmpty).toSet
-        seen.put(e.jobId, (p.getProperty("spark.job.description"), tags))
-      }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    val out =
-      try body
-      finally { ListenerBusAccess.drain(sc); sc.removeSparkListener(listener) }
-    (out, seen.asScala.toMap)
-  }
 
   test("results come back in task order and nested calls do not deadlock") {
     val out = Jobs.overlap(spark, "test", "outer")((0 until 6).map { i => () =>
@@ -63,7 +42,7 @@ class JobsSpec extends AnyFunSuite with SparkTestBase {
       () => { JobsSpec.running.await(); throw boom },
       () => { JobsSpec.queuedRan.add(4); 0L },
       () => { JobsSpec.queuedRan.add(5); 0L })
-    val (thrown, jobs) = recordJobs {
+    val (thrown, jobs) = jobsOf {
       try { Jobs.overlap(spark, "test", "fail")(tasks: _*); None }
       catch { case t: Throwable => Some(t) }
     }
@@ -73,8 +52,8 @@ class JobsSpec extends AnyFunSuite with SparkTestBase {
         s"the cancelled siblings' failures: ${boom.getSuppressed.toSeq}")
       assert(JobsSpec.queuedRan.isEmpty, s"queued tasks ran: ${JobsSpec.queuedRan}")
       assert(JobsSpec.ended.asScala.toSet == Set(0, 1, 2), "overlap returned before its tasks ended")
-      val own = jobs.collect { case (id, (_, tags)) if tags("graft:test:fail") => id }.toSet
-      assert(own.size == 3, s"jobs of the call: $jobs")
+      assert(jobs.count(_._1("graft:test:fail")) == 3, s"jobs of the call: $jobs")
+      val own = sc.statusTracker.getJobIdsForTag("graft:test:fail").toSet
       val active = sc.statusTracker.getActiveJobIds().toSet
       assert((own & active).isEmpty, s"jobs still active after overlap threw: ${own & active}")
     } finally JobsSpec.release.countDown()
@@ -84,16 +63,16 @@ class JobsSpec extends AnyFunSuite with SparkTestBase {
     val sc = spark.sparkContext
     def pair(step: String): Seq[Long] = Jobs.overlap(spark, "test", step)(
       () => spark.range(0, 100).count(), () => spark.range(0, 50).count())
-    val (_, jobs) = recordJobs {
+    val (_, jobs) = jobsOf {
       try {
         sc.setJobDescription("A"); pair("a")
         sc.setJobDescription("B"); pair("b")
       } finally sc.setJobDescription(null)
     }
     for ((step, desc) <- Seq("a" -> "A", "b" -> "B")) {
-      val own = jobs.values.filter(_._2(s"graft:test:$step")).toSeq
+      val own = jobs.filter(_._1(s"graft:test:$step"))
       assert(own.size >= 2, s"jobs of step $step: $jobs")
-      assert(own.forall(_._1 == desc), s"step $step jobs carried ${own.map(_._1)}, not $desc")
+      assert(own.forall(_._2 == desc), s"step $step jobs carried ${own.map(_._2)}, not $desc")
     }
   }
 }

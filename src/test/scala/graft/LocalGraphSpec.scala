@@ -1,45 +1,18 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.graft.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Dedup, LocalGraph, PageRank}
+import graft.operators.{Dedup, DriverRows, KCore, LabelProp, LocalGraph, PageRank}
 
 /** The driver-local graph tier's one gate ([[LocalGraph.collect]]) and
-  * the job counts of the loops that call it.
+  * the jobs of the loops that call it.
   */
 class LocalGraphSpec extends AnyFunSuite with SparkTestBase {
-
-  /** `body`'s result and the number of Spark jobs it started. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"local-graph-${java.util.UUID.randomUUID}"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "job count")
-    try {
-      val out = body
-      ListenerBusAccess.drain(sc)
-      (out, jobs.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
-
-  private def hasNode(df: DataFrame, p: PartialFunction[Any, Unit]): Boolean =
-    df.queryExecution.analyzed.find(p.isDefinedAt).isDefined
 
   test("gate: rows only for all-long, null-free input within the ceiling") {
     import spark.implicits._
@@ -62,23 +35,51 @@ class LocalGraphSpec extends AnyFunSuite with SparkTestBase {
       ("null in the second column", nullB, 10L, None, None),
       ("null in a third column", nullW, 10L, None, None))
     for ((name, df, ceiling, known, want) <- cases) {
-      val got = LocalGraph.collect(df, ceiling, known)
+      val got = DriverRows.ceilingsAt(ceiling)(LocalGraph.collect(df, "test", known))
       assert(got.map(_.length) == want, s"$name: got ${got.map(_.toSeq)}")
     }
-    assert(LocalGraph.collect(longs, 3L).get.map(r => (r.getLong(0), r.getLong(1)))
+    assert(LocalGraph.collect(longs, "test").get.map(r => (r.getLong(0), r.getLong(1)))
       .toSet == Set((1L, 2L), (2L, 3L), (3L, 4L)))
   }
 
   test("gate: without a held count, one job decides and collects") {
     val df = spark.range(0, 1000, 1, 8)
       .select(col("id"), (col("id") + 1).as("next")).localCheckpoint()
-    val (under, underJobs) = jobsOf(LocalGraph.collect(df, 5000L))
-    assert(under.map(_.length).contains(1000) && underJobs == 1,
-      s"under the ceiling: ${under.map(_.length)} rows in $underJobs jobs")
-    val (over, overJobs) = jobsOf(LocalGraph.collect(df, 100L))
-    assert(over.isEmpty && overJobs == 1, s"over the ceiling: $overJobs jobs")
-    val (_, heldJobs) = jobsOf(LocalGraph.collect(df, 100L, Some(1000L)))
-    assert(heldJobs == 0, s"a held count over the ceiling ran $heldJobs jobs")
+    def collect(ceiling: Long, known: Option[Long] = None) =
+      jobsOf(DriverRows.ceilingsAt(ceiling)(LocalGraph.collect(df, "test", known)))
+    val (under, underJobs) = collect(5000L)
+    assert(under.map(_.length).contains(1000) && underJobs.size == 1,
+      s"under the ceiling: ${under.map(_.length)} rows in $underJobs")
+    val (over, overJobs) = collect(100L)
+    assert(over.isEmpty && overJobs.size == 1, s"over the ceiling: $overJobs")
+    val (_, heldJobs) = collect(100L, Some(1000L))
+    assert(heldJobs.isEmpty, s"a held count over the ceiling ran $heldJobs")
+  }
+
+  test("each graph loop's bounded collect is one job tagged graft:<op>:hold") {
+    import spark.implicits._
+    // Checkpointed, so each collect is a job; and nullable, where the
+    // operator specs' edges are not, so the tiers' schemas are checked
+    // on both kinds of input.
+    val edges = spark.createDataFrame(
+      Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L), (1L, 3L), (3L, 1L))
+        .map { case (a, b) => Row(a, b) }.asJava,
+      StructType(Seq(StructField("src", LongType), StructField("dst", LongType)))).localCheckpoint()
+    val loops: Seq[(String, () => DataFrame)] = Seq(
+      "connected_components" -> (() => Dedup.connectedComponents(
+        edges.select(col("src").as("id_a"), col("dst").as("id_b")))),
+      "kcore" -> (() => KCore.coreMembers(edges, "src", "dst", k = 2, iters = 3)),
+      "pagerank" -> (() => PageRank.ranks(edges, "src", "dst", 3)),
+      "personalized_pagerank" -> (() =>
+        PageRank.personalized(edges, "src", "dst", Seq(1L).toDF("node"), "node", 3)),
+      "label_prop" -> (() => LabelProp.communities(
+        edges.withColumn("w", lit(1L)), "src", "dst", "w", 3)))
+    for ((op, call) <- loops) {
+      val (out, jobs) = jobsOf(call())
+      assert(DriverRows.local(out).isDefined, s"$op did not take the driver tier")
+      assert(jobs.exists(_._1.contains(s"graft:$op:hold")), s"$op: $jobs")
+      TierLaws.holds(op)(call())
+    }
   }
 
   test("resolvePairs: the local components tier runs at most 8 jobs") {
@@ -89,41 +90,35 @@ class LocalGraphSpec extends AnyFunSuite with SparkTestBase {
     val (kept, jobs) = jobsOf(Dedup.resolvePairs(docs, pairs, "doc_id").count())
     assert(kept == 700L)
     // 8 jobs, counted the same way before the tier's gate was shared.
-    assert(jobs <= 8, s"resolvePairs ran $jobs jobs")
+    assert(jobs.size <= 8, s"resolvePairs ran ${jobs.size} jobs")
   }
 
   test("PageRank on an empty edge list gives no rows on either tier") {
     import spark.implicits._
     val none = Seq((1L, 2L)).toDF("src", "dst").limit(0)
-    for (ceiling <- Seq(LocalGraph.MaxEdges, 0L))
-      assert(PageRank.ranksWith(none, "src", "dst", 3, 85L, PageRank.DefaultScale,
-        ceiling).collect().isEmpty, s"ceiling $ceiling")
+    val (driver, dist) = TierLaws.tiers(PageRank.ranks(none, "src", "dst", 3))
+    assert(driver.collect().isEmpty && dist.collect().isEmpty)
   }
 
   test("personalized PageRank: seeds over the ceiling take the distributed loop") {
     import spark.implicits._
     val edges = Seq((1L, 2L), (3L, 2L), (4L, 2L), (2L, 1L), (1L, 3L),
       (3L, 4L), (5L, 1L)).toDF("src", "dst")
-    def ppr(seeds: Seq[Long], ceiling: Long) = PageRank.personalizedWith(
-      edges, "src", "dst", seeds.toDF("node"), "node", 4, 85L,
-      PageRank.DefaultScale, ceiling)
+    def ppr(seeds: Seq[Long]) =
+      PageRank.personalized(edges, "src", "dst", seeds.toDF("node"), "node", 4)
     def ranks(df: DataFrame) = df.as[(Long, Double)].collect().toMap
-    val isLocal: PartialFunction[Any, Unit] = { case _: LocalRelation => }
-    val isJoin: PartialFunction[Any, Unit] = { case _: Join => }
     // 7 edges fit a ceiling of 8; 12 distinct seeds (most outside the
     // graph, duplicates included) do not.
     val manySeeds = (Seq(2L, 2L, 4L) ++ (100L to 109L)).reverse
-    val over = ppr(manySeeds, 8L)
-    assert(hasNode(over, isJoin) && !hasNode(over, isLocal),
+    val over = DriverRows.ceilingsAt(8L)(ppr(manySeeds))
+    assert(DriverRows.local(over).isEmpty,
       s"seeds over the ceiling took the local tier:\n${over.queryExecution.analyzed}")
-    val unbounded = ppr(manySeeds, Long.MaxValue)
-    assert(hasNode(unbounded, isLocal) && !hasNode(unbounded, isJoin))
+    val (unbounded, _) = TierLaws.holds("many seeds")(ppr(manySeeds))
     assert(ranks(over) == ranks(unbounded))
     // A small seed set at the same ceiling stays local and agrees with
     // the distributed loop.
-    val small = ppr(Seq(2L, 4L), 8L)
-    assert(hasNode(small, isLocal))
-    assert(ranks(small) == ranks(ppr(Seq(2L, 4L), 0L)))
+    val small = DriverRows.ceilingsAt(8L)(ppr(Seq(2L, 4L)))
+    TierLaws.broken(small, DriverRows.ceilingsAt(-1L)(ppr(Seq(2L, 4L)))).foreach(m => fail(m))
     assert(ranks(small) == ranks(over), "seeds outside the graph changed the ranks")
   }
 }

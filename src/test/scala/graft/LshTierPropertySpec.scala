@@ -5,17 +5,15 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.types._
-import org.scalacheck.{Gen, Prop, Test}
-import org.scalacheck.rng.Seed
-import org.scalacheck.util.Pretty
+import org.scalacheck.{Gen, Prop}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Dedup, DriverRows}
 
 /** The driver tier of `Dedup.minhashLshPairs` equals the distributed
-  * tier (forced by a document ceiling of 0) on random corpora, checked
-  * with scalacheck's own `Prop.forAll` / `Test.check`: rows, the bits of
-  * every `jaccard` double, and the schema.
+  * tier on random corpora, checked with scalacheck's own `Prop.forAll`
+  * through [[TierLaws]]: rows, the bits of every `jaccard` double, and
+  * the schema.
   *
   * The corpora come from a six-word vocabulary, so band buckets collide
   * often, and reach what the driver tier must reproduce: one-word
@@ -82,30 +80,18 @@ class LshTierPropertySpec extends AnyFunSuite with SparkTestBase {
     spark.createDataFrame(rows.asJava, StructType(fields))
   }
 
-  private def rows(df: DataFrame): Seq[(Long, Long, Long)] =
-    df.collect().map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue,
-      java.lang.Double.doubleToRawLongBits(r.getDouble(2)))).toSeq.sorted
-
   private def hasJoin(df: DataFrame) =
     df.queryExecution.analyzed.find(_.isInstanceOf[Join]).isDefined
 
-  private def pairs(df: DataFrame, c: Case, maxDriverDocs: Long) =
-    Dedup.minhashLshPairsWith(df, "text", "doc_id", c.n, c.bands, c.rowsPerBand, c.threshold,
-      c.maxBucketSize, maxDriverDocs)
+  private def pairs(df: DataFrame, c: Case) =
+    Dedup.minhashLshPairs(df, "text", "doc_id", c.n, c.bands, c.rowsPerBand, c.threshold,
+      c.maxBucketSize)
 
   test("the driver tier equals the distributed tier on random corpora") {
-    val prop = Prop.forAll(genCase) { c =>
-      val df = corpus(c)
-      val (driver, dist) = (pairs(df, c, Long.MaxValue), pairs(df, c, 0L))
-      val (got, want) = (rows(driver), rows(dist))
-      Prop(DriverRows.local(driver).isDefined && !hasJoin(driver) && hasJoin(dist)) :| "tiers" &&
-        Prop(driver.schema == dist.schema) :| s"schema ${driver.schema} vs ${dist.schema}" &&
-        Prop(got == want) :| s"rows $got vs $want"
-    }
-    val params = Test.Parameters.default.withMinSuccessfulTests(40)
-      .withInitialSeed(Seed(20261020L)).withWorkers(1)
-    val result = Test.check(params, prop)
-    assert(result.passed, Pretty.pretty(result, Pretty.Params(2)))
+    TierLaws.check(Prop.forAll(genCase) { c =>
+      val (driver, dist) = TierLaws.tiers(pairs(corpus(c), c))
+      TierLaws.law(driver, dist) && Prop(!hasJoin(driver) && hasJoin(dist)) :| "joins"
+    }, seed = 20261020L)
   }
 
   test("a repeated, null or non-long id, or a corpus over the ceiling, keeps the distributed plan") {
@@ -118,11 +104,12 @@ class LshTierPropertySpec extends AnyFunSuite with SparkTestBase {
       "null id" -> Seq((Some(1L), text), (None, text)).toDF("doc_id", "text"),
       "int id" -> Seq((1, text), (2, text)).toDF("doc_id", "text"))
     for ((what, df) <- inputs) {
-      val got = pairs(df, c, Long.MaxValue)
+      val (got, dist) = TierLaws.tiers(pairs(df, c))
       assert(hasJoin(got), what)
-      assert(rows(got) == rows(pairs(df, c, 0L)), what)
+      assert(TierLaws.rows(got) == TierLaws.rows(dist), what)
     }
     val two = Seq((1L, text), (2L, text)).toDF("doc_id", "text")
-    assert(hasJoin(pairs(two, c, 1L)) && !hasJoin(pairs(two, c, 2L)))
+    assert(hasJoin(DriverRows.ceilingsAt(1L)(pairs(two, c))) &&
+      !hasJoin(DriverRows.ceilingsAt(2L)(pairs(two, c))))
   }
 }

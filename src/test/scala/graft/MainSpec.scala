@@ -125,12 +125,11 @@ class MainSpec extends AnyFunSuite with SparkTestBase {
     // assertable surface.)
     val s = Engine.session()
     assert(s.sparkContext.getCheckpointDir.isDefined)
-    // localMaxEdges = 0 pins the DISTRIBUTED tier — the reliable-
+    // A negative ceiling pins the DISTRIBUTED tier — the reliable-
     // checkpoint posture under test is that tier's property (the r17
     // driver-local tier returns a LocalRelation and never checkpoints).
-    val labels = operators.Dedup.connectedComponentsWith(
-      Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b"),
-      maxIters = 50, localMaxEdges = 0L)
+    val labels = operators.DriverRows.ceilingsAt(-1L)(operators.Dedup.connectedComponents(
+      Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")))
     val rdd = labels.queryExecution.analyzed.collectFirst {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
     }.get

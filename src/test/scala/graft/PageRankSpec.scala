@@ -74,22 +74,9 @@ class PageRankSpec extends AnyFunSuite with SparkTestBase {
     val el = Seq((1L, 2L), (3L, 2L), (4L, 2L), (2L, 1L), (1L, 3L),
       (3L, 4L), (5L, 1L))
     val edges = el.toDF("src", "dst")
-    for (it <- Seq(0, 1, 5)) {
-      val local = PageRank.ranksWith(edges, "src", "dst", it, 85L,
-        PageRank.DefaultScale, Long.MaxValue)
-        .as[(Long, Double)].collect().toMap
-      val dist = PageRank.ranksWith(edges, "src", "dst", it, 85L,
-        PageRank.DefaultScale, 0L)
-        .as[(Long, Double)].collect().toMap
-      assert(local == dist, s"iters=$it: $local != $dist")
-    }
+    for (it <- Seq(0, 1, 5))
+      TierLaws.holds(s"iters=$it")(PageRank.ranks(edges, "src", "dst", it))
     val seeds = Seq(2L, 99L).toDF("node") // 99 is outside the graph
-    val localP = PageRank.personalizedWith(edges, "src", "dst", seeds,
-      "node", 4, 85L, PageRank.DefaultScale, Long.MaxValue)
-      .as[(Long, Double)].collect().toMap
-    val distP = PageRank.personalizedWith(edges, "src", "dst", seeds,
-      "node", 4, 85L, PageRank.DefaultScale, 0L)
-      .as[(Long, Double)].collect().toMap
-    assert(localP == distP, s"personalized: $localP != $distP")
+    TierLaws.holds("personalized")(PageRank.personalized(edges, "src", "dst", seeds, "node", 4))
   }
 }

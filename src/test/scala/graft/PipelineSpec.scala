@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.Embeddings
-import graft.operators.Pipeline
+import graft.operators.{DriverRows, Pipeline}
 
 class PipelineSpec extends AnyFunSuite with SparkTestBase {
 
@@ -71,29 +71,12 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("prepCorpus under the ceiling: every job it starts is tagged, at most 5; over it, the same manifest") {
-    import scala.collection.mutable
-    import org.apache.spark.graft.ListenerBusAccess
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val docs = Tables.load(spark, sf, "documents")
-    val sc = spark.sparkContext
-    val tags = mutable.Buffer[Set[String]]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = tags.synchronized {
-        tags += Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
-          .map(_.split(",").toSet).getOrElse(Set.empty)
-      }
-    }
-    ListenerBusAccess.drain(sc)
-    sc.addSparkListener(listener)
-    val held = try {
-      val out = Pipeline.prepCorpus(docs, "text", "doc_id", lang = "en", minQuality = 0.75)
-      ListenerBusAccess.drain(sc)
-      out
-    } finally sc.removeSparkListener(listener)
-    assert(tags.nonEmpty && tags.size <= 5, s"${tags.size} jobs")
-    assert(tags.forall(_.exists(_.startsWith("graft:prep_corpus:"))), tags.toString)
-    val forced = Pipeline.prepCorpusWith(docs, "text", "doc_id", "en", 0.75, 3, 42, 3, 0.5,
-      maxDriverDocs = 0L)
+    def prep() = Pipeline.prepCorpus(docs, "text", "doc_id", lang = "en", minQuality = 0.75)
+    val (held, jobs) = jobsOf(prep())
+    assert(jobs.nonEmpty && jobs.size <= 5, s"${jobs.size} jobs")
+    assert(jobs.forall(_._1.exists(_.startsWith("graft:prep_corpus:"))), jobs.toString)
+    val forced = DriverRows.ceilingsAt(-1L)(prep())
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
     assert(held.schema == forced.schema)
     assert(rows(held) == rows(forced))

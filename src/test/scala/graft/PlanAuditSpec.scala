@@ -175,7 +175,7 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     val stateDir = java.nio.file.Files.createTempDirectory("graft-plan-state").resolve("s").toString
     ChangeLog.cdcMergeState(log.filter(col("_ms") <= cut).drop("_ms"), Seq("user_id"), "event_id")
       .write.parquet(stateDir)
-    val batch = DriverRows.hold(log.filter(col("_ms") > cut).drop("_ms"), Long.MaxValue).get
+    val batch = DriverRows.hold(log.filter(col("_ms") > cut).drop("_ms"), "test", "hold", Long.MaxValue).get
     assert(DriverRows.local(batch).isDefined && batch.count() > 0)
     val merged = ChangeLog.cdcMergeApply(spark.read.parquet(stateDir), batch, Seq("user_id"), "event_id")
     val plan = merged.queryExecution.executedPlan.toString()
@@ -742,8 +742,8 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
     // The fixture graph sits under the r17 driver-local tier's edge
     // ceiling, so the GATE plans as a LocalTableScan + round projection
     // (asserted below). The shape gate here pins the DISTRIBUTED tier —
-    // the 100 TB path — via the test seam (localMaxEdges = 0) over the
-    // same pinned co-pair edges the gate feeds it.
+    // the 100 TB path — under a negative ceiling scope over the same
+    // pinned co-pair edges the gate feeds it.
     val gatePlan = SparkEntry.queries("q_pagerank")(spark, sf)
       .queryExecution.executedPlan.toString()
     assert(gatePlan.contains("LocalTableScan") &&
@@ -754,9 +754,8 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
       minPairs = 2)
     val sym = pairs.select(col("item_a").as("src"), col("item_b").as("dst"))
       .union(pairs.select(col("item_b"), col("item_a")))
-    val plan = graft.operators.PageRank.ranksWith(sym, "src", "dst",
-        iters = 5, dampPct = 85L,
-        scale = graft.operators.PageRank.DefaultScale, localMaxEdges = 0L)
+    val plan = graft.operators.DriverRows.ceilingsAt(-1L)(
+        graft.operators.PageRank.ranks(sym, "src", "dst", iters = 5))
       .queryExecution.executedPlan.toString()
     // the upstream co-purchase self-join must be pinned behind the
     // checkpoint barrier, not replayed per iteration: every edge/node/

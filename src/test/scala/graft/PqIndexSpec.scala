@@ -2,11 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path}
 
-import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.graft.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.functions._
@@ -54,8 +51,8 @@ class PqIndexSpec extends AnyFunSuite with SparkTestBase {
     Pq.loadIndex(spark, dir)
   }
 
-  private def topK(q: DataFrame, k: Int, ceiling: Long): DataFrame =
-    Pq.pqTopKFromIndexWith(index._1, index._2, q, "embedding", "vec_id", Dim, M, k, ceiling)
+  private def topK(q: DataFrame, k: Int): DataFrame =
+    Pq.pqTopKFromIndex(index._1, index._2, q, "embedding", "vec_id", Dim, M, k)
 
   private def rows(df: DataFrame): Seq[(Long, Long, Long, Double)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq.sorted
@@ -63,32 +60,6 @@ class PqIndexSpec extends AnyFunSuite with SparkTestBase {
   private def isLocal(df: DataFrame) = DriverRows.local(df).isDefined
   private def hasJoin(df: DataFrame) =
     df.queryExecution.analyzed.find(_.isInstanceOf[Join]).isDefined
-
-  /** Jobs `body` starts: their tags and descriptions. */
-  private def jobsOf[T](body: => T): (T, Seq[(Set[String], String)]) = {
-    val sc = spark.sparkContext
-    val group = s"pq-index-${java.util.UUID.randomUUID}"
-    val seen = mutable.ArrayBuffer[(Set[String], String)]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val p = e.properties
-        if (p != null && p.getProperty("spark.jobGroup.id") == group) seen.synchronized {
-          seen += ((Option(p.getProperty("spark.job.tags")).toSet.flatMap((t: String) =>
-            t.split(",").toSet), p.getProperty("spark.job.description")))
-        }
-      }
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "caller step")
-    try {
-      val out = body
-      ListenerBusAccess.drain(sc)
-      (out, seen.synchronized(seen.toList))
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   test("a query on a loaded small index with a local query starts no job") {
     val (codes, cents) = index
@@ -114,15 +85,12 @@ class PqIndexSpec extends AnyFunSuite with SparkTestBase {
       ("k of 0", Seq(vectors(4)), 0, 0L),
       ("an empty query frame", Seq.empty, 5, 0L))
     for ((name, qs, k, want) <- cases) {
-      val driver = topK(frame(spark, qs), k, Long.MaxValue)
-      val dist = topK(frame(spark, qs), k, 0L)
-      assert(isLocal(driver) && hasJoin(dist) && !hasJoin(driver), name)
-      assert(driver.schema == dist.schema, s"$name: ${driver.schema} vs ${dist.schema}")
-      assert(rows(driver) == rows(dist), name)
+      val (driver, dist) = TierLaws.holds(name)(topK(frame(spark, qs), k))
+      assert(hasJoin(dist) && !hasJoin(driver), name)
       assert(rows(driver).size == want, name)
     }
     // Tied codes: the planted copies of vector 5 rank by id after it.
-    val tied = rows(topK(frame(spark, Seq(vectors(1))), n.toInt, Long.MaxValue))
+    val tied = rows(topK(frame(spark, Seq(vectors(1))), n.toInt))
       .filter(r => r._2 == 5L || r._2 >= 60L)
     assert(tied.map(_._2) == Seq(5L, 60L, 61L, 62L, 63L) &&
       tied.map(_._3).sliding(2).forall(p => p(1) == p(0) + 1) && tied.map(_._4).distinct.size == 1)
@@ -131,8 +99,8 @@ class PqIndexSpec extends AnyFunSuite with SparkTestBase {
   test("the driver tier serves queries x codes up to the ceiling, the distributed plan beyond") {
     val n = vectors.size.toLong
     val q = frame(spark, vectors.slice(10, 13))
-    val at = topK(q, 5, 3 * n)
-    val over = topK(q, 5, 3 * n - 1)
+    val at = DriverRows.ceilingsAt(3 * n)(topK(q, 5))
+    val over = DriverRows.ceilingsAt(3 * n - 1)(topK(q, 5))
     assert(isLocal(at) && !hasJoin(at))
     assert(!isLocal(over) && hasJoin(over))
     assert(rows(at) == rows(over) && at.schema == over.schema)
@@ -147,8 +115,8 @@ class PqIndexSpec extends AnyFunSuite with SparkTestBase {
       Dim, M, 4))
     assert(isLocal(got) && jobs.size == 1, s"$jobs")
     assert(jobs.forall { case (tags, desc) =>
-      tags.contains("graft:pq:collect_queries") && desc == "caller step" }, s"$jobs")
-    assert(rows(got) == rows(topK(q, 4, 0L)))
+      tags.contains("graft:pq:collect_queries") && desc == SparkTestBase.CallerStep }, s"$jobs")
+    assert(rows(got) == rows(DriverRows.ceilingsAt(-1L)(topK(q, 4))))
     val withNull = spark.createDataFrame(Seq(Row(3L, Seq(0.5f, null) ++ Seq.fill(Dim - 2)(0.1f)),
       Row(4L, vectors(4)._2)).asJava, StructType(Seq(StructField("vec_id", LongType),
       StructField("embedding", ArrayType(FloatType, containsNull = true)))))
@@ -157,7 +125,8 @@ class PqIndexSpec extends AnyFunSuite with SparkTestBase {
     // Freshly trained codes are not driver-local: pqTopK keeps the distributed plan.
     val trained = Pq.pqTopK(frame(spark, vectors), frame(spark, vectors.take(2)), "embedding",
       "vec_id", Dim, M, Ksub, iters = 3, k = 4)
-    assert(hasJoin(trained) && rows(trained) == rows(topK(frame(spark, vectors.take(2)), 4, 0L)))
+    assert(hasJoin(trained) &&
+      rows(trained) == rows(DriverRows.ceilingsAt(-1L)(topK(frame(spark, vectors.take(2)), 4))))
   }
 
   test("a dim / m that does not match the codebook is rejected") {
@@ -181,7 +150,7 @@ class PqIndexSpec extends AnyFunSuite with SparkTestBase {
       val labels = steps.map(s => s"graft:pq:$s")
       assert(jobs.nonEmpty && jobs.forall(j => j._1.exists(labels)), s"$what: $jobs")
       assert(labels.forall(l => jobs.exists(_._1.contains(l))), s"$what: $jobs")
-      assert(jobs.forall(_._2 == "caller step"), s"$what: $jobs")
+      assert(jobs.forall(_._2 == SparkTestBase.CallerStep), s"$what: $jobs")
     }
     // The codebook is read with its known schema: its collect, no inference job.
     assert(load.count(_._1.contains("graft:pq:load_codebook")) == 1, s"$load")

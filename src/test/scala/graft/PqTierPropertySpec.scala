@@ -5,17 +5,15 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.types._
-import org.scalacheck.{Gen, Prop, Test}
-import org.scalacheck.rng.Seed
-import org.scalacheck.util.Pretty
+import org.scalacheck.{Gen, Prop}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{DriverRows, PackedCodes, Pq}
 
 /** The packed driver tier of `Pq.pqTopKFromIndex` equals the distributed
-  * tier (forced by a pair ceiling of 0) on random indexes, checked with
-  * scalacheck's own `Prop.forAll` / `Test.check`: rows, ranks,
-  * `score_adc` and schema.
+  * tier on random indexes, checked with scalacheck's own `Prop.forAll`
+  * through [[TierLaws]]: rows, ranks, the bits of `score_adc` and
+  * schema.
   *
   * The generated cases reach what the packing and the per-query ADC
   * table must get right: m of 1, 2, 4 or 8; up to 256 cells per subspace
@@ -78,28 +76,17 @@ class PqTierPropertySpec extends AnyFunSuite with SparkTestBase {
       StructField("embedding", ArrayType(elem, containsNull = false)))))
   }
 
-  private def rows(df: DataFrame): Seq[(Long, Long, Long, Double)] =
-    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq.sorted
-
   private def hasJoin(df: DataFrame) =
     df.queryExecution.analyzed.find(_.isInstanceOf[Join]).isDefined
 
   test("the packed driver tier equals the distributed tier on random indexes and queries") {
-    val prop = Prop.forAll(genCase) { c =>
+    TierLaws.check(Prop.forAll(genCase) { c =>
       val held = Pq.holdCodes(spark.createDataFrame(
         c.codes.map { case (id, cs) => Row(id, cs) }.asJava, codesSchema)).get
-      def topK(maxPairs: Long) = Pq.pqTopKFromIndexWith(held, c.cents, queries(c), "embedding",
-        "vec_id", c.m * c.subLen, c.m, c.k, maxPairs)
-      val (driver, dist) = (topK(Long.MaxValue), topK(0L))
-      val (got, want) = (rows(driver), rows(dist))
+      val (driver, dist) = TierLaws.tiers(Pq.pqTopKFromIndex(held, c.cents, queries(c),
+        "embedding", "vec_id", c.m * c.subLen, c.m, c.k))
       Prop(DriverRows.local(held).exists(_.data.isInstanceOf[PackedCodes])) :| "packed" &&
-        Prop(DriverRows.local(driver).isDefined && hasJoin(dist) && !hasJoin(driver)) :| "tiers" &&
-        Prop(driver.schema == dist.schema) :| s"schema ${driver.schema} vs ${dist.schema}" &&
-        Prop(got == want) :| s"rows $got vs $want"
-    }
-    val params = Test.Parameters.default.withMinSuccessfulTests(40)
-      .withInitialSeed(Seed(20261019L)).withWorkers(1)
-    val result = Test.check(params, prop)
-    assert(result.passed, Pretty.pretty(result, Pretty.Params(2)))
+        TierLaws.law(driver, dist) && Prop(hasJoin(dist) && !hasJoin(driver)) :| "joins"
+    }, seed = 20261019L)
   }
 }

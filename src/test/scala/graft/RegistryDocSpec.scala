@@ -12,10 +12,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * modes (missing comment, comment absorbed by a neighbor) loud at
   * test time instead of judge time. The same source scan keeps the
   * engine's environment reads to the allowlisted deployment settings,
-  * and keeps thread pools and directory renames in their one owner
-  * each.
+  * keeps thread pools and directory renames in their one owner each,
+  * and keeps driver-tier ceilings out of operator signatures.
   */
 class RegistryDocSpec extends AnyFunSuite {
+
+  private lazy val mainSources = {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector
+    finally walk.close()
+  }
 
   test("every Queries.scala Entry has its own doc comment") {
     val src = java.nio.file.Files.readString(
@@ -45,12 +51,7 @@ class RegistryDocSpec extends AnyFunSuite {
     // Any read; the name is the string literal of the call, if there is one.
     val readRx = ("""(?:sys\.(?:env|props)|System\.(?:getenv|getProperty))""" +
       """(?:\s*\.\s*(?:getOrElse|get|contains|apply))?(?:\s*\(\s*"([^"]*)")?""").r
-    val files = {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
-      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector
-      finally walk.close()
-    }
-    val reads = files.flatMap { f =>
+    val reads = mainSources.flatMap { f =>
       java.nio.file.Files.readString(f).linesIterator.zipWithIndex.flatMap { case (ln, i) =>
         readRx.findAllMatchIn(ln).map(m =>
           (Option(m.group(1)).getOrElse("<no literal name>"), s"$f:${i + 1}"))
@@ -69,17 +70,37 @@ class RegistryDocSpec extends AnyFunSuite {
     // would skip both.
     val owners = Set("Jobs.scala", "StagedSwap.scala")
     val rx = """scala\.concurrent|ExecutionContext|Executors\.new|\.rename\(""".r
-    val files = {
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
-      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toVector
-      finally walk.close()
-    }
-    val copies = files.filterNot(f => owners(f.getFileName.toString)).flatMap { f =>
+    val copies = mainSources.filterNot(f => owners(f.getFileName.toString)).flatMap { f =>
       java.nio.file.Files.readString(f).linesIterator.zipWithIndex.collect {
         case (ln, i) if rx.findFirstIn(ln).isDefined => s"$f:${i + 1}: ${ln.trim}"
       }
     }
     assert(copies.isEmpty, s"use graft.Jobs.overlap / graft.sinks.StagedSwap instead:\n${copies.mkString("\n")}")
+  }
+
+  test("no def named *With takes a driver-tier ceiling parameter") {
+    // A tier reads its ceiling through DriverRows.ceiling, and a spec
+    // forces a tier with DriverRows.ceilingsAt; an overload taking the
+    // ceiling as a parameter would bring a second test seam back.
+    val ceilingParam = """\b(?:ceiling|max\w*|localMaxEdges)\s*:\s*Long\b""".r
+    // The signature from `i` to the first `=` or `{` outside brackets.
+    def signature(src: String, i: Int): String = {
+      var (j, depth) = (i, 0)
+      while (j < src.length && (depth > 0 || (src(j) != '=' && src(j) != '{'))) {
+        if (src(j) == '(' || src(j) == '[') depth += 1
+        if (src(j) == ')' || src(j) == ']') depth -= 1
+        j += 1
+      }
+      src.substring(i, j)
+    }
+    val seams = mainSources.flatMap { f =>
+      val src = java.nio.file.Files.readString(f)
+      """\bdef\s+(\w+With)\b""".r.findAllMatchIn(src)
+        .filter(m => ceilingParam.findFirstIn(signature(src, m.end)).isDefined)
+        .map(m => s"$f: ${m.group(1)}")
+    }
+    assert(seams.isEmpty, "ceiling parameters (use DriverRows.ceilingsAt in the spec):\n" +
+      seams.mkString("\n"))
   }
 
   test("gate names are unique") {

@@ -222,29 +222,7 @@ class StreamSyncSpec extends AnyFunSuite with SparkTestBase {
     } finally q.stop()
   }
 
-  test("startDedupedIngest drops corpus dups AND cross-trigger dups") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = (1 to 30).map(i => s"w$i").mkString(" ")
-    val fresh1 = "completely new content about topic one arriving now"
-    val fresh2 = "another novel document on a second subject entirely"
-    val corpus = Seq((100L, base)).toDF("doc_id", "text")
-    val in = MemoryStream[(Long, String)]
-    val docs = in.toDF().toDF("doc_id", "text")
-    val out = java.nio.file.Files.createTempDirectory("ingest").toString + "/docs"
-    val ckpt = java.nio.file.Files.createTempDirectory("ingest-ckpt").toString
-    val q = StreamSync.startDedupedIngest(docs, corpus, "text", "doc_id", out, ckpt)
-    try {
-      in.addData((1L, base), (2L, fresh1))          // 1 dups the corpus
-      q.processAllAvailable()
-      in.addData((3L, fresh1), (4L, fresh2))        // 3 dups ALREADY-INGESTED 2
-      q.processAllAvailable()
-      val kept = spark.read.parquet(out).select("doc_id").as[Long].collect().toSet
-      assert(kept == Set(2L, 4L))
-    } finally q.stop()
-  }
-
-  test("maintenance resources stay bounded: state scales with keys not batches, staging cleaned, ingest index compacts") {
+  test("maintenance resources stay bounded: state scales with keys not batches, staging cleaned") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.ChangeLog
@@ -317,43 +295,6 @@ class StreamSyncSpec extends AnyFunSuite with SparkTestBase {
           s"scd2 state must hold one version per event (${2 * b}), batch $b")
       }
     } finally scdQ.stop()
-
-    // --- deduped ingest: the output directory IS the growing dedup
-    // index. Rows stay bounded by NOVEL docs no matter how many
-    // duplicate-bearing triggers arrive; per-trigger appends fragment
-    // the index into many small files, and FileSink.compact restores it
-    // (same rows, fewer files) with dedup still correct afterwards.
-    val novel = Seq(
-      "completely new content about topic one arriving now",
-      "another novel document on a second subject entirely",
-      "a third fresh text with its own distinct vocabulary")
-    val ingRoot = Files.createTempDirectory("graft-bound-ingest")
-    val out = ingRoot.resolve("docs").toString
-    val ingCkpt = ingRoot.resolve("ckpt").toString
-    val corpus = Seq((100L, (1 to 30).map(i => s"w$i").mkString(" ")))
-      .toDF("doc_id", "text")
-    val ingIn = MemoryStream[(Long, String)]
-    val ingQ = StreamSync.startDedupedIngest(
-      ingIn.toDF().toDF("doc_id", "text"), corpus, "text", "doc_id", out, ingCkpt)
-    try {
-      for (b <- 1 to 4) { // every trigger resends ALL novel docs
-        ingIn.addData(novel.zipWithIndex.map { case (t, i) =>
-          (b * 10L + i, t) }: _*)
-        ingQ.processAllAvailable()
-        // only the first trigger's copies land; later dups are dropped
-        assert(spark.read.parquet(out).count() == novel.size.toLong,
-          s"ingest index grew past the novel set after trigger $b")
-      }
-      val before = dataFiles(out).size
-      val (nBefore, nAfter) = graft.sinks.FileSink.compact(spark, out)
-      assert(nBefore == before && nAfter < nBefore,
-        s"compact must shrink the fragmented index ($nBefore -> $nAfter)")
-      assert(spark.read.parquet(out).count() == novel.size.toLong)
-      // dedup still holds against the COMPACTED index
-      ingIn.addData((99L, novel.head))
-      ingQ.processAllAvailable()
-      assert(spark.read.parquet(out).count() == novel.size.toLong)
-    } finally ingQ.stop()
   }
 
   test("streamingIntervalJoin enriches facts with in-window dims only") {
