@@ -106,30 +106,6 @@ object Engine {
     SyncResult(hashed(held.getOrElse(df0)), watermark)
   }
 
-  /** CDC with user-supplied SQL: the reference's `cdc` sync type with
-    * `use_custom_sql` set (export.py:145–153). The watermark picks
-    * `initial_query.sql` vs `recurring_query.sql`, the end anchor is the
-    * caller-provided consistent snapshot time (latest commit on first
-    * sync, "now" after — export.py:141–144), and the file's
-    * `:start_timestamp`/`:end_timestamp` named params are bound exactly
-    * like the reference's `spark.sql(query, args)`. Called by
-    * `FileSinkSpec`'s custom-SQL case, which checks both query files and
-    * their bound parameters.
-    */
-  def runCdcCustomSql(spark: SparkSession, queriesBaseDir: String,
-                      project: String, catalog: String, schema: String,
-                      table: String, timeCutoffMs: Long, endMs: Long,
-                      hash: Option[HashSpec] = None,
-                      sink: Option[SinkSpec] = None): SyncResult = {
-    val path = sources.SqlSource.queryPath(
-      queriesBaseDir, project, catalog, schema, table, timeCutoffMs)
-    val (text, params) = sources.SqlSource.load(path, timeCutoffMs, endMs)
-    val df0 = sources.SqlSource.run(spark, text, params)
-    val out = hash.fold(df0)(h => RowHash.withHashColumn(df0, h.column, h.ignoreColumns))
-    sink.foreach(FileSink.write(out, _))
-    SyncResult(out, endMs)
-  }
-
   /** Chunked historical BACKFILL: partition `[startMs, endMs)` into
     * `chunkMs` ranges and plan one time-based sync per chunk — the
     * orchestration a first export of a years-deep table needs (one
@@ -169,8 +145,8 @@ object Engine {
     * shuffle parallelism sized to the cores (not the 200 default).
     *
     * A checkpoint dir is always wired (SPARK_GRAFT_CHECKPOINT_DIR, else a
-    * scratch dir) so iterative operators ([[graft.operators.Dedup
-    * .connectedComponents]]) take the RELIABLE `checkpoint()` branch:
+    * scratch dir) so a reliable [[Jobs.pin]] (README "Eager jobs") takes
+    * the RELIABLE `checkpoint()` branch:
     * `localCheckpoint` stores iteration state only in executor block
     * managers, so on a real cluster one lost executor kills the job with
     * an unrecoverable missing-block error mid-loop — at 100 TB the

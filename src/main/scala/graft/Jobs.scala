@@ -8,17 +8,22 @@ import scala.collection.mutable
 import org.apache.spark.SparkContext
 import org.apache.spark.graft.ListenerBusAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd, SparkListenerTaskStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.storage.StorageLevel
 
-/** Concurrent submission of independent Spark jobs from the driver.
+/** The jobs the engine starts from the driver, outside a caller's action.
   *
   * Independent writes (BM25 index relations, replay staging, the sides
   * of an interval join, partition leaves of a compaction) run as
   * concurrent jobs so one job's tasks back-fill another's straggler
   * tail. Every such site goes through [[overlap]], which owns the
   * thread pool, the job labels and the failure protocol.
+  *
+  * Every eager materialization goes through [[pin]] or [[cache]], and
+  * every release through [[release]] or [[cached]] (README "Eager
+  * jobs").
   */
 object Jobs {
 
@@ -89,6 +94,45 @@ object Jobs {
       sc.addJobTag(label)
       try body finally sc.removeJobTag(label)
     }
+  }
+
+  /** `df` materialized now, in one job tagged `graft:<op>:<step>`: a
+    * `localCheckpoint` barrier, so later plans read its blocks instead
+    * of re-running its subtree, and Catalyst cannot push a predicate or
+    * collapse a projection across it. `df` is built under the same tag,
+    * so a job its construction starts carries it too. With `reliable`,
+    * a session that has a checkpoint dir writes a reliable
+    * `checkpoint()` there instead: a lost executor then loses no round
+    * of an iterative loop.
+    */
+  def pin(df: => DataFrame, op: String, step: String, reliable: Boolean = false): DataFrame =
+    labelled(SparkSession.active, op, step) {
+      val d = df
+      if (reliable && d.sparkSession.sparkContext.getCheckpointDir.isDefined) d.checkpoint()
+      else d.localCheckpoint()
+    }
+
+  /** `df` registered for a lazy columnar cache at `MEMORY_AND_DISK`: the
+    * first action that reads it fills the cache, later ones read it.
+    */
+  def cache(df: DataFrame): DataFrame = df.persist(StorageLevel.MEMORY_AND_DISK)
+
+  /** Free a [[pin]]'s blocks or a [[cache]] entry, without blocking. The
+    * frame's schema stays usable; a plan that still reads a freed pin
+    * fails, and one that read a freed cache recomputes it. Freeing a
+    * superseded pin at once, not when the ContextCleaner notices, keeps
+    * a long session's block manager from evicting what later queries
+    * read (the round-2 warm-slower-than-cold bench inversion).
+    */
+  def release(df: DataFrame): Unit = df.queryExecution.analyzed match {
+    case l: LogicalRDD => l.rdd.unpersist(blocking = false)
+    case _ => df.unpersist(blocking = false)
+  }
+
+  /** `body` over `df` [[cache]]d, released when `body` returns or throws. */
+  def cached[T](df: DataFrame)(body: DataFrame => T): T = {
+    val c = cache(df)
+    try body(c) finally release(c)
   }
 
   /** Run `tasks` concurrently, at most [[MaxInFlight]] at a time, on a

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.operators.{ChangeLog, RowHash}
+import graft.operators.RowHash
 import graft.sinks.{FileSink, GcsAuth, SinkSpec}
 import graft.sql.QueryBuilder
 
@@ -16,9 +16,10 @@ import graft.sql.QueryBuilder
   * non-CDC sync types execute the exact SQL string [[QueryBuilder]]
   * generates (byte-identical to the reference's generated SQL) against
   * the registered view, so the CLI path and the golden-string parity
-  * layer are the same code. CDC runs through the [[ChangeLog]] emulation
-  * (no Delta in this environment) while still REPORTING the reference's
-  * CDC SQL string in the result JSON.
+  * layer are the same code. CDC runs [[Engine.runCdc]] over the
+  * [[sources.ParquetChangeLog]] emulation (no Delta in this environment)
+  * while still REPORTING the reference's CDC SQL string in the result
+  * JSON.
   *
   * Output contract (export.py:330–337): one JSON line
   * `{"query": <resolved query>, "change_capture_sync_last_commit_ms": N}`
@@ -72,16 +73,17 @@ object Main {
     syncType match {
       case "cdc" =>
         val log = Tables.load(spark, a.str("catalog"), table)
+        val src = sources.ParquetChangeLog(log,
+          a.str("cdc_key_columns").split(",").toSeq.filter(_.nonEmpty))
         val cutoff = a.lng("time_cutoff_ms")
-        // S5 — consistent "now" anchor: the orchestrator-supplied
-        // --now_ms when given, else the current-timestamp probe
-        // (export.py:63–67, 144).
-        val endMs =
-          if (cutoff == 0) ChangeLog.latestCommitMs(log)
-          else if (a.lng("now_ms") > 0) a.lng("now_ms")
-          else spark.sql("SELECT current_timestamp()").head()
-            .getInstant(0).toEpochMilli
+        // S5 — consistent "now" anchor for an incremental run: the
+        // orchestrator-supplied --now_ms when given, else the
+        // current-timestamp probe (export.py:63–67, 144). A first sync
+        // anchors to the latest commit instead.
+        def now = if (a.lng("now_ms") > 0) a.lng("now_ms")
+          else spark.sql("SELECT current_timestamp()").head().getInstant(0).toEpochMilli
         if (a.has("use_custom_sql")) {
+          val endMs = if (cutoff == 0) src.latestCommitMs() else now
           Tables.registerAll(spark, a.str("catalog"))
           val path = sources.SqlSource.queryPath(
             a.str("queries_base_dir", "/Workspace/External/mixpanel"),
@@ -90,16 +92,12 @@ object Main {
           val (text, params) = sources.SqlSource.load(path, cutoff, endMs)
           BuildResult(sources.SqlSource.run(spark, text, params), text, params, endMs)
         } else {
-          val df =
-            if (cutoff == 0)
-              ChangeLog.snapshotAsOf(log,
-                a.str("cdc_key_columns").split(",").toSeq.filter(_.nonEmpty), endMs)
-            else ChangeLog.tableChanges(log, cutoff + 1, endMs)
+          val res = Engine.runCdc(src, cutoff, if (cutoff == 0) 0L else now, None, None)
           val ref = s"${a.str("catalog_name", a.str("catalog"))}.${a.str("schema_name")}.$table"
           val query =
-            if (cutoff == 0) QueryBuilder.cdcFirstSync(ref, endMs)
-            else QueryBuilder.cdcIncremental(ref, cutoff, endMs)
-          BuildResult(df, query, Map.empty, endMs)
+            if (cutoff == 0) QueryBuilder.cdcFirstSync(ref, res.newWatermarkMs)
+            else QueryBuilder.cdcIncremental(ref, cutoff, res.newWatermarkMs)
+          BuildResult(res.df, query, Map.empty, res.newWatermarkMs)
         }
       case other =>
         val src = Tables.load(spark, a.str("catalog"), table)

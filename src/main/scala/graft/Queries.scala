@@ -1080,7 +1080,7 @@ object Queries {
         // each recompute the kmeans assignment — the q_ann_jl barrier
         // pattern; at scale this is "write the cell-partitioned index,
         // then query it".
-        val corpus = emb.join(cells, "vec_id").localCheckpoint()
+        val corpus = Jobs.pin(emb.join(cells, "vec_id"), "ann_ivfpq", "corpus")
         Pq.ivfPqTopK(corpus, corpus.filter(col("vec_id") < 10),
           "embedding", "vec_id", "cell",
           dim = 64, m = 8, ksub = 16, iters = 2, k = 5, nProbe = 3)
@@ -1258,9 +1258,8 @@ object Queries {
         // measured 1.34 s vs 0.46 s warm at sf0.1. At scale this is
         // exactly "materialize the compressed vectors, then search
         // them" — the point of compressing at all.
-        val proj = Embeddings.randProjectVec(t(s, d, "embeddings"),
-          "embedding", "vec_id", srcDim = 64, outDim = 24, as = "proj")
-          .localCheckpoint()
+        val proj = Jobs.pin(Embeddings.randProjectVec(t(s, d, "embeddings"),
+          "embedding", "vec_id", srcDim = 64, outDim = 24, as = "proj"), "ann_jl", "projection")
         Similarity.bruteForceTopK(proj, proj.filter(col("vec_id") < 10),
           "proj", "vec_id", k = 5)
       },

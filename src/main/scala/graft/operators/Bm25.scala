@@ -180,33 +180,32 @@ object Bm25 {
     // persisted relations are batch-sized; mode(append) forbids the
     // buildIndex read-back trick (the directory already holds other
     // segments), so spill-safe persistence is the reuse mechanism here.
-    val toks = Dedup.rebalance(newDocs)
+    // Both caches are released when the append returns or throws.
+    graft.Jobs.cached(Dedup.rebalance(newDocs)
       .select(col(idCol).as("doc_id"),
-        TextAnalysis.tokens(lower(col(textCol))).as("_w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Materialize the token cache with the (cheap) doclen write first,
-    // then OVERLAP the remaining writes (r17, guide §2.6): the postings
-    // write, termdf, and stats all read persisted relations — postings
-    // segment + termdf share the persisted postings, stats reads the
-    // persisted toks — so the pairs below are independent jobs whose
-    // tasks back-fill each other's straggler tails.
-    toks.select(col("doc_id"), size(col("_w")).cast("long").as("dl"))
-      .write.mode("append").parquet(s"$dir/doclen")
-    val postings = toks
-      .select(col("doc_id"), explode(col("_w")).as("term"))
-      .groupBy(col("term"), col("doc_id"))
-      .agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.Jobs.overlap(spark, "bm25", "append_write")(
-      () => postings.repartitionByRange(col("term"))
-        .sortWithinPartitions(col("term"), col("doc_id"))
-        .write.mode("append").parquet(s"$dir/postings"),
-      () => spark_stats(toks).write.mode("append").parquet(s"$dir/stats"))
-    postings.groupBy(col("term"))
-      .agg(count(lit(1)).as("df"))
-      .write.mode("append").parquet(s"$dir/termdf")
-    postings.unpersist(blocking = false)
-    toks.unpersist(blocking = false)
+        TextAnalysis.tokens(lower(col(textCol))).as("_w"))) { toks =>
+      // Materialize the token cache with the (cheap) doclen write first,
+      // then OVERLAP the remaining writes (r17, guide §2.6): the postings
+      // write, termdf, and stats all read persisted relations — postings
+      // segment + termdf share the persisted postings, stats reads the
+      // persisted toks — so the pairs below are independent jobs whose
+      // tasks back-fill each other's straggler tails.
+      toks.select(col("doc_id"), size(col("_w")).cast("long").as("dl"))
+        .write.mode("append").parquet(s"$dir/doclen")
+      graft.Jobs.cached(toks
+        .select(col("doc_id"), explode(col("_w")).as("term"))
+        .groupBy(col("term"), col("doc_id"))
+        .agg(count(lit(1)).as("tf"))) { postings =>
+        graft.Jobs.overlap(spark, "bm25", "append_write")(
+          () => postings.repartitionByRange(col("term"))
+            .sortWithinPartitions(col("term"), col("doc_id"))
+            .write.mode("append").parquet(s"$dir/postings"),
+          () => spark_stats(toks).write.mode("append").parquet(s"$dir/stats"))
+        postings.groupBy(col("term"))
+          .agg(count(lit(1)).as("df"))
+          .write.mode("append").parquet(s"$dir/termdf")
+      }
+    }
   }
 
   /** Score `terms` against a [[buildIndex]] directory. Identical rows

@@ -87,7 +87,7 @@ object Bpe {
   def learnMerges(docs: DataFrame, textCol: String, k: Int,
                   maxWordLen: Int): DataFrame = {
     val (merges, vocab) = learnMergesWithVocab(docs, textCol, k, maxWordLen)
-    vocab.unpersist(blocking = false)
+    graft.Jobs.release(vocab)
     merges
   }
 
@@ -105,8 +105,7 @@ object Bpe {
       docs: DataFrame, textCol: String, k: Int,
       maxWordLen: Int): (DataFrame, DataFrame) = {
     val spark = docs.sparkSession
-    var vocab = vocabOf(docs, textCol, maxWordLen)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    var vocab = graft.Jobs.cache(vocabOf(docs, textCol, maxWordLen))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, String, Long)]
     for (rank <- 1 to k) {
       val top = pairCounts(vocab.filter(col("_capped")))
@@ -115,12 +114,11 @@ object Bpe {
       if (top.nonEmpty) {
         val (l, r, cnt) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += ((rank.toLong, l, r, l + r, cnt))
-        val next = vocab
+        val next = graft.Jobs.cache(vocab
           .select(col("word"), col("freq"), col("_capped"),
-            applyMerge(col("syms"), l, r).as("syms"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            applyMerge(col("syms"), l, r).as("syms")))
         next.count() // materialize before freeing the parent
-        vocab.unpersist(blocking = false)
+        graft.Jobs.release(vocab)
         vocab = next
       }
     }

@@ -118,13 +118,12 @@ object ChunkDedup {
     val withChunks = Dedup.rebalance(docs)
       .withColumn("_w", TextAnalysis.tokens(col(textCol)))
       .withColumn("_chunks", chunkArray(chunkTokens))
-    val boilerKeys = withChunks
+    val boilerKeys = graft.Jobs.pin(withChunks
       .select(col(idCol), explode(col("_chunks")).as("_chunk"))
       .groupBy(col("_chunk"))
       .agg(countDistinct(col(idCol)).as("_docs"))
       .filter(col("_docs") >= minDocs)
-      .select(col("_chunk"))
-      .localCheckpoint()
+      .select(col("_chunk")), "strip_boilerplate", "keys")
     if (boilerKeys.count() <= broadcastMaxChunks) {
       val boiler = boilerKeys.agg(collect_set(col("_chunk")).as("_bset"))
       val kept = filter(col("_chunks"), c => !array_contains(col("_bset"), c))

@@ -105,7 +105,7 @@ object Curriculum {
     */
   def releaseBudgetCache(): Unit = {
     val prev = lastBudgetCache.getAndSet(null)
-    if (prev != null) prev.unpersist(blocking = false)
+    if (prev != null) graft.Jobs.release(prev)
   }
 
   /** TOKEN-BUDGET data selection: keep the highest-quality documents
@@ -164,13 +164,12 @@ object Curriculum {
     // → 19–21 s every later pass at sf0.1, reproducible, and masked by
     // the bench's min-of-2 protocol until the per-pass trace existed).
     releaseBudgetCache()
-    val scored = docs
+    val scored = graft.Jobs.cache(docs
       .withColumn("_w", TextAnalysis.tokens(col(textCol)))
       .select(col(idCol),
         QualityFilters.classifierScoreOf(col("_w")).as("q_score"),
         TextAnalysis.tokenCountOf(col("_w")).as("n_tokens"))
-      .withColumn("_b", floor(col("q_score") * BudgetGrid).cast("long"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("_b", floor(col("q_score") * BudgetGrid).cast("long")))
     lastBudgetCache.set(scored)
     val bw = Window.orderBy(col("_b").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -11,6 +11,7 @@ import org.apache.spark.sql.graft.{JaccardSortedLongs, MinHashSig, ShingleFinger
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.Jobs
 import graft.functions.TextAnalysis
 
 /** Deduplication operators for LLM-data pipelines (SURVEY §7.5): exact,
@@ -479,12 +480,12 @@ object Dedup {
                                bands: Int = 16, rowsPerBand: Int = 4,
                                maxBucketSize: Int = DefaultMaxBucketSize): (DataFrame, Boolean) = {
     val (docs, rawPrefixes) = prefixPostings(df, textCol, idCol, n, threshold)
-    val prefixes = rawPrefixes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val prefixes = Jobs.cache(rawPrefixes)
     val (nDocs, cand) = statsOf(prefixes)
     if (nDocs == 0 || cand <= maxCandidatesPerDoc * nDocs)
       (prefixExactJoin(docs, prefixes, threshold), true)
     else {
-      prefixes.unpersist()
+      Jobs.release(prefixes)
       System.err.println(
         f"[dedup] prefixJaccardPairsAuto: measured $cand%.0f candidate pairs for $nDocs docs " +
         f"(> $maxCandidatesPerDoc%.0f/doc) — closed-vocabulary regime, routing to " +
@@ -1188,29 +1189,6 @@ object Dedup {
       .select("id_a", "id_b", "cosine")
   }
 
-  /** Cut iterative lineage: reliable `checkpoint()` when the session has
-    * a checkpoint dir configured (`sparkContext.setCheckpointDir` — the
-    * fault-tolerant choice on a real cluster, where a lost executor
-    * otherwise recomputes the whole iteration history), `localCheckpoint`
-    * otherwise (fine on local[n]).
-    */
-  private def cutLineage(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-    else df.localCheckpoint()
-
-  /** The block-manager-persisted RDD behind a checkpointed DataFrame
-    * (its plan is a single `LogicalRDD` leaf), so iteration state can be
-    * freed the moment it is superseded instead of lingering until the
-    * ContextCleaner notices — across a many-query session the leaked
-    * blocks otherwise pressure the block manager into evictions that
-    * slow every LATER query (the round-2 warm-slower-than-cold bench
-    * inversion).
-    */
-  private def checkpointRdd(df: DataFrame) =
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }
-
   /** Connected components over an undirected pair list via alternating
     * large-star / small-star (Kiveris et al., "Connected Components in
     * MapReduce and Beyond", SoCC'14): each round is two group-by-min +
@@ -1230,13 +1208,18 @@ object Dedup {
     * counted first, then collected when it fits (README "Driver tiers").
     */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 50): DataFrame = {
+    // Every round is a reliable pin (README "Eager jobs"), so a lost
+    // executor loses no round of the loop.
+    def pin(df: DataFrame, step: String): DataFrame =
+      Jobs.pin(df, "connected_components", step, reliable = true)
     // Convergence = edge-set fixpoint, detected by (count, xor of row
     // hashes) — one tiny aggregate per round, no full-set comparison.
     // bit_xor is order-independent and cannot overflow (ANSI mode
     // rejects a sum of hashes); edges are distinct, so xor-cancelling
     // duplicates cannot occur.
-    def sigOf(df: DataFrame): (Long, Option[Long]) = {
-      val row = df.agg(count(lit(1)), bit_xor(xxhash64(col("src"), col("dst")))).head()
+    def sigOf(df: DataFrame, step: String): (Long, Option[Long]) = {
+      val row = Jobs.labelled(df.sparkSession, "connected_components", step)(
+        df.agg(count(lit(1)), bit_xor(xxhash64(col("src"), col("dst")))).head())
       (row.getLong(0), if (row.isNullAt(1)) None else Some(row.getLong(1)))
     }
     // The local tier's labels ([[LocalGraph.components]]), or the empty
@@ -1254,12 +1237,11 @@ object Dedup {
         LocalGraph.collect(pairs.select(col("id_a"), col("id_b")), "connected_components")
       if (held.isDefined) return localLabels(held.get)
     }
-    var edges = cutLineage(
-      pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .filter(col("src") =!= col("dst")).distinct())
-    var prevSig = sigOf(edges)
+    var edges = pin(pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .filter(col("src") =!= col("dst")).distinct(), "edges")
+    var prevSig = sigOf(edges, "edges")
     if (prevSig._1 == 0L) { // no edges at all — nothing to cluster
-      checkpointRdd(edges).foreach(_.unpersist(false))
+      Jobs.release(edges)
       return localLabels(Array.empty)
     }
     // Driver-local tier ([[LocalGraph]]; the count is already on hand
@@ -1267,7 +1249,7 @@ object Dedup {
     // the IDENTICAL (id, component-min) label set in one collect.
     val local = LocalGraph.collect(edges, "connected_components", Some(prevSig._1))
     if (local.isDefined) {
-      checkpointRdd(edges).foreach(_.unpersist(false))
+      Jobs.release(edges)
       return localLabels(local.get)
     }
     var converged = false
@@ -1289,11 +1271,9 @@ object Dedup {
         .filter(col("src") =!= col("dst"))
         .union(mins2.select(col("src"), col("_m").as("dst")))
         .distinct()
-      val next = cutLineage(ss)
-      val sig = sigOf(next)
-      // `next` is materialized (checkpoints are eager), so the previous
-      // round's blocks are now unreachable from any plan — free them.
-      checkpointRdd(edges).foreach(_.unpersist(false))
+      val next = pin(ss, "round")
+      val sig = sigOf(next, "round")
+      Jobs.release(edges)
       edges = next
       converged = sig == prevSig
       prevSig = sig
@@ -1309,12 +1289,10 @@ object Dedup {
     val roots = edges.select(col("dst").as("id")).distinct()
       .join(nonRoots.select(col("id")), Seq("id"), "left_anti")
       .withColumn("lbl", col("id"))
-    // Materialize the labels so the final edge checkpoint can be freed
-    // too — what escapes this method is ONE compact (id, lbl) RDD (one
-    // row per paired node), handed to the ContextCleaner when the
-    // caller's plan is collected.
-    val labels = cutLineage(nonRoots.union(roots))
-    checkpointRdd(edges).foreach(_.unpersist(false))
+    // Pin the labels so the final edges can be freed too: what escapes
+    // this method is ONE compact (id, lbl) pin, one row per paired node.
+    val labels = pin(nonRoots.union(roots), "labels")
+    Jobs.release(edges)
     labels
   }
 

@@ -90,13 +90,12 @@ object Dsir {
     // disk. A doc whose target predicate is NULL counts as non-target,
     // exactly as the filter dropped it before.
     val isTgt = expr(targetPred)
-    val cnt = features(
+    val cnt = graft.Jobs.pin(features(
         d.withColumn("_is_t", coalesce(isTgt, lit(false))),
         textCol, idCol, buckets, extraCols = Seq("_is_t"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("cr"),
-        sum(when(col("_is_t"), 1L).otherwise(0L)).as("ct"))
-      .localCheckpoint()
+        sum(when(col("_is_t"), 1L).otherwise(0L)).as("ct")), "importance_weights", "buckets")
     val rawTot = cnt.select(coalesce(sum(col("cr")), lit(0L)).as("nr"))
     val tgtTot = cnt.select(coalesce(sum(col("ct")), lit(0L)).as("nt"))
     // Every bucket a document can produce exists in `cnt` by definition

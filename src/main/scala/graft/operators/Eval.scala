@@ -475,7 +475,8 @@ object Eval {
     val bin = least(
       floor((micro * lit(nBins.toLong)).cast("double") / 1000000.0).cast("long"),
       lit(nBins - 1L))
-    val bins = scored
+    // nBins rows; totals + per-bin terms both read it
+    val bins = graft.Jobs.pin(scored
       .select(micro.as("_p"), col(labelCol).cast("long").as("_y"), bin.as("_b"))
       .groupBy(col("_b"))
       .agg(count(lit(1)).as("_n"),
@@ -483,8 +484,7 @@ object Eval {
         sum(col("_y")).as("_sy"),
         sum((col("_p") - col("_y") * lit(1000000L)).cast("decimal(19,0)")
           * (col("_p") - col("_y") * lit(1000000L)).cast("decimal(19,0)"))
-          .as("_sq"))
-      .localCheckpoint() // nBins rows; totals + per-bin terms both read it
+          .as("_sq")), "brier_decomposition", "bins")
     val tot = bins.agg(sum(col("_n")).as("n"), sum(col("_sy")).as("_ty"),
       sum(col("_sq")).as("_tsq"))
     val nd = col("n").cast("double")
@@ -596,17 +596,17 @@ object Eval {
         count(lit(1)).as("_n"))
       .select(col("_g"),
         (col("_s").cast("double") / col("_n").cast("double")).as("_p"))
-    val resid = base.join(broadcast(pred), Seq("_g"))
+    val resid = graft.Jobs.pin(base.join(broadcast(pred), Seq("_g"))
       .select(col("_cal"),
         round(abs(col("_m").cast("double") - col("_p"))).cast("long")
           .as("_r"))
       .groupBy(col("_r"))
       .agg(count(when(col("_cal"), lit(1))).as("_cc"),
-        count(when(!col("_cal"), lit(1))).as("_ce"))
+        count(when(!col("_cal"), lit(1))).as("_ce")),
       // Barrier: the q̂ lookup and the coverage sum both derive from
       // this distinct-residual table — pin it (it is residual-
       // cardinality-sized) so the corpus join runs once.
-      .localCheckpoint()
+      "conformal_coverage", "residuals")
     val upTo = Window.orderBy(col("_r"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val whole = Window.partitionBy()

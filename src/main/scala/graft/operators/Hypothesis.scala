@@ -147,9 +147,8 @@ object Hypothesis {
     // corpus aggregate per branch where exchange reuse misses — the
     // observed table is R×C-sized, so materializing it is free and
     // pins the plan at ONE corpus scan (the Pipeline barrier pattern).
-    val obs = df.groupBy(col(rowCol).as("_r"), col(colCol).as("_c"))
-      .agg(count(lit(1)).as("_o"))
-      .localCheckpoint()
+    val obs = graft.Jobs.pin(df.groupBy(col(rowCol).as("_r"), col(colCol).as("_c"))
+      .agg(count(lit(1)).as("_o")), "chi_squared", "observed")
     val rt = obs.groupBy(col("_r")).agg(sum(col("_o")).as("_rt"))
     val ct = obs.groupBy(col("_c")).agg(sum(col("_o")).as("_ct"))
     val tot = obs.agg(sum(col("_o")).as("_n"),
@@ -500,13 +499,13 @@ object Hypothesis {
         floor(log2(col("_npre").cast("double") + lit(1.0))).cast("long")
           .as("_k"),
         col("_y"))
-    val strata = units.groupBy(col("_k"))
+    // stratum-cardinality; three consumers below
+    val strata = graft.Jobs.pin(units.groupBy(col("_k"))
       .agg(
         count(when(col("_treat"), lit(1))).as("_nt"),
         count(when(!col("_treat"), lit(1))).as("_nc"),
         sum(when(col("_treat"), d38(col("_y")))).as("_st"),
-        sum(when(!col("_treat"), d38(col("_y")))).as("_sc"))
-      .localCheckpoint() // stratum-cardinality; three consumers below
+        sum(when(!col("_treat"), d38(col("_y")))).as("_sc")), "stratified_att", "strata")
     val tot = strata.agg(
       sum(col("_nt")).as("n_treat"), sum(col("_nc")).as("n_ctrl"),
       count(lit(1)).as("n_strata"),
@@ -598,11 +597,10 @@ object Hypothesis {
     // Barrier: the bucket table (nBuckets rows) feeds both the spine
     // join and the grand total — pin it so the corpus distinct runs
     // once (the chiSquared pattern).
-    val byB = df.filter(col(unitCol).isNotNull)
+    val byB = graft.Jobs.pin(df.filter(col(unitCol).isNotNull)
       .select(col(unitCol)).distinct()
       .groupBy(Splits.bucketOf(col(unitCol), nBuckets).as("_b"))
-      .agg(count(lit(1)).as("_o"))
-      .localCheckpoint()
+      .agg(count(lit(1)).as("_o")), "srm_check", "buckets")
     val spine = df.sparkSession.range(nBuckets).select(col("id").as("_b"))
     val cells = spine.join(byB, Seq("_b"), "left")
       .select(coalesce(col("_o"), lit(0L)).as("_o"))

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Jobs
+
 /** k-core decomposition (fixed-round peeling) — the graph-density
   * member of the graph family next to [[Triangles]] and [[LabelProp]]:
   * the k-core is the maximal subgraph where every node keeps degree
@@ -24,8 +26,8 @@ import org.apache.spark.sql.functions._
   * [[PageRank.ranks]] convention); self-loops and duplicate edges are
   * dropped. Scale shape per round: one map-side-combinable degree
   * aggregate + two semi joins against the (node-sized, typically
-  * broadcastable) survivor set; lineage is checkpoint-cut per round
-  * like every iterative operator here.
+  * broadcastable) survivor set; each round is pinned and frees the
+  * round before it (README "Eager jobs").
   *
   * Output: (node, degree) for k-core members, degree = within-core
   * degree after `iters` rounds.
@@ -39,11 +41,11 @@ object KCore {
                   k: Int, iters: Int): DataFrame = {
     require(k >= 1, s"kCore: bad k=$k")
     require(iters >= 1, s"kCore: bad iters=$iters")
-    var e = edges
+    val spark = edges.sparkSession
+    var e = Jobs.pin(edges
       .select(col(srcCol).as("_s"), col(dstCol).as("_d"))
       .filter(col("_s") =!= col("_d"))
-      .distinct()
-      .localCheckpoint()
+      .distinct(), "kcore", "edges")
     // Early exit on a STABLE round (r16 optimization): each round's edge
     // set is a subset of the previous one, so an unchanged count means an
     // unchanged set — degrees, the survivor set, and every later round
@@ -52,7 +54,7 @@ object KCore {
     // all `iters` rounds; no-op rounds compute the identical relation, so
     // results are unchanged by construction). The count is a cheap job
     // over the just-materialized checkpoint blocks.
-    var nEdges = e.count()
+    var nEdges = Jobs.labelled(spark, "kcore", "edges")(e.count())
     // DRIVER-LOCAL TIER ([[LocalGraph]], reusing the count above): the
     // local peel is the IDENTICAL synchronous computation (all deg<k
     // nodes removed simultaneously per round, early exit on a stable
@@ -60,6 +62,7 @@ object KCore {
     // distributed loop's by construction.
     val local = LocalGraph.collect(e, "kcore", Some(nEdges))
     if (local.isDefined) {
+      Jobs.release(e) // the frame below reads only e's schema
       var el = local.get.map(r => (r.getLong(0), r.getLong(1)))
       var stable = false
       for (_ <- 1 to iters if !stable) {
@@ -82,11 +85,12 @@ object KCore {
       val keep = e.groupBy(col("_s")).agg(count(lit(1)).as("_deg"))
         .filter(col("_deg") >= k)
         .select(col("_s").as("_keep"))
-      e = e
+      val next = Jobs.pin(e
         .join(keep.select(col("_keep").as("_s")), Seq("_s"), "left_semi")
-        .join(keep.select(col("_keep").as("_d")), Seq("_d"), "left_semi")
-        .localCheckpoint()
-      val n = e.count()
+        .join(keep.select(col("_keep").as("_d")), Seq("_d"), "left_semi"), "kcore", "peel")
+      Jobs.release(e)
+      e = next
+      val n = Jobs.labelled(spark, "kcore", "peel")(e.count())
       stable = n == nEdges
       nEdges = n
     }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Jobs
+
 /** Fixed-iteration synchronous LABEL PROPAGATION over a weighted edge
   * list — community detection for the co-occurrence graph: each node
   * repeatedly adopts the label carrying the MAXIMUM total edge weight
@@ -23,9 +25,8 @@ import org.apache.spark.sql.functions._
   * sums), one per-node top-1 window over the neighbor-LABEL table
   * (bounded by the edge list, shrinking as communities coalesce), and a
   * coalesce join back to the node list so isolated nodes keep their
-  * labels. Inputs are pinned with localCheckpoint (cluster posture:
-  * reliable checkpoint, as in [[PageRank.ranks]]) so the fixed chain
-  * never recomputes the edge subtree.
+  * labels. Inputs and rounds are pinned (README "Eager jobs") so the
+  * fixed chain never recomputes the edge subtree.
   *
   * Directed semantics: labels flow src → dst; undirected graphs pass
   * both orientations. Output: (node, community) — community is the
@@ -39,8 +40,8 @@ object LabelProp {
   def communities(edges: DataFrame, srcCol: String, dstCol: String,
                   weightCol: String, iters: Int): DataFrame = {
     require(iters >= 0, s"labelProp: bad iters=$iters")
-    val e = edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst"),
-      col(weightCol).cast("long").as("_w")).localCheckpoint()
+    val e = Jobs.pin(edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst"),
+      col(weightCol).cast("long").as("_w")), "label_prop", "edges")
     // DRIVER-LOCAL TIER ([[LocalGraph]]): the local rounds replicate the
     // EXACT update rule — integer weight sums over the previous round's
     // labels, argmax with the smallest-label tie-break, no-in-neighbor
@@ -48,6 +49,7 @@ object LabelProp {
     // bit-identical by construction (integer arithmetic, total order).
     val local = LocalGraph.collect(e, "label_prop")
     if (local.isDefined) {
+      Jobs.release(e) // the frame below reads only e's schema
       val el = local.get.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       val nodesL = (el.map(_._1) ++ el.map(_._2)).distinct.sorted
       var lbl = nodesL.map(n => n -> n).toMap
@@ -68,12 +70,12 @@ object LabelProp {
       return LocalGraph.frame(e.sparkSession,
         nodesL.map(n => (n, lbl(n))).toSeq, "node", "community", nullable, nullable)
     }
-    val nodes = e.select(col("_src").as("node"))
-      .union(e.select(col("_dst").as("node"))).distinct().localCheckpoint()
+    val nodes = Jobs.pin(e.select(col("_src").as("node"))
+      .union(e.select(col("_dst").as("node"))).distinct(), "label_prop", "nodes")
     var labels = nodes.select(col("node"), col("node").as("label"))
     val top = Window.partitionBy(col("_dst"))
       .orderBy(col("w").desc, col("label").asc)
-    for (_ <- 1 to iters) {
+    for (i <- 1 to iters) {
       val scored = e.join(labels, e("_src") === labels("node"))
         .groupBy(col("_dst"), col("label"))
         .agg(sum(col("_w")).as("w"))
@@ -81,11 +83,16 @@ object LabelProp {
         .withColumn("_rn", row_number().over(top))
         .filter(col("_rn") === 1)
         .select(col("_dst").as("node"), col("label").as("_new"))
-      labels = nodes.join(winners, Seq("node"), "left")
+      val next = Jobs.pin(nodes.join(winners, Seq("node"), "left")
         .join(labels, Seq("node"))
-        .select(col("node"), coalesce(col("_new"), col("label")).as("label"))
-        .localCheckpoint()
+        .select(col("node"), coalesce(col("_new"), col("label")).as("label")),
+        "label_prop", "round")
+      if (i > 1) Jobs.release(labels)
+      labels = next
     }
+    // The result reads the last round's pin, or the nodes when no round ran.
+    Jobs.release(e)
+    if (iters > 0) Jobs.release(nodes)
     labels.select(col("node"), col("label").as("community"))
   }
 

@@ -61,11 +61,11 @@ object MarketBasket {
 
 
   private def coPairsOf(items: DataFrame, minPairs: Long): DataFrame =
-    items.as("x").join(items.as("y"),
+    graft.Jobs.pin(items.as("x").join(items.as("y"),
         col("x._b") === col("y._b") && col("x._i") < col("y._i"))
       .groupBy(col("x._i").as("item_a"), col("y._i").as("item_b"))
       .agg(count(lit(1)).as("pair_count"))
-      .filter(col("pair_count") >= minPairs)
+      .filter(col("pair_count") >= minPairs),
       // PIN the pair table (r16 optimization): every graph gate built on
       // it references `pairs` 2–16× (both union orientations, degree
       // tables, adjacency, wedge self-joins), and exchange reuse only
@@ -75,9 +75,8 @@ object MarketBasket {
       // before this pin). Materializing once collapses every consumer
       // plan to joins over a pinned, pair-set-sized RDD scan: smaller
       // plans, one codegen unit per stage instead of per reference, and
-      // the self-join runs exactly once. Cluster posture: swap
-      // localCheckpoint for reliable checkpoint() (the PageRank note).
-      .localCheckpoint()
+      // the self-join runs exactly once (README "Eager jobs").
+      "co_pairs", "pairs")
 
   /** DuckDB CTEs for [[coPairs]]: declares `${p}items` and `${p}pairs`. */
   def duckCoPairCtes(rel: String, basketCol: String, itemCol: String,

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Jobs
+
 /** Fixed-iteration PageRank over an edge list — item centrality for the
   * co-occurrence graph ([[MarketBasket.coPairs]]), source authority for
   * link graphs, influence for user-interaction graphs.
@@ -52,12 +54,11 @@ object PageRank {
     require(iters >= 0 && dampPct >= 0 && dampPct <= 100,
       s"pageRank: bad iters=$iters / dampPct=$dampPct")
     // The edge list and its two derived tables are referenced 2–3× per
-    // iteration; materialize each ONCE (localCheckpoint — at cluster
-    // scale: checkpoint() to reliable storage, the Pipeline posture) so
-    // the iteration plan is pure join/agg over pinned inputs instead of
-    // iters× recomputations of whatever subtree produced the edges.
-    val e = edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst"))
-      .localCheckpoint()
+    // iteration; pin each ONCE (README "Eager jobs") so the iteration
+    // plan is pure join/agg over pinned inputs instead of iters×
+    // recomputations of whatever subtree produced the edges.
+    val e = Jobs.pin(edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst")),
+      "pagerank", "edges")
     // DRIVER-LOCAL TIER ([[LocalGraph]]): the integer iteration
     // replicates exactly — `div` on non-negative longs is the same
     // truncation, integer sums are order-free — and the one float step
@@ -68,6 +69,7 @@ object PageRank {
     // start mass over; the distributed loop returns it as no rows.
     val local = LocalGraph.collect(e, "pagerank")
     if (local.exists(_.nonEmpty)) {
+      Jobs.release(e) // the frame below reads only e's schema
       val el = local.get.map(r => (r.getLong(0), r.getLong(1)))
       val nodesL = (el.map(_._1) ++ el.map(_._2)).distinct.sorted
       val n = nodesL.length.toLong
@@ -88,16 +90,17 @@ object PageRank {
       }
       return localRankFrame(e, nodesL.map(nd => (nd, r.get(nd))), scale)
     }
-    val nodes = e.select(col("_src").as("node"))
-      .union(e.select(col("_dst").as("node"))).distinct().localCheckpoint()
+    val nodes = Jobs.pin(e.select(col("_src").as("node"))
+      .union(e.select(col("_dst").as("node"))).distinct(), "pagerank", "nodes")
     // Out-degree attached to the edge list ONCE (r16 optimization): the
     // iteration used to pay a second src-keyed join (ranks ⋈ e ⋈ outdeg)
     // every round for a value that never changes between rounds. One
     // pre-joined pinned table halves the per-iteration join count; the
     // summed per-edge contributions are unchanged integers.
-    val ec = e
-      .join(e.groupBy(col("_src")).agg(count(lit(1)).as("_outdeg")), "_src")
-      .localCheckpoint()
+    val ec = Jobs.pin(e
+      .join(e.groupBy(col("_src")).agg(count(lit(1)).as("_outdeg")), "_src"),
+      "pagerank", "out_degree")
+    Jobs.release(e) // read only through nodes and ec from here on
     val nn = nodes.agg(count(lit(1)).as("_n"))
     // Base (teleport) mass per node, and the uniform start rank.
     val base = expr(s"(($scale * ${100 - dampPct}) div 100) div _n")
@@ -152,8 +155,8 @@ object PageRank {
                    dampPct: Long = 85L, scale: Long = DefaultScale): DataFrame = {
     require(iters >= 0 && dampPct >= 0 && dampPct <= 100,
       s"personalized: bad iters=$iters / dampPct=$dampPct")
-    val e = edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst"))
-      .localCheckpoint()
+    val e = Jobs.pin(edges.select(col(srcCol).as("_src"), col(dstCol).as("_dst")),
+      "personalized_pagerank", "edges")
     // DRIVER-LOCAL TIER — the [[ranks]] replica with the seeded
     // teleport: tele(mass) = mass div |seeds∩nodes| on seeds, 0
     // elsewhere; identical integer chain, same Spark round at the end.
@@ -165,6 +168,7 @@ object PageRank {
         "personalized_pagerank")
     } yield (rows, seedRows)
     if (local.isDefined) {
+      Jobs.release(e) // the frame below reads only e's schema
       val (rows, seedRows) = local.get
       val el = rows.map(r => (r.getLong(0), r.getLong(1)))
       val nodesL = (el.map(_._1) ++ el.map(_._2)).distinct.sorted
@@ -192,16 +196,17 @@ object PageRank {
     }
     val nodes = e.select(col("_src").as("node"))
       .union(e.select(col("_dst").as("node"))).distinct()
-    val seed = seeds.select(col(seedCol).as("node")).distinct()
-      .join(nodes, Seq("node"), "left_semi").localCheckpoint()
-    val flagged = nodes
+    val seed = Jobs.pin(seeds.select(col(seedCol).as("node")).distinct()
+      .join(nodes, Seq("node"), "left_semi"), "personalized_pagerank", "seeds")
+    val flagged = Jobs.pin(nodes
       .join(seed.withColumn("_s", lit(1)), Seq("node"), "left")
-      .select(col("node"), col("_s").isNotNull.as("_isSeed"))
-      .localCheckpoint()
+      .select(col("node"), col("_s").isNotNull.as("_isSeed")),
+      "personalized_pagerank", "flagged")
     // Out-degree pre-joined onto the pinned edge list, as in [[ranks]].
-    val ec = e
-      .join(e.groupBy(col("_src")).agg(count(lit(1)).as("_outdeg")), "_src")
-      .localCheckpoint()
+    val ec = Jobs.pin(e
+      .join(e.groupBy(col("_src")).agg(count(lit(1)).as("_outdeg")), "_src"),
+      "personalized_pagerank", "out_degree")
+    Jobs.release(e) // read only through seed, flagged and ec from here on
     val ns = seed.agg(count(lit(1)).as("_ns"))
     def teleport(mass: String) =
       when(col("_isSeed"), expr(s"($mass) div _ns")).otherwise(lit(0L))

@@ -49,37 +49,32 @@ object Pipeline {
                  lang: String, minQuality: Double,
                  n: Int = 3, bands: Int = 42, rowsPerBand: Int = 3,
                  threshold: Double = 0.5): DataFrame = {
-    def step[T](name: String)(body: => T): T =
-      Jobs.labelled(docs.sparkSession, "prep_corpus", name)(body)
     // Score, BARRIER, then filter: pushing the lang/quality predicate
     // past the projection substitutes langIdOf's ~24-reference CASE
     // chain (token split inlined per reference) into the filter and
     // computes the scoring stage twice — the curateCorpus keptIds note,
     // measured again on curateSplits at 4.7× the stage cost.
-    val scored = step("score")(Dedup.rebalance(docs)
+    val scored = Jobs.pin(Dedup.rebalance(docs)
       .withColumn("_w", TextAnalysis.tokens(col(textCol))) // bind the split once
       .withColumn("lang_pred", TextAnalysis.langIdOf(col("_w")))
       .withColumn("quality", TextAnalysis.qualityScoreOf(col(textCol), col("_w")))
       .withColumn("n_tokens", TextAnalysis.tokenCountOf(col("_w")))
-      .drop("_w")
-      .localCheckpoint())
+      .drop("_w"), "prep_corpus", "score")
       .filter(col("lang_pred") === lang && col("quality") >= minQuality)
     // Materialize the filtered+exact-deduped corpus BEFORE the near-dup
     // stage: the distributed LSH plan reads its input three times
     // (signature branch + both sides of the exact-Jaccard verification
     // join), and resolvePairs reads it again — without the barrier the
     // scoring projection and the dedup exchange re-execute per consumer
-    // (measured: the pair stage alone was 3× its standalone cost). At
-    // cluster scale this is the standard persist()/checkpoint() of the
-    // curated corpus before near-dup detection. The hold reads the
-    // materialized blocks, so a corpus over the ceiling costs one
-    // bounded read, not a recompute.
-    val exact = step("exact")(Dedup.exact(scored, textCol, idCol).localCheckpoint())
+    // (measured: the pair stage alone was 3× its standalone cost; README
+    // "Eager jobs"). The hold reads the materialized blocks, so a corpus
+    // over the ceiling costs one bounded read, not a recompute.
+    val exact = Jobs.pin(Dedup.exact(scored, textCol, idCol), "prep_corpus", "exact")
     val held = DriverRows.hold(exact, "prep_corpus", "hold", Dedup.MaxDriverDocs)
     // The survivors are read from the barrier, not from the held rows: a
     // local relation would spread the caller's write over one file per
     // core, where the barrier keeps its own partitioning.
-    step("near_dup") {
+    Jobs.labelled(docs.sparkSession, "prep_corpus", "near_dup") {
       val pairs = Dedup.minhashLshPairs(held.getOrElse(exact), textCol, idCol, n, bands,
         rowsPerBand, threshold)
       Dedup.resolvePairs(exact, pairs, idCol)
@@ -109,9 +104,8 @@ object Pipeline {
                    minKeptRatio: Double = 0.9, ctxLen: Int = 512,
                    trainPct: Int = 80, valPct: Int = 10): DataFrame = {
     // Gate lists are tiny (doc ids) but sit on top of expensive
-    // subtrees, so each is eagerly materialized ONCE (localCheckpoint;
-    // at cluster scale: checkpoint() to reliable storage) and the
-    // corpus joins against the materialized list. Two reasons:
+    // subtrees, so each is pinned ONCE (README "Eager jobs") and the
+    // corpus joins against the pinned list. Two reasons:
     //   1. `clean` has several downstream consumers — without the
     //      barrier every consumer re-runs decontamination's explode
     //      +join and the quality filter;
@@ -121,17 +115,15 @@ object Pipeline {
     //      measured 3× the whole pipeline). Projecting the verdict
     //      first and filtering AFTER the checkpoint barrier keeps the
     //      split bound once.
-    val keptIds = Dedup.rebalance(docs)
+    val keptIds = Jobs.pin(Dedup.rebalance(docs)
       .withColumn("_w", TextAnalysis.tokens(col(textCol)))
       .select(col(idCol), QualityFilters.keepOf(col("_w")).as("_keep"),
-        evalPred.as("_ev"))
-      .localCheckpoint()
+        evalPred.as("_ev")), "curate_corpus", "kept")
       .filter(col("_keep") === 1L && !col("_ev"))
       .select(col(idCol))
-    val contaminated = Decontaminate
+    val contaminated = Jobs.pin(Decontaminate
       .overlap(docs, textCol, idCol, evalPred, nGram)
-      .select(col(idCol))
-      .localCheckpoint()
+      .select(col(idCol)), "curate_corpus", "contaminated")
     val clean = docs.join(keptIds, Seq(idCol), "left_semi")
       .join(contaminated, Seq(idCol), "left_anti")
     // NOTE: documents whose text yields zero chunks (empty/whitespace
@@ -139,10 +131,9 @@ object Pipeline {
     // them — the chunk-dedup gate excludes empty docs by construction
     // (the oracle mirrors this; Packing's empty-doc spans-1 convention
     // applies only to docs that reach the packing stage).
-    val lowDup = ChunkDedup.stats(clean, textCol, idCol, chunkTokens)
+    val lowDup = Jobs.pin(ChunkDedup.stats(clean, textCol, idCol, chunkTokens)
       .filter(col("kept_ratio") >= minKeptRatio)
-      .select(col(idCol))
-      .localCheckpoint()
+      .select(col(idCol)), "curate_corpus", "low_dup")
     val survivors = clean.join(lowDup, Seq(idCol))
     Packing.assign(
       survivors.withColumn("split", Splits.splitOf(col(idCol), trainPct, valPct)),
@@ -228,23 +219,19 @@ object Pipeline {
     // join-back side), and stage 1 is a corpus-wide chunk-key exchange —
     // without the barrier the boilerplate strip re-executes per consumer
     // (measured ~2 s of the composed query's 5.7 s at sf0.1; at 100 TB
-    // it is a full extra pass over the corpus). At cluster scale this is
-    // the persist()/checkpoint() of the cleaned corpus before span
-    // cutting (the reliable checkpoint dir is wired in Engine.session).
-    val s1 = ChunkDedup.stripBoilerplate(docs, textCol, idCol, chunkTokens, minDocs)
-      .select(col(idCol), col("clean_text").as(textCol))
-      .localCheckpoint()
+    // it is a full extra pass over the corpus; README "Eager jobs").
+    val s1 = Jobs.pin(ChunkDedup.stripBoilerplate(docs, textCol, idCol, chunkTokens, minDocs)
+      .select(col(idCol), col("clean_text").as(textCol)), "curate_spans", "clean")
     val s2 = DupSpan.strip(s1, textCol, idCol, k, minRun)
     // Score, BARRIER, then floor: letting the q_score filter push past
     // the projection substitutes the whole classifier (token split
     // inlined per reference) into the predicate and computes the stage
     // twice — see the curateSplits note; same measured pathology.
-    s2.withColumn("_w", TextAnalysis.tokens(col("clean_text")))
+    Jobs.pin(s2.withColumn("_w", TextAnalysis.tokens(col("clean_text")))
       .select(col(idCol),
         size(col("_w")).cast("long").as("n_tokens"),
         col("n_cut").as("n_cut_spans"),
-        QualityFilters.classifierScoreOf(col("_w")).as("q_score"))
-      .localCheckpoint()
+        QualityFilters.classifierScoreOf(col("_w")).as("q_score")), "curate_spans", "score")
       .filter(col("q_score") >= minScore)
   }
 
@@ -273,12 +260,11 @@ object Pipeline {
     // computes (measured 7.9 s vs 1.7 s for this stage at sf0.1). The
     // barrier keeps the score computed ONCE; the floor is then a
     // trivial predicate over materialized columns.
-    val kept = dedup
+    val kept = Jobs.pin(dedup
       .withColumn("_w", TextAnalysis.tokens(col(textCol)))
       .withColumn("_q", QualityFilters.classifierScoreOf(col("_w")))
       .select(col(idCol), col(textCol), col("_q"),
-        size(col("_w")).cast("long").as("_nt"))
-      .localCheckpoint()
+        size(col("_w")).cast("long").as("_nt")), "curate_splits", "kept")
       .filter(col("_q") >= minScore)
       .drop("_q")
     val pairs = Dedup.ngramJaccardPairs(kept, textCol, idCol,

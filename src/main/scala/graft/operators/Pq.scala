@@ -127,33 +127,31 @@ object Pq {
               dim: Int, m: Int, ksub: Int, iters: Int): (DataFrame, Codebook) = {
     require(dim % m == 0, s"dim $dim not divisible by m $m")
     val subLen = dim / m
-    val sv = subvectors(df, vecCol, idCol, m, subLen)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val spark = df.sparkSession
-    val init = Jobs.labelled(spark, "pq", "codebook_init")(collectCents(
-      sv.filter(col("id") < ksub)
-        .select(col("sub"), col("id").as("cell"), col("subvec").as("centroid"))))
-    var cents = init
-    var assigned = assign(sv, cents, m)
-    for (_ <- 1 until iters) {
-      cents = Jobs.labelled(spark, "pq", "codebook_update")(collectCents(centroids(assigned)))
-      assigned = assign(sv, cents, m)
+    Jobs.cached(subvectors(df, vecCol, idCol, m, subLen)) { sv =>
+      var cents = Jobs.labelled(spark, "pq", "codebook_init")(collectCents(
+        sv.filter(col("id") < ksub)
+          .select(col("sub"), col("id").as("cell"), col("subvec").as("centroid"))))
+      var assigned = assign(sv, cents, m)
+      for (_ <- 1 until iters) {
+        cents = Jobs.labelled(spark, "pq", "codebook_update")(collectCents(centroids(assigned)))
+        assigned = assign(sv, cents, m)
+      }
+      // LAZY cache (VERDICT r8 #8, measured): the first consumer action
+      // computes the final m·ksub-CASE assignment exactly once and caches
+      // the index-scale result (one row per vector: id + m small cells);
+      // every further action — a second ADC join, repeated bench passes
+      // with plan-identical lineage — reads the cache instead of
+      // re-encoding the corpus. An EAGER count() here measured 2× worse
+      // at fixture scale (the extra materialization job costs more than
+      // the re-encode it saves on a small corpus); a lazy cache is free
+      // when unused and caps the encode at once either way. `sv` is
+      // released when this block ends, before the codes are first read.
+      val codes = Jobs.cache(assigned.groupBy(col("id").as(idCol))
+        .agg(transform(array_sort(collect_list(struct(col("sub"), col("cell")))),
+          s => s.getField("cell")).as("codes")))
+      (codes, cents)
     }
-    val codes = assigned.groupBy(col("id").as(idCol))
-      .agg(transform(array_sort(collect_list(struct(col("sub"), col("cell")))),
-        s => s.getField("cell")).as("codes"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // LAZY persist (VERDICT r8 #8, measured): the first consumer action
-    // computes the final m·ksub-CASE assignment exactly once and caches
-    // the index-scale result (one row per vector: id + m small cells);
-    // every further action — a second ADC join, repeated bench passes
-    // with plan-identical lineage — reads the cache instead of
-    // re-encoding the corpus. An EAGER count() here measured 2× worse
-    // at fixture scale (the extra materialization job costs more than
-    // the re-encode it saves on a small corpus); lazy persist is free
-    // when unused and caps the encode at once either way.
-    sv.unpersist(blocking = false)
-    (codes, cents)
   }
 
   /** ADC score column: ascending-subspace accumulation (seed 0.0) of

@@ -245,9 +245,8 @@ object Profile {
     */
   def featureMi(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.size >= 2, "featureMi: need at least two columns")
-    val base = df.groupBy(cols.map(col): _*)
-      .agg(count(lit(1)).as("_cnt"))
-      .localCheckpoint()
+    val base = graft.Jobs.pin(df.groupBy(cols.map(col): _*)
+      .agg(count(lit(1)).as("_cnt")), "feature_mi", "cells")
     val pairs = cols.combinations(2).map { case Seq(a, b) => (a, b) }.toSeq
     def d(c: Column) = c.cast("double")
     val perPair = pairs.map { case (a, b) =>

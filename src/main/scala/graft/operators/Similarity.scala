@@ -226,9 +226,9 @@ object Similarity {
     * Returns the final assignment (`idCol`, cell).
     */
   def kmeansCells(df: DataFrame, vecCol: String, idCol: String,
-                  k: Int, iters: Int): DataFrame = {
-    val vecs = Dedup.rebalance(df).select(col(idCol).as("id"), col(vecCol).as("_v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+                  k: Int, iters: Int): DataFrame =
+    graft.Jobs.cached(
+      Dedup.rebalance(df).select(col(idCol).as("id"), col(vecCol).as("_v"))) { vecs =>
     // (cell, centroid) rows → ascending-cell literal list. `array_max`
     // compares the structs lexicographically (score first, then -cell),
     // so the winner has the highest score and, on score ties, the
@@ -254,12 +254,10 @@ object Similarity {
     var assigned = assign(collectCents(init))
     for (_ <- 1 until iters)
       assigned = assign(collectCents(centroidsOf(assigned, "_v", "cell")))
-    val out = assigned.select(col("id").as(idCol), col("cell"))
-    // Drop the iteration cache: the final assignment is one narrow pass
-    // over the source, and leaving blocks pinned across unrelated
-    // queries is the round-2 warm-bench leak all over again.
-    vecs.unpersist(blocking = false)
-    out
+    // The iteration cache is dropped on return: the final assignment is
+    // one narrow pass over the source, and leaving blocks pinned across
+    // unrelated queries is the round-2 warm-bench leak all over again.
+    assigned.select(col("id").as(idCol), col("cell"))
   }
 
   /** DuckDB oracle twin of [[kmeansCells]] as a parenthesized relation:
@@ -589,12 +587,11 @@ object Similarity {
     * Output: (label, n, mean_silhouette), one row per cluster.
     */
   def silhouette(df: DataFrame, vecCol: String, labelCol: String,
-                 scale: Long = 1000000L): DataFrame = {
-    val q = Dedup.rebalance(df).select(
+                 scale: Long = 1000000L): DataFrame =
+    graft.Jobs.cached(Dedup.rebalance(df).select(
       col(labelCol).cast("long").as("cell"),
       transform(col(vecCol), x => round(x.cast("double") * scale).cast("long"))
-        .as("_q"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .as("_q"))) { q =>
     val cents = q
       .select(col("cell"), posexplode(col("_q")).as(Seq("pos", "v")))
       .groupBy(col("cell"), col("pos"))
@@ -623,12 +620,10 @@ object Similarity {
         round(lit(1000000.0) * (b - a).cast("double")
           / greatest(a, b).cast("double")).cast("long"))
         .otherwise(lit(0L)).as("_s"))
-    val out = scored.groupBy(col("cell").as("label"))
+    scored.groupBy(col("cell").as("label"))
       .agg(count(lit(1)).as("n"),
         round(sum(col("_s")).cast("double") / 1000000.0
           / count(lit(1)).cast("double"), 6).as("mean_silhouette"))
-    q.unpersist(blocking = false)
-    out
   }
 
   /** DuckDB oracle twin of [[silhouette]] — identical quantization,
@@ -708,13 +703,13 @@ object Similarity {
       col(labelCol).cast("long").as("_c"),
       transform(col(vecCol), x => round(x.cast("double") * scale).cast("long"))
         .as("_q"))
-    val grouped = q
+    // class·dim rows; three consumers below
+    val grouped = graft.Jobs.pin(q
       .select(col("_c"), posexplode(col("_q")).as(Seq("_pos", "_v")))
       .groupBy(col("_c"), col("_pos"))
       .agg(count(lit(1)).as("_n"), sum(d38(col("_v"))).as("_s"),
         sum(col("_v").cast("decimal(19,0)") * col("_v").cast("decimal(19,0)"))
-          .as("_qq"))
-      .localCheckpoint() // class·dim rows; three consumers below
+          .as("_qq")), "class_separability", "moments")
     val sc = lit(scale.toDouble) * lit(scale.toDouble)
     def micro(c: Column) = round(c * lit(1000000.0)).cast("long")
     // per-(class,dim) S²/n in value², µ-requantized — shared by both SS

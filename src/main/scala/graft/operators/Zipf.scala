@@ -134,9 +134,8 @@ object Zipf {
     // re-reading the corpus (the chiSquared/Pipeline barrier pattern).
     // Docs whose token list is empty contribute no rows, so a bucket
     // holding only empty docs is absent — mirrored in the oracle.
-    val grouped = withB.select(col("_b"), explode(col("_w")).as("_t"))
-      .groupBy(col("_b"), col("_t")).agg(count(lit(1)).as("_c"))
-      .localCheckpoint()
+    val grouped = graft.Jobs.pin(withB.select(col("_b"), explode(col("_w")).as("_t"))
+      .groupBy(col("_b"), col("_t")).agg(count(lit(1)).as("_c")), "heaps_fit", "counts")
     val toks = grouped.groupBy(col("_b")).agg(sum(col("_c")).as("_toks"))
     val voc = grouped.groupBy(col("_t")).agg(min(col("_b")).as("_fb"))
       .groupBy(col("_fb").as("_b")).agg(count(lit(1)).as("_voc"))

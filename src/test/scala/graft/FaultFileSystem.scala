@@ -9,9 +9,10 @@ import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 
 /** Hadoop FileSystem registered under the `faulty` scheme for TESTS: a
   * local filesystem that simulates a process dying at its N-th `rename`
-  * or `delete`. Once armed at N, that call and every later rename or
-  * delete throw until [[FaultFileSystem.disarm]], so nothing the dying
-  * process would have done afterwards reaches the disk.
+  * or `delete`, or at the first one on a given path. Once armed, that
+  * call and every later rename or delete throw until
+  * [[FaultFileSystem.disarm]], so nothing the dying process would have
+  * done afterwards reaches the disk.
   *
   * Mapping, like [[GsMockFileSystem]]: `faulty://<any>/<abs-path>`
   * stores bytes at the local `<abs-path>`. Register with
@@ -49,18 +50,25 @@ class FaultFileSystem extends RawLocalFileSystem {
 object FaultFileSystem {
   private val ops = new AtomicLong()
   @volatile private var failFrom = Long.MaxValue
+  @volatile private var failAt: Option[String] = None
 
   /** Reset the counter; the `n`-th call from now on and all later ones throw. */
   def arm(n: Long): Unit = { ops.set(0); failFrom = n }
 
+  /** Reset the counter; the first call on a path containing `part` and
+    * all later ones throw.
+    */
+  def armAt(part: String): Unit = { disarm(); failAt = Some(part) }
+
   /** Reset the counter and stop failing. */
-  def disarm(): Unit = { ops.set(0); failFrom = Long.MaxValue }
+  def disarm(): Unit = { ops.set(0); failFrom = Long.MaxValue; failAt = None }
 
   /** Renames and deletes since the last [[arm]] or [[disarm]]. */
   def count: Long = ops.get
 
   private def tick(what: String): Unit = {
     val n = ops.incrementAndGet()
+    if (failAt.exists(what.contains)) failFrom = math.min(failFrom, n)
     if (n >= failFrom) throw new IOException(s"injected fault at call $n: $what")
   }
 }

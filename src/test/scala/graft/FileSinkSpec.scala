@@ -352,28 +352,6 @@ class FileSinkSpec extends AnyFunSuite with SparkTestBase {
     assert(back.columns.contains("row_hash"))
     assert(back.count() == res.df.count())
 
-    // CDC custom-SQL path: initial file on first sync, recurring file
-    // (with :start_timestamp) after, watermark = end anchor.
-    val base = Files.createTempDirectory("graft-csql").toString
-    val initP = graft.sources.SqlSource.queryPath(base, "p", "c", "s", "events", 0)
-    val recP = graft.sources.SqlSource.queryPath(base, "p", "c", "s", "events", 1)
-    Files.createDirectories(initP.getParent)
-    events.createOrReplaceTempView("ev_csql")
-    Files.writeString(initP,
-      "SELECT * FROM ev_csql WHERE ts <= CAST(:end_timestamp AS TIMESTAMP)")
-    Files.writeString(recP,
-      """SELECT * FROM ev_csql
-        |WHERE ts >= CAST(:start_timestamp AS TIMESTAMP)
-        |  AND ts <= CAST(:end_timestamp AS TIMESTAMP)""".stripMargin)
-    val endMs = 1706745600000L // 2024-02-01, past the fixture's range
-    val csqlFirst = Engine.runCdcCustomSql(spark, base, "p", "c", "s", "events",
-      timeCutoffMs = 0L, endMs = endMs)
-    assert(csqlFirst.newWatermarkMs == endMs)
-    assert(csqlFirst.df.count() == events.count())
-    val csqlRec = Engine.runCdcCustomSql(spark, base, "p", "c", "s", "events",
-      timeCutoffMs = endMs, endMs = endMs + 86400000L)
-    assert(csqlRec.df.count() == 0L) // nothing after the watermark
-
     // CDC first sync: watermark anchored to the latest commit; second
     // sync from that watermark sees no further changes.
     val log = ChangeLog.synthesize(events, "event_id", "ts")

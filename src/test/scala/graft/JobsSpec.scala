@@ -5,10 +5,18 @@ import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.TaskContext
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.{Bm25, Dedup, DriverRows, KCore, LabelProp, PageRank, Pipeline}
+
 /** [[Jobs.overlap]]: task order, nesting, the failure protocol and the
-  * labels its jobs carry.
+  * labels its jobs carry. [[Jobs.pin]], [[Jobs.cache]] and
+  * [[Jobs.release]]: the label law and the release law (README "Eager
+  * jobs").
   */
 class JobsSpec extends AnyFunSuite with SparkTestBase {
 
@@ -74,6 +82,81 @@ class JobsSpec extends AnyFunSuite with SparkTestBase {
       assert(own.size >= 2, s"jobs of step $step: $jobs")
       assert(own.forall(_._2 == desc), s"step $step jobs carried ${own.map(_._2)}, not $desc")
     }
+  }
+
+  /** A symmetric triangle 1-2-3 with the tail 3-4-5-6, which a 2-core
+    * peels one node per round, spread over two partitions so that no
+    * tier reads it as a driver-local relation.
+    */
+  private def graph(): DataFrame = {
+    import spark.implicits._
+    val e = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L), (5L, 6L))
+    (e ++ e.map(_.swap)).toDF("src", "dst").withColumn("w", lit(1L)).repartition(2)
+  }
+
+  /** The graph loops by the op name their jobs are tagged with. */
+  private def loops: Seq[(String, () => DataFrame)] = {
+    import spark.implicits._
+    Seq(
+      "connected_components" -> (() => Dedup.connectedComponents(
+        graph().select(col("src").as("id_a"), col("dst").as("id_b")))),
+      "kcore" -> (() => KCore.coreMembers(graph(), "src", "dst", k = 2, iters = 5)),
+      "pagerank" -> (() => PageRank.ranks(graph(), "src", "dst", 3)),
+      "personalized_pagerank" -> (() =>
+        PageRank.personalized(graph(), "src", "dst", Seq(1L, 4L).toDF("node"), "node", 3)),
+      "label_prop" -> (() => LabelProp.communities(graph(), "src", "dst", "w", 3)))
+  }
+
+  test("label law: every job started while the pipelines are built and the graph loops run is tagged graft:<op>:<step>") {
+    val docs = Tables.load(spark, sf, "documents")
+    def prep() = Pipeline.prepCorpus(docs, "text", "doc_id", lang = "en", minQuality = 0.75)
+    val calls: Seq[(String, () => Any)] = Seq(
+      "prep_corpus" -> (() => prep()),
+      "prep_corpus" -> (() => DriverRows.ceilingsAt(-1L)(prep())),
+      "curate_corpus" -> (() => Pipeline.curateCorpus(docs, "text", "doc_id",
+        evalPred = pmod(col("doc_id"), lit(97L)) === 0L))) ++
+      loops.map { case (op, call) => op -> (() => DriverRows.ceilingsAt(-1L)(call())) }
+    for ((op, call) <- calls) {
+      val (_, jobs) = jobsOf(call())
+      val untagged = jobs.filterNot(_._1.exists(_.startsWith(s"graft:$op:")))
+      assert(jobs.nonEmpty && untagged.isEmpty, s"$op: ${untagged.size} of ${jobs.size} jobs untagged: $untagged")
+    }
+  }
+
+  test("release law: a call leaves persisted only what its result reads, and a failed append leaves nothing") {
+    val sc = spark.sparkContext
+    def persisted = sc.getPersistentRDDs.keySet.toSet
+    // The RDDs a frame's plan reads: pinned leaves and loaded cache entries.
+    def reads(df: DataFrame): Set[Int] = {
+      val qe = df.queryExecution
+      (qe.analyzed.collect { case l: LogicalRDD => l.rdd.id } ++
+        qe.withCachedData.collect {
+          case r: InMemoryRelation if r.cacheBuilder.isCachedColumnBuffersLoaded =>
+            r.cacheBuilder.cachedColumnBuffers.id
+        }).toSet
+    }
+    for (ceiling <- Seq(Long.MaxValue, -1L); (op, call) <- loops) {
+      val before = persisted
+      val out = DriverRows.ceilingsAt(ceiling)(call())
+      val kept = persisted -- before -- reads(out)
+      assert(kept.isEmpty, s"$op at ceiling $ceiling left RDDs $kept persisted")
+      out.collect() // nothing the result reads was freed
+    }
+    // appendToIndex probes the index dir through the context's conf.
+    sc.hadoopConfiguration.set("fs.faulty.impl", classOf[FaultFileSystem].getName)
+    val docs = spark.createDataFrame(Seq((1L, "a b c a"), (2L, "b c d"), (3L, "d e")))
+      .toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft-release-bm25").resolve("index")
+    val before = persisted
+    FaultFileSystem.armAt("/postings/")
+    val failed =
+      try { Bm25.appendToIndex(docs, "text", "doc_id", s"faulty://t$dir"); None }
+      catch { case e: Exception => Some(e) }
+      finally FaultFileSystem.disarm()
+    val causes = failed.toSeq.flatMap(Iterator.iterate[Throwable](_)(_.getCause).takeWhile(_ != null))
+    assert(causes.exists(c => String.valueOf(c.getMessage).contains("/postings/")),
+      s"the postings write did not fail: $causes")
+    assert((persisted -- before).isEmpty, s"the failed append left ${persisted -- before} persisted")
   }
 }
 

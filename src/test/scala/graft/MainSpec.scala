@@ -115,6 +115,49 @@ class MainSpec extends AnyFunSuite with SparkTestBase {
     assert(second.contains("table_changes"))
   }
 
+  test("cdc --use_custom_sql: initial file on the first sync, recurring file after, params bound") {
+    // The catalog holds every fixture table (the custom SQL reads them by
+    // name) and the change log whose latest commit anchors a first sync.
+    val cat = Files.createTempDirectory("graft-csql-cat")
+    Tables.All.foreach(n => Files.createSymbolicLink(cat.resolve(s"$n.parquet"),
+      java.nio.file.Paths.get(sf, s"$n.parquet").toAbsolutePath))
+    val events = Tables.load(spark, sf, "events")
+    ChangeLog.synthesize(events, "event_id", "ts").write.parquet(s"$cat/clicks_log.parquet")
+    val base = tmp()
+    val initP = sources.SqlSource.queryPath(base, "p", "c", "s", "clicks_log", 0)
+    val recP = sources.SqlSource.queryPath(base, "p", "c", "s", "clicks_log", 1)
+    Files.createDirectories(initP.getParent)
+    // Bounds in whole ms, as the commit times are.
+    Files.writeString(initP,
+      "SELECT * FROM events WHERE ts < CAST(:end_timestamp AS TIMESTAMP) + INTERVAL 1 MILLISECOND")
+    Files.writeString(recP,
+      """SELECT * FROM events
+        |WHERE ts >= CAST(:start_timestamp AS TIMESTAMP)
+        |  AND ts < CAST(:end_timestamp AS TIMESTAMP) + INTERVAL 1 MILLISECOND""".stripMargin)
+    // The payload, and the rows the run wrote to its sink.
+    def sync(cutoff: Long, more: String*): (String, Long) = {
+      val out = tmp()
+      val payload = runMain(Seq("--sync_type", "cdc", "--use_custom_sql",
+        "--catalog", cat.toString, "--catalog_name", "c", "--schema_name", "s",
+        "--mixpanel_project_id", "p", "--queries_base_dir", base, "--table", "clicks_log",
+        "--time_cutoff_ms", cutoff.toString, "--export_format", "json",
+        "--bucket", s"file:$out", "--prefix", "cdc") ++ more: _*)
+      (payload, spark.read.schema(events.schema).json(s"file:$out/cdc").count())
+    }
+    def bound(ms: Long) = s"CAST('${sources.SqlSource.msToIso(ms)}' AS TIMESTAMP)"
+    val (first, firstRows) = sync(0L)
+    val endMs = """"change_capture_sync_last_commit_ms": (\d+)""".r
+      .findFirstMatchIn(first).get.group(1).toLong
+    assert(endMs == ChangeLog.latestCommitMs(Tables.load(spark, cat.toString, "clicks_log")))
+    assert(first.contains(s"ts < ${bound(endMs)}"), first)
+    assert(firstRows == events.count())
+    val nowMs = endMs + 86400000L
+    val (rec, recRows) = sync(endMs, "--now_ms", nowMs.toString)
+    assert(rec.contains(s""""change_capture_sync_last_commit_ms": $nowMs"""))
+    assert(rec.contains(s"ts >= ${bound(endMs + 1)}") && rec.contains(s"ts < ${bound(nowMs)}"), rec)
+    assert(recRows == 0L) // nothing after the watermark
+  }
+
   test("Engine.session wires reliable checkpoints for the CC loop (100 TB posture)") {
     import spark.implicits._
     // Engine.session (the Main path's session factory) must leave the

@@ -12,8 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * modes (missing comment, comment absorbed by a neighbor) loud at
   * test time instead of judge time. The same source scan keeps the
   * engine's environment reads to the allowlisted deployment settings,
-  * keeps thread pools and directory renames in their one owner each,
-  * and keeps driver-tier ceilings out of operator signatures.
+  * keeps thread pools, directory renames and eager materializations in
+  * their one owner each, and keeps driver-tier ceilings out of operator
+  * signatures.
   */
 class RegistryDocSpec extends AnyFunSuite {
 
@@ -76,6 +77,20 @@ class RegistryDocSpec extends AnyFunSuite {
       }
     }
     assert(copies.isEmpty, s"use graft.Jobs.overlap / graft.sinks.StagedSwap instead:\n${copies.mkString("\n")}")
+  }
+
+  test("checkpoints, persists and their releases live only in Jobs") {
+    // Jobs.pin / cache / release own the eager jobs' labels and the
+    // release rule (README "Eager jobs"); a hand-written barrier
+    // elsewhere would run an untagged job or leak its blocks.
+    val rx = """localCheckpoint\(|\.checkpoint\(|\.persist\(|\.cache\(\)|\.unpersist\(""".r
+    val copies = mainSources.filterNot(_.getFileName.toString == "Jobs.scala").flatMap { f =>
+      java.nio.file.Files.readString(f).linesIterator.zipWithIndex.collect {
+        case (ln, i) if !Seq("//", "*", "/*").exists(ln.trim.startsWith) &&
+            rx.findFirstIn(ln).isDefined => s"$f:${i + 1}: ${ln.trim}"
+      }
+    }
+    assert(copies.isEmpty, s"use graft.Jobs.pin / cache / release instead:\n${copies.mkString("\n")}")
   }
 
   test("no def named *With takes a driver-tier ceiling parameter") {
