@@ -20,10 +20,13 @@ import scala.collection.mutable
   *
   * Artifact robustness (the round-6 rc=124 lesson): `target/bench.json`
   * is DELETED at startup (no stale-file trap) and REWRITTEN after every
-  * single query, and the running JSON line is printed to stdout each
-  * time — so a driver timeout at any point still leaves a parsable
-  * artifact covering everything finished so far (`"complete":false`
-  * marks a partial run; the final line flips it to true). Queries run
+  * single query, and a one-line JSON summary of it (totals, query and
+  * error counts, `complete`, `ok`, and the record's path) is printed to
+  * stdout each time — so a driver timeout at any point still leaves a
+  * parsable artifact covering everything finished so far
+  * (`"complete":false` marks a partial run; the final line flips it to
+  * true). The last stdout line is that summary; the file holds the
+  * per-query times, errors and canary series. Queries run
   * cheapest-first (static cost hints from the round-6 71-query run), so
   * a truncated run covers the most queries per second spent.
   *
@@ -369,7 +372,12 @@ object Bench {
         else 1.0
       val json =
         s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"sf":"$sfDir","iters":${math.min(passesDone + 1, iters)},"cold_total":$coldTotal,"done_queries":${names.size},"complete":$complete,"ok":$ok,"canary":$canaryArr,"canary_wave_ratio":${num(waveRatio, 2)},"canary_median":${num(canaryMedian, 3)},"warmup_sec":${num(warmupSec, 2)},"warm_regressions":$warmRegr,"solo_min":$soloJson,"solo_canary":$soloCanaryJson,"solo_skipped":$soloSkippedJson,"total_solo_adjusted":${num(adjTotal, 3)},"canary_clean_ref":${num(CanaryCleanRef, 3)},"canary_norm_factor":${num(normFactor, 3)},"canary_norm_total":${num(adjTotal * normFactor, 3)},"protocol":"min2+warmup+gc25+solo"}"""
-      println(json)
+      // The last stdout line is a parseable summary (under 1 KB); the
+      // full record, per-query times and errors included, is the file.
+      println(s"""{"metric":"total","value":$total,"unit":"sec","cold_total":$coldTotal,""" +
+        s""""canary_norm_total":${num(adjTotal * normFactor, 3)},"done_queries":${names.size},""" +
+        s""""complete":$complete,"ok":$ok,"error_count":${errors.size},""" +
+        s""""protocol":"min2+warmup+gc25+solo","record":${jsonStr(outPath.toString)}}""")
       // Atomic replace: a reader (or a kill) mid-write still sees a
       // complete previous JSON, never a torn file.
       val tmp = Paths.get("target/bench.json.tmp")

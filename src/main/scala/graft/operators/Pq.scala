@@ -2,6 +2,7 @@ package graft.operators
 
 import scala.collection.{immutable, mutable}
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, Literal, Round, UnsafeArrayData}
@@ -12,7 +13,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{PlanFrames, PqAdcScore}
 import org.apache.spark.sql.types._
 
-import graft.Jobs
+import graft.{Jobs, Tables}
 import graft.sinks.StagedSwap
 
 /** Product quantization (PQ) for approximate nearest-neighbor search —
@@ -32,35 +33,25 @@ import graft.sinks.StagedSwap
   * Training runs the same deterministic Lloyd recipe as
   * [[Similarity.kmeansCells]] (smallest-id init, fixed iterations,
   * (distance, cell)-tie-broken argmin, per-cell component means) but
-  * JOINTLY for all m subspaces in ONE exploded frame: the per-iteration
-  * cost is a single (sub, cell, component) aggregate exchange for every
-  * codebook at once, not m sequential kmeans jobs — the assignment step
-  * stays a narrow codegen projection (the native
-  * [[org.apache.spark.sql.graft.PqArgminCell]] loop; its generated
-  * source is constant-size in m·ksub, so it never trips janino's 64 KB
-  * method limit the way the r12 CASE-over-`sub` form did). Subspace
-  * assignment minimizes squared L2 (the PQ objective); ADC scores the
-  * reconstruction's INNER PRODUCT with the query (the MIPS convention
-  * all ANN gates in this repo rank by).
+  * JOINTLY for all m subspaces: each iteration is ONE narrow job with no
+  * exchange, whose tasks assign their vectors (the
+  * [[org.apache.spark.sql.graft.PqArgminCell]] argmin) and return an
+  * m·ksub·subLen partial sum that the driver merges in partition order.
+  * Encoding is a narrow projection of m of those argmins per row
+  * ([[encode]]); the expression's generated source is constant-size in
+  * m·ksub, so it never trips janino's 64 KB method limit the way the
+  * r12 CASE-over-`sub` form did. Subspace assignment minimizes squared
+  * L2 (the PQ objective); ADC scores the reconstruction's INNER PRODUCT
+  * with the query (the MIPS convention all ANN gates in this repo rank
+  * by).
   *
   * Determinism contract (oracle-parity): squared distances and ADC sums
-  * are explicit left folds with seed 0.0, centroid means are plain
-  * per-group avgs (the [[Similarity.kmeansCells]] convention its oracle
-  * already pins), and every ranking tie-break is (score, id).
+  * are explicit left folds with seed 0.0, a centroid component is the
+  * bitwise value of a per-group `avg` (the [[Similarity.kmeansCells]]
+  * convention its oracle already pins), and every ranking tie-break is
+  * (score, id).
   */
 object Pq {
-
-  /** Exploded subvector frame: one row per (vector, subspace) with the
-    * double-cast slice. Narrow (Generate + slice), no shuffle.
-    */
-  private def subvectors(df: DataFrame, vecCol: String, idCol: String,
-                         m: Int, subLen: Int): DataFrame =
-    Dedup.rebalance(df)
-      .select(col(idCol).as("id"),
-        explode(sequence(lit(0), lit(m - 1))).as("sub"), col(vecCol).as("_v"))
-      .select(col("id"), col("sub"),
-        transform(slice(col("_v"), col("sub") * subLen + 1, lit(subLen)),
-          x => x.cast("double")).as("subvec"))
 
   /** Codebook type: (subspace, cell, centroid). */
   type Codebook = Array[(Int, Long, Seq[Double])]
@@ -83,77 +74,132 @@ object Pq {
     (cells, cents)
   }
 
-  /** Assignment: per (vector, subspace) row, the squared-L2 argmin over
-    * that subspace's centroids — the native
-    * [[org.apache.spark.sql.graft.PqArgminCell]] expression (one fused
-    * loop, codebook as a reference object). The r12 formulation — a
-    * CASE over `sub` whose branches held ksub aggregate/zip_with folds —
-    * generated one m·ksub-sized method that blew janino's 64 KB limit at
-    * sf1.0 and dropped the whole corpus encode to interpreted eval
-    * (VERDICT r12 #1); the native loop's generated source is constant-
-    * size in the codebook, so the encode stays inside whole-stage
-    * codegen at any m·ksub. Ties break to the LOWEST cell, mirroring the
-    * oracle's ORDER BY dist ASC, cell ASC (ascending-cell scan + strict
-    * `<`), and the distance is the same seed-0.0 ascending left fold of
-    * (x−y)² — bitwise-identical scores to the old form.
+  /** The PQ codes of a vector column: the `m` subspace argmins of
+    * `vec`, as an `array<long>` in subspace order. Subspace j is the
+    * [[org.apache.spark.sql.graft.PqArgminCell]] of the slice
+    * `j·subLen + 1` (length `subLen`), widened to doubles, against
+    * subspace j's centroids: squared L2, ties to the lowest cell, -1
+    * where the subspace has no centroid. A null vector codes as `m`
+    * nulls; the array itself is never null. One narrow projection, a
+    * fixed `m` fused loops per row.
     */
-  private def assign(subvecs: DataFrame, cents: Codebook, m: Int): DataFrame = {
+  def encode(cents: Codebook, m: Int, subLen: Int)(vec: Column): Column = {
     val (cellArr, centArr) = cbArrays(bySub(cents), m)
-    subvecs.withColumn("cell",
-      org.apache.spark.sql.graft.PqArgminCell(
-        col("sub"), col("subvec"), cellArr, centArr))
+    array((0 until m).map(j => org.apache.spark.sql.graft.PqArgminCell(lit(j),
+      transform(slice(vec, j * subLen + 1, subLen), x => x.cast("double")),
+      cellArr, centArr)): _*)
   }
 
-  /** Per-(sub, cell) component means — ONE aggregate exchange updates
-    * every subspace's codebook simultaneously.
+  /** Per-partition sums for one Lloyd update: for each subspace j and
+    * cell slot s (a cell of the codebook, or the extra last slot for
+    * -1), `sums(j)((s · subLen) + i)` and `counts(j)(...)` accumulate
+    * component i of the vectors assigned there, and `lens(j)(s)` is the
+    * longest assigned slice.
     */
-  private def centroids(assigned: DataFrame): DataFrame =
-    assigned
-      .select(col("sub"), col("cell"), posexplode(col("subvec")).as(Seq("pos", "v")))
-      .groupBy("sub", "cell", "pos").agg(avg("v").as("m"))
-      .groupBy("sub", "cell")
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-        s => s.getField("m")).as("centroid"))
+  private final case class Partial(sums: Array[Array[Double]], counts: Array[Array[Long]],
+                                   lens: Array[Array[Int]])
 
-  private def collectCents(df: DataFrame): Codebook =
-    df.collect().map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2)))
+  /** One Lloyd update of every subspace's codebook, in ONE narrow job
+    * over `vecs` (rows of one widened `array<double>` vector) and no
+    * exchange. Each task assigns its vectors with
+    * [[org.apache.spark.sql.graft.PqArgminCell.nearest]] and returns one
+    * [[Partial]]: per (sub, cell, component) the sum of the non-null
+    * components, accumulated onto +0.0 in row order, and their count.
+    * The driver adds the partials in partition-index order and divides
+    * sum by count. That is the order in which a partial and a final
+    * `avg` aggregate over `(sub, cell, pos)` apply the same additions,
+    * so each mean is bitwise the one a `posexplode`/`avg` plan gives:
+    * a component no member has non-null is null, a centroid is as long
+    * as its longest member slice, and a cell with no member component
+    * is dropped. Vectors the argmin leaves unassigned (-1: a subspace
+    * with no centroid) form cell -1, as in that plan.
+    */
+  private def lloydUpdate(vecs: RDD[InternalRow], cents: Codebook, m: Int, subLen: Int): Codebook = {
+    val (cellArr, centArr) = cbArrays(bySub(cents), m)
+    // Cell k's slot is k; an unassigned vector's is cell -1's, else the last one.
+    val unassigned = cellArr.map(cs => if (cs.contains(-1L)) cs.indexOf(-1L) else cs.length)
+    val slots = cellArr.map(_.length + 1)
+    val partials = vecs.mapPartitions { rows =>
+      val p = Partial(slots.map(n => new Array[Double](n * subLen)),
+        slots.map(n => new Array[Long](n * subLen)), slots.map(n => new Array[Int](n)))
+      rows.foreach { r =>
+        if (!r.isNullAt(0)) {
+          val v = r.getArray(0)
+          var j = 0
+          while (j < m) {
+            val base = j * subLen
+            val len = math.min(subLen, math.max(0, v.numElements() - base))
+            val k = org.apache.spark.sql.graft.PqArgminCell.nearest(centArr(j), v, base, len)
+            val s = if (k < 0) unassigned(j) else k
+            p.lens(j)(s) = math.max(p.lens(j)(s), len)
+            var i = 0
+            while (i < len) {
+              if (!v.isNullAt(base + i)) {
+                p.sums(j)(s * subLen + i) += v.getDouble(base + i)
+                p.counts(j)(s * subLen + i) += 1
+              }
+              i += 1
+            }
+            j += 1
+          }
+        }
+      }
+      Iterator.single(p)
+    }.collect()
+    (for {
+      j <- 0 until m
+      s <- 0 until slots(j)
+      len = partials.foldLeft(0)((l, p) => math.max(l, p.lens(j)(s)))
+      if len > 0
+    } yield {
+      val centroid = Seq.tabulate[Any](len) { i =>
+        val at = s * subLen + i
+        val sum = partials.foldLeft(0.0)(_ + _.sums(j)(at))
+        val count = partials.foldLeft(0L)(_ + _.counts(j)(at))
+        if (count == 0) null else sum / count.toDouble
+      }
+      (j, if (s < cellArr(j).length) cellArr(j)(s) else -1L, centroid.asInstanceOf[Seq[Double]])
+    }).toArray
+  }
 
-  /** Train the joint codebooks and encode the corpus.
-    * Returns (codes frame (`idCol`, codes array — codes(j) is subspace
-    * j's cell id), final codebook). Driver state is the m·ksub·subLen
-    * codebook — metadata, same as every PQ index's coordinator state.
+  /** Train the joint codebooks and encode the corpus. Returns (codes
+    * frame, final codebook sorted by (sub, cell)). The codes frame is
+    * `idCol` plus `codes` ([[encode]] of `vecCol`; codes(j) is subspace
+    * j's cell id), one row per source row: a narrow projection over
+    * `df`, computed by whatever reads it. Ids must be unique: a repeated
+    * id gets one code row per occurrence, and a repeated init id one
+    * init cell per occurrence.
+    *
+    * Training caches `df`'s vectors (rebalanced, widened to doubles),
+    * fills the cache with the `codebook_init` collect of the vectors
+    * whose id is below `ksub` (each subspace's init cells are their ids)
+    * and runs the other `iters − 1` Lloyd updates as one
+    * `codebook_update` job each ([[lloydUpdate]]): `iters` jobs in all.
+    * Driver state is the m·ksub·subLen codebook plus one such partial
+    * per input partition.
     */
   def pqModel(df: DataFrame, vecCol: String, idCol: String,
               dim: Int, m: Int, ksub: Int, iters: Int): (DataFrame, Codebook) = {
     require(dim % m == 0, s"dim $dim not divisible by m $m")
     val subLen = dim / m
     val spark = df.sparkSession
-    Jobs.cached(subvectors(df, vecCol, idCol, m, subLen)) { sv =>
-      var cents = Jobs.labelled(spark, "pq", "codebook_init")(collectCents(
-        sv.filter(col("id") < ksub)
-          .select(col("sub"), col("id").as("cell"), col("subvec").as("centroid"))))
-      var assigned = assign(sv, cents, m)
-      for (_ <- 1 until iters) {
-        cents = Jobs.labelled(spark, "pq", "codebook_update")(collectCents(centroids(assigned)))
-        assigned = assign(sv, cents, m)
-      }
-      // LAZY cache (VERDICT r8 #8, measured): the first consumer action
-      // computes the final m·ksub-CASE assignment exactly once and caches
-      // the index-scale result (one row per vector: id + m small cells);
-      // every further action — a second ADC join, repeated bench passes
-      // with plan-identical lineage — reads the cache instead of
-      // re-encoding the corpus. An EAGER count() here measured 2× worse
-      // at fixture scale (the extra materialization job costs more than
-      // the re-encode it saves on a small corpus); a lazy cache is free
-      // when unused and caps the encode at once either way. `sv` is
-      // released when this block ends, before the codes are first read.
-      val codes = Jobs.cache(assigned.groupBy(col("id").as(idCol))
-        .agg(transform(array_sort(collect_list(struct(col("sub"), col("cell")))),
-          s => s.getField("cell")).as("codes")))
-      (codes, cents)
+    val widened = Dedup.rebalance(df).select(col(idCol).as("id"),
+      transform(col(vecCol), x => x.cast("double")).as("_v"))
+    val cents = Jobs.cached(widened) { vecs =>
+      var cents: Codebook = Jobs.labelled(spark, "pq", "codebook_init")(
+        vecs.filter(col("id") < ksub).collect()).flatMap { r =>
+          val v = r.getSeq[Double](1)
+          (0 until m).map(j => (j, r.getLong(0),
+            if (v == null) null else v.slice(j * subLen, (j + 1) * subLen)))
+        }
+      val rows = vecs.select("_v").queryExecution.toRdd
+      for (_ <- 1 until iters)
+        cents = Jobs.labelled(spark, "pq", "codebook_update")(lloydUpdate(rows, cents, m, subLen))
+      cents
     }
+    (df.select(col(idCol), encode(cents, m, subLen)(col(vecCol)).as("codes")),
+      cents.sortBy(c => (c._1, c._2)))
   }
-
   /** ADC score column: ascending-subspace accumulation (seed 0.0) of
     * codebook lookups via the native
     * [[org.apache.spark.sql.graft.PqAdcScore]] expression — binary-
@@ -220,7 +266,8 @@ object Pq {
     *
     * Two tiers, with the same rows and schema:
     *  - Driver tier: when `codes` is already driver-local (a
-    *    [[loadIndex]] of at most [[MaxDriverPairs]] rows; a plan check)
+    *    [[loadIndex]] of at most [[MaxDriverPairs]] rows, or [[pqModel]]'s
+    *    codes over a driver-local corpus; a plan check)
     *    and packs ([[PackedCodes]]: two columns, no null, one code width),
     *    the query side is read without a job (straight from its relation
     *    when `queries` is itself local, else through
@@ -235,9 +282,10 @@ object Pq {
     *    is rounded by Spark's own `Round`. The result is a local relation,
     *    so collecting it starts no job.
     *  - Distributed tier, everything else (a larger index, a code table
-    *    read from disk or freshly trained, any null id, code or vector
-    *    component): the query side is broadcast against the code table
-    *    and one query-keyed exchange feeds the rank window.
+    *    read from disk or freshly trained over a corpus that is not
+    *    driver-local, any null id, code or vector component): the query
+    *    side is broadcast against the code table and one query-keyed
+    *    exchange feeds the rank window.
     */
   def pqTopKFromIndex(codes: DataFrame, cents: Codebook, queries: DataFrame,
                       vecCol: String, idCol: String, dim: Int, m: Int,
@@ -396,8 +444,8 @@ object Pq {
     * first repairing a save that a crash interrupted (so do not load a
     * directory while a save to it runs). The codebook is read with the
     * schema [[saveIndex]] writes, so no job infers it, and its collect is
-    * m·ksub rows — metadata, same posture as training's own
-    * [[collectCents]]. A code table of at most [[MaxDriverPairs]] rows is
+    * m·ksub rows — metadata, the same size as training's driver state.
+    * A code table of at most [[MaxDriverPairs]] rows is
     * collected in one job ([[holdCodes]]) and returned as a driver-local
     * frame whose relation holds it packed, which [[pqTopKFromIndex]]'s
     * driver tier scores from with no further pass over the rows; a larger
@@ -410,7 +458,7 @@ object Pq {
         .collect()
         .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2))))
     val codes = Jobs.labelled(spark, "pq", "load_codes") {
-      val read = spark.read.parquet(s"$dir/codes.parquet")
+      val read = Tables.read(spark, s"$dir/codes.parquet")
       holdCodes(read).getOrElse(read)
     }
     (codes, cents)
@@ -433,13 +481,14 @@ object Pq {
     * probed cells. At 100 TB the corpus is stored partitioned by cell
     * with its codes inline, so the probe is partition pruning and the
     * scan touches m bytes per candidate — neither the raw floats nor
-    * the unprobed cells are ever read.
+    * the unprobed cells are ever read. Here each corpus row is coded in
+    * place ([[encode]]), with no join back to a code table.
     */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, vecCol: String,
                 idCol: String, cellCol: String, dim: Int, m: Int, ksub: Int,
                 iters: Int, k: Int, nProbe: Int): DataFrame = {
     val subLen = dim / m
-    val (codes, cents) = pqModel(corpus, vecCol, idCol, dim, m, ksub, iters)
+    val cents = pqModel(corpus, vecCol, idCol, dim, m, ksub, iters)._2
     val centroids = Similarity.centroidsOf(corpus, vecCol, cellCol)
     val q = queries.select(col(idCol).as("query_id"),
       transform(col(vecCol), x => x.cast("double")).as("_qv"))
@@ -450,8 +499,8 @@ object Pq {
       .withColumn("_crank", row_number().over(probeW))
       .filter(col("_crank") <= nProbe)
       .select(col("query_id"), col("_qv"), col("cell"))
-    val coded = corpus.select(col(idCol), col(cellCol).as("cell"))
-      .join(codes, idCol)
+    val coded = corpus.select(col(idCol), col(cellCol).as("cell"),
+      encode(cents, m, subLen)(col(vecCol)).as("codes"))
     rankTopK(
       coded.join(broadcast(probes), Seq("cell"))
         .filter(col(idCol) =!= col("query_id"))

@@ -21,11 +21,11 @@ import org.apache.spark.sql.types._
   * the whole corpus-encode stage silently drops to interpreted eval
   * (logged ERROR, 5–7 s gates — VERDICT r12 #1). Here the codebook rides
   * along as a reference object (`long[][]` cells + `double[][][]`
-  * centroids, both indexed by sub) and the generated code is ONE small
-  * nested loop whose source size is constant in m and ksub — it stays
-  * inside whole-stage codegen at any codebook size, and the per-row work
-  * is the same O(ksub·subLen) float math the CASE version paid without
-  * the lambda-bind overhead.
+  * centroids, both indexed by sub) and the generated code is ONE call
+  * to [[PqArgminCell.nearest]], whose source size is constant in m and
+  * ksub — it stays inside whole-stage codegen at any codebook size, and
+  * the per-row work is the same O(ksub·subLen) float math the CASE
+  * version paid without the lambda-bind overhead.
   *
   * Float-math parity with the oracle (and the old CASE form) is exact:
   * distance is the same left fold (seed 0.0, ascending components) of
@@ -54,61 +54,25 @@ case class PqArgminCell(left: Expression, right: Expression,
   override def nullSafeEval(subAny: Any, vecAny: Any): Any = {
     val s = subAny.asInstanceOf[Int]
     val v = vecAny.asInstanceOf[ArrayData]
-    var best = -1L
-    if (s >= 0 && s < cells.length) {
-      val cs = cells(s)
-      val cv = cents(s)
-      var bestD = Double.PositiveInfinity
-      var k = 0
-      while (k < cs.length) {
-        val c = cv(k)
-        val n = math.min(c.length, v.numElements())
-        var d = 0.0
-        var i = 0
-        while (i < n) {
-          val diff = v.getDouble(i) - c(i)
-          d += diff * diff
-          i += 1
-        }
-        if (d < bestD) { bestD = d; best = cs(k) }
-        k += 1
-      }
+    if (s < 0 || s >= cells.length) -1L
+    else {
+      val k = PqArgminCell.nearest(cents(s), v, 0, v.numElements())
+      if (k < 0) -1L else cells(s)(k)
     }
-    best
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val cellsRef = ctx.addReferenceObj("pqCells", cells, "long[][]")
     val centsRef = ctx.addReferenceObj("pqCents", cents, "double[][][]")
+    val self = classOf[PqArgminCell].getName
     nullSafeCodeGen(ctx, ev, (s, v) => {
-      val best = ctx.freshName("best")
-      val bestD = ctx.freshName("bestD")
-      val cs = ctx.freshName("cs")
-      val cv = ctx.freshName("cv")
       val k = ctx.freshName("k")
-      val c = ctx.freshName("c")
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val d = ctx.freshName("d")
-      val diff = ctx.freshName("diff")
       s"""
-         |long $best = -1L;
+         |${ev.value} = -1L;
          |if ($s >= 0 && $s < $cellsRef.length) {
-         |  long[] $cs = $cellsRef[$s];
-         |  double[][] $cv = $centsRef[$s];
-         |  double $bestD = Double.POSITIVE_INFINITY;
-         |  for (int $k = 0; $k < $cs.length; $k++) {
-         |    double[] $c = $cv[$k];
-         |    int $n = java.lang.Math.min($c.length, $v.numElements());
-         |    double $d = 0.0;
-         |    for (int $i = 0; $i < $n; $i++) {
-         |      double $diff = $v.getDouble($i) - $c[$i];
-         |      $d += $diff * $diff;
-         |    }
-         |    if ($d < $bestD) { $bestD = $d; $best = $cs[$k]; }
-         |  }
+         |  int $k = $self.nearest($centsRef[$s], $v, 0, $v.numElements());
+         |  if ($k >= 0) ${ev.value} = $cellsRef[$s][$k];
          |}
-         |${ev.value} = $best;
        """.stripMargin
     })
   }
@@ -119,6 +83,35 @@ case class PqArgminCell(left: Expression, right: Expression,
 }
 
 object PqArgminCell {
+
+  /** The index of the centroid in `cv` nearest to components
+    * `base until base + len` of `v` by squared L2, ties to the lowest
+    * index, or -1 when `cv` is empty or no distance is below +inf. A
+    * distance is the seed-0.0 ascending fold of (x−y)² over the first
+    * min(centroid length, `len`) components; a null component reads as
+    * `getDouble` gives it (0.0). The expression and the PQ training
+    * kernel (`graft.operators.Pq`) both assign through this one loop.
+    */
+  def nearest(cv: Array[Array[Double]], v: ArrayData, base: Int, len: Int): Int = {
+    var best = -1
+    var bestD = Double.PositiveInfinity
+    var k = 0
+    while (k < cv.length) {
+      val c = cv(k)
+      val n = math.min(c.length, len)
+      var d = 0.0
+      var i = 0
+      while (i < n) {
+        val diff = v.getDouble(base + i) - c(i)
+        d += diff * diff
+        i += 1
+      }
+      if (d < bestD) { bestD = d; best = k }
+      k += 1
+    }
+    best
+  }
+
   /** Column-API entry point. `cells(sub)` sorted ascending, aligned with
     * `cents(sub)`.
     */

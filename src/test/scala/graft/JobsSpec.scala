@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Bm25, Dedup, DriverRows, KCore, LabelProp, PageRank, Pipeline}
+import graft.operators.{Bm25, Dedup, DriverRows, KCore, LabelProp, PageRank, Pipeline, Pq}
 
 /** [[Jobs.overlap]]: task order, nesting, the failure protocol and the
   * labels its jobs carry. [[Jobs.pin]], [[Jobs.cache]] and
@@ -142,6 +142,15 @@ class JobsSpec extends AnyFunSuite with SparkTestBase {
       assert(kept.isEmpty, s"$op at ceiling $ceiling left RDDs $kept persisted")
       out.collect() // nothing the result reads was freed
     }
+    // pqModel frees its training cache: the codes it returns read no pin
+    // or cache, before and after they are computed.
+    val beforePq = persisted
+    val (codes, _) = Pq.pqModel(Tables.load(spark, sf, "embeddings"), "embedding", "vec_id",
+      dim = 64, m = 4, ksub = 8, iters = 3)
+    assert((persisted -- beforePq).isEmpty && reads(codes).isEmpty,
+      s"pqModel left RDDs ${persisted -- beforePq} persisted")
+    codes.collect()
+    assert((persisted -- beforePq).isEmpty, s"reading the codes left RDDs ${persisted -- beforePq} persisted")
     // appendToIndex probes the index dir through the context's conf.
     sc.hadoopConfiguration.set("fs.faulty.impl", classOf[FaultFileSystem].getName)
     val docs = spark.createDataFrame(Seq((1L, "a b c a"), (2L, "b c d"), (3L, "d e")))

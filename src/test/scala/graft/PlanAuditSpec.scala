@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.{And, EqualNullSafe, EqualTo, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -281,12 +283,30 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestBase {
       s"query side is no longer broadcast into the code table:\n$plan")
     assert(!plan.contains("SortMergeJoin"),
       s"a shuffle join crept into the ADC path:\n$plan")
-    // codes groupBy + rank window: exactly two non-rebalance SHUFFLE
-    // exchanges (BroadcastExchange is the query side doing its job)
+    // codes are a narrow projection, so the rank window is the one
+    // non-rebalance SHUFFLE exchange (BroadcastExchange is the query
+    // side doing its job)
     val exchanges = "(?<!Broadcast)Exchange".r.findAllIn(plan).size
     val rebalances = "REPARTITION_BY_NUM".r.findAllIn(plan).size
-    assert(exchanges - rebalances == 2,
-      s"expected code-agg + rank-window exchanges only:\n$plan")
+    assert(exchanges - rebalances == 1,
+      s"expected the rank-window exchange only:\n$plan")
+  }
+
+  test("IVF-PQ codes each corpus row in place: no join keyed on the id") {
+    val emb = Tables.load(spark, sf, "embeddings")
+    val corpus = emb.withColumn("cell", pmod(col("vec_id"), lit(4L)))
+    val out = graft.operators.Pq.ivfPqTopK(corpus, corpus.filter(col("vec_id") < 4),
+      "embedding", "vec_id", "cell", dim = 64, m = 4, ksub = 8, iters = 2, k = 3, nProbe = 2)
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
+    }
+    val plan = out.queryExecution.optimizedPlan
+    val idKeys = plan.collect { case j: Join => j.condition.toSeq.flatMap(conjuncts) }.flatten
+      .filter(e => (e.isInstanceOf[EqualTo] || e.isInstanceOf[EqualNullSafe]) &&
+        e.references.exists(_.name == "vec_id"))
+    assert(idKeys.isEmpty, s"a join keyed on the id: $idKeys\n$plan")
+    assert(out.count() > 0)
   }
 
   test("kmv estimator is sketch-only: no shingle-hash self-join in its plan") {

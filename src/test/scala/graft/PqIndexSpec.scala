@@ -122,10 +122,11 @@ class PqIndexSpec extends AnyFunSuite with SparkTestBase {
       StructField("embedding", ArrayType(FloatType, containsNull = true)))))
     val fellBack = Pq.pqTopKFromIndex(codes, cents, withNull, "embedding", "vec_id", Dim, M, 4)
     assert(hasJoin(fellBack) && !isLocal(fellBack))
-    // Freshly trained codes are not driver-local: pqTopK keeps the distributed plan.
+    // Freshly trained codes are a projection over the corpus: over a local
+    // corpus they fold into a local relation and pqTopK takes the driver tier.
     val trained = Pq.pqTopK(frame(spark, vectors), frame(spark, vectors.take(2)), "embedding",
       "vec_id", Dim, M, Ksub, iters = 3, k = 4)
-    assert(hasJoin(trained) &&
+    assert(!hasJoin(trained) && isLocal(trained) &&
       rows(trained) == rows(DriverRows.ceilingsAt(-1L)(topK(frame(spark, vectors.take(2)), 4))))
   }
 
@@ -152,8 +153,15 @@ class PqIndexSpec extends AnyFunSuite with SparkTestBase {
       assert(labels.forall(l => jobs.exists(_._1.contains(l))), s"$what: $jobs")
       assert(jobs.forall(_._2 == SparkTestBase.CallerStep), s"$what: $jobs")
     }
-    // The codebook is read with its known schema: its collect, no inference job.
-    assert(load.count(_._1.contains("graft:pq:load_codebook")) == 1, s"$load")
+    // The job-count law: each Lloyd iteration is one job (the init collect
+    // fills the training cache), the codes are a narrow projection written
+    // in one job beside the codebook's, and both loads read a known schema:
+    // no aggregate exchange, no inference job.
+    def count(jobs: Seq[(Set[String], String)], step: String) = jobs.count(_._1.contains(s"graft:pq:$step"))
+    assert(train.size == 3 && count(train, "codebook_init") == 1 && count(train, "codebook_update") == 2,
+      s"$train")
+    assert(save.size == 2 && load.size == 2, s"save $save, load $load")
+    assert(count(load, "load_codebook") == 1 && count(load, "load_codes") == 1, s"$load")
   }
 
   test("a loaded 10 000-code index is held packed in at most 32 B per code; repeat queries start no job") {

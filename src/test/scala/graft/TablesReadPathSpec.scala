@@ -80,4 +80,45 @@ class TablesReadPathSpec extends AnyFunSuite with SparkTestBase {
     // same second → a floor-to-second boundary would wrongly drop it.
     assert(ids == Set(2L, 3L))
   }
+
+  test("Tables.read takes the schema from one footer: inference's schema, and no job") {
+    val sf001 = "/root/testdata/sf0.01"
+    for (name <- Tables.All) {
+      val path = s"$sf001/$name.parquet"
+      assert(Tables.read(spark, path).schema == spark.read.parquet(path).schema, name)
+      val (_, jobs) = jobsOf(Tables.load(spark, sf001, name))
+      assert(jobs.isEmpty, s"$name: $jobs")
+    }
+    // A directory of part files with an INT96 timestamp (Spark's default
+    // encoding), plus the _SUCCESS and .crc files a write leaves.
+    import spark.implicits._
+    val log = Files.createTempDirectory("readpath-int96").resolve("changelog.parquet").toString
+    (0 until 40).map(i => (i.toLong, s"2024-01-01 00:00:${i % 60}"))
+      .toDF("id", "s").select(col("id"), col("s").cast("timestamp").as("_commit_ts"))
+      .repartition(3).write.parquet(log)
+    val (read, jobs) = jobsOf(Tables.read(spark, log))
+    assert(jobs.isEmpty, s"$jobs")
+    assert(read.schema == spark.read.parquet(log).schema && read.count() == 40)
+  }
+
+  test("a TIMESTAMP(NANOS) events file still takes loadEvents' nanosAsLong fallback") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 id; required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val dir = Files.createTempDirectory("readpath-nanos").toString
+    val writer = ExampleParquetWriter.builder(new Path(s"$dir/events.parquet"))
+      .withType(schema).build()
+    val groups = new SimpleGroupFactory(schema)
+    try writer.write(groups.newGroup().append("id", 1L).append("ts", 1704067200000500123L))
+    finally writer.close()
+    val session = spark.newSession()
+    val loaded = Tables.load(session, dir, "events")
+    assert(session.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(loaded.schema("ts").dataType == TimestampType)
+    assert(loaded.select(unix_micros(col("ts"))).collect().map(_.getLong(0)).toSeq ==
+      Seq(1704067200000500L))
+  }
 }
