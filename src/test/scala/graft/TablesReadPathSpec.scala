@@ -82,7 +82,7 @@ class TablesReadPathSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("Tables.read takes the schema from one footer: inference's schema, and no job") {
-    val sf001 = "/root/testdata/sf0.01"
+    val sf001 = java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
     for (name <- Tables.All) {
       val path = s"$sf001/$name.parquet"
       assert(Tables.read(spark, path).schema == spark.read.parquet(path).schema, name)
